@@ -1,4 +1,4 @@
-"""User-facing CLI: scrape / status / retry-failed / reset / query.
+"""User-facing CLI: scrape / delta / status / retry-failed / reset / query.
 
 Parity surface for the reference's typer app
 (/root/reference/src/irdai_scraper/cli.py:236-298 ``scrape``,
@@ -9,9 +9,13 @@ re-expressed over the Spark engine:
   the reference already falls back to plain printing under CI
   (cli.py:27-33); that mode is the only one that makes sense for a
   driver process whose stdout is a log.
-- ``scrape`` drives ``sources.http.scrape_pipeline`` (one lazy DataFrame
-  plan) instead of an asyncio loop; ``--metadata-only`` elides the
-  download stage from the DAG rather than branching imperatively.
+- ``scrape`` and ``delta`` share one ingest path (``_cmd_ingest``)
+  instead of an asyncio loop per type: one ``sources.http.scrape_pipeline``
+  plan over all requested product types (each listing page fetched
+  once, one download stage), materialized once, then one bronze CSV
+  slice per type and at most one state-table write per table;
+  ``--metadata-only`` elides the download stage from the DAG rather
+  than branching imperatively.
 - ``status`` renders ``StateStore.summary()`` — same columns as the
   reference's rich table (Product Type / Status / Last Page / Products)
   plus the completed/failed counters (cli.py:391-412).
@@ -50,11 +54,6 @@ def _build_spark() -> SparkSession:
     from insurance_helper_spark.session import get_spark
 
     return get_spark(app_name="insurance-helper-cli")
-
-
-def url_template(base_url: str, product_type: str) -> str:
-    """Paginated page-URL template for a product type (config.py:49-115)."""
-    return f"{base_url}{URL_PATHS[product_type]}?_cur={{page}}"
 
 
 def render_status(sessions_rows: list, counter_rows: list) -> str:
@@ -109,72 +108,127 @@ def _cmd_reset(args, spark: SparkSession, out, input_fn) -> int:
     return 0
 
 
-def _cmd_scrape(args, spark, out, fetcher, downloader) -> int:
+def _cmd_ingest(args, spark, out, fetcher, downloader) -> int:
+    """``scrape`` and ``delta`` as one all-types plan: check the types,
+    probe each type's page total, run ONE ``scrape_pipeline`` over every
+    type (each listing page fetched once, one download stage of
+    ``--concurrent`` partitions), materialize the rows once, then write
+    each type's bronze CSV slice and object manifest. The commands
+    differ in two ways:
+
+    - known URLs: ``scrape`` skips the downloads in
+      ``completed_downloads``; ``delta`` (the reference's
+      scripts/delta_download.py) diffs by document_url against each
+      type's EXISTING metadata CSV, not the state store.
+    - rows appended: ``scrape`` appends every row (and reads and
+      writes each state table once); ``delta`` appends only the new
+      rows, aligned to the CSV header, so a rerun appends nothing.
+    """
+    import os
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, Observation
+    from pyspark.sql import functions as F
+
     from insurance_helper_spark.operators import state as state_ops
     from insurance_helper_spark.sources import http, sinks
 
+    delta = args.command == "delta"
     types = PRODUCT_TYPES if args.type == "all" else (args.type,)
     unknown = [t for t in types if t not in PRODUCT_TYPES]
     if unknown:
         out(f"Invalid product type: {unknown[0]}")
         return 1
-    # rate_limit passes through verbatim: 0 means "no limit" in the
-    # reference CLI, and TokenBucket honors rate<=0 as uncapped.
-    config = http.ScrapeConfig(rate_limit=args.rate_limit)
-    store = state_ops.StateStore(spark, args.state_dir)
+    store = None if delta else state_ops.StateStore(spark, args.state_dir)
+    sessions = store.sessions() if store else {}
+    templates, starts, totals = {}, {}, {}
     for pt in types:
-        out(f"Scraping {pt}...")
-        start = args.start_page or store.start_session(pt, resume=not args.no_resume)
-        if start > 1:
-            out(f"Resuming from page {start}")
+        out(f"Delta scraping {pt}..." if delta else f"Scraping {pt}...")
+        templates[pt] = f"{args.base_url}{URL_PATHS[pt]}?_cur={{page}}"
+        if store and args.no_resume and not args.start_page:
+            sessions.pop(pt, None)  # start this type afresh
+        starts[pt] = args.start_page or state_ops.resume_page(sessions, pt)
+        if store and starts[pt] > 1:
+            out(f"Resuming from page {starts[pt]}")
         if args.total_pages is not None:
-            total = args.end_page or args.total_pages
+            totals[pt] = args.end_page or args.total_pages
         else:
             # reference get_total_pages: probe page 1 (S3), pagination
-            # fallback (S4). A real run (no injected fetcher) probes
-            # with the default HTTP fetcher — same client the page
-            # scan uses.
-            total = args.end_page or http.probe_total_pages(
-                url_template(args.base_url, pt), fetcher or http.default_fetcher()
+            # fallback (S4), with the same client the page scan uses
+            totals[pt] = args.end_page or http.probe_total_pages(
+                templates[pt], fetcher or http.default_fetcher()
             )
-            out(f"Total pages: {total}")
-        products = http.scrape_pipeline(
-            spark,
-            url_template(args.base_url, pt),
-            total_pages=total,
-            product_type=pt,
-            fetcher=fetcher,
-            downloader=downloader,
-            completed=store.read("completed_downloads"),
-            config=config,
-            download_dir=f"{args.output}/downloads",
-            metadata_only=args.metadata_only,
-            start_page=start,
-            end_page=args.end_page,
-            download_partitions=args.concurrent,
-        )
-        products = products.localCheckpoint(eager=True)
-        n = products.count()
-        if not args.metadata_only and "download_success" in products.columns:
-            from pyspark.sql import functions as F
+            if store:
+                out(f"Total pages: {totals[pt]}")
 
-            # Reconcile only rows the download stage actually attempted
-            # (skipped/anti-joined rows carry a null download_success).
-            state_ops.record_download_outcomes(
-                store,
-                products.filter(F.col("download_success").isNotNull()).select(
-                    F.col("document_url").alias("url"),
-                    F.col("download_success").alias("success"),
-                    F.when(F.col("download_success"), F.lit(None).cast("string"))
-                    .otherwise(F.lit("download failed"))
-                    .alias("error"),
-                ),
-            )
-        sinks.write_bronze_csv(products, f"{args.output}/metadata/{pt}")
-        _object_storage_postprocess(products, pt, args, out)
-        store.update_page_progress(pt, total, n)
-        store.complete_session(pt)
-        out(f"{pt}: {n} products scraped")
+    # delta: each type's metadata CSV, read once for its URLs and header
+    # (no CSV directory yet: every row of the type is new)
+    csv_dirs = {pt: f"{args.output}/metadata/{pt}" for pt in types}
+    existing = {
+        pt: sinks.read_bronze_csv(spark, d)
+        for pt, d in csv_dirs.items() if delta and os.path.isdir(d)
+    }
+    if delta:
+        known = reduce(DataFrame.unionByName, [
+            df.select(F.lit(pt).alias("product_type"), F.col("document_url").alias("url"))
+            for pt, df in existing.items()
+        ]) if existing else None
+    else:
+        known = store.read("completed_downloads")
+    # rate_limit passes through verbatim: 0 means "no limit" in the
+    # reference CLI, and TokenBucket honors rate<=0 as uncapped.
+    products = http.scrape_pipeline(
+        spark, templates, totals, types, fetcher=fetcher, downloader=downloader,
+        completed=known, config=http.ScrapeConfig(rate_limit=args.rate_limit),
+        download_dir=f"{args.output}/downloads", metadata_only=args.metadata_only,
+        start_page=starts, end_page=args.end_page, download_partitions=args.concurrent,
+    )
+    if delta and known is not None:
+        seen = known.select(
+            "product_type", F.col("url").alias("document_url"), F.lit(True).alias("seen")
+        ).distinct()
+        products = products.join(seen, ["product_type", "document_url"], "left")
+        is_new = F.col("seen").isNull()
+    else:
+        is_new = F.lit(True)
+    # one materialization; the per-type counts ride on it as observed
+    # metrics instead of costing jobs of their own
+    counts = Observation("ingest")
+    products = products.withColumn("is_new", is_new).observe(counts, *[
+        F.count_if((F.col("product_type") == pt) & cond).alias(f"{pt}_{name}")
+        for pt in types for name, cond in (("total", F.lit(True)), ("new", F.col("is_new")))
+    ]).localCheckpoint(eager=True)
+    n = counts.get
+    if store and not args.metadata_only:
+        # Reconcile only rows the download stage actually attempted
+        # (skipped/anti-joined rows carry a null download_success).
+        attempted = products.filter(F.col("download_success").isNotNull())
+        state_ops.record_download_outcomes(store, attempted.select(
+            F.col("document_url").alias("url"),
+            F.col("download_success").alias("success"),
+            F.when(~F.col("download_success"), F.lit("download failed")).alias("error"),
+        ), completed=known)
+    new_rows = products.filter("is_new")
+    for pt in types:
+        n_total, n_new = n[f"{pt}_total"], n[f"{pt}_new"]
+        if n_new:
+            rows = http.rows_of_type(new_rows, pt)
+            _object_storage_postprocess(rows, pt, args, out)
+            if pt in existing:
+                # CSV appends are positional: align to the existing
+                # table's header, null-filling columns this run lacks
+                # (e.g. download bookkeeping on a -m delta).
+                rows = rows.select(*[
+                    F.col(c) if c in rows.columns else F.lit(None).cast("string").alias(c)
+                    for c in existing[pt].columns
+                ])
+            sinks.write_bronze_csv(rows, csv_dirs[pt], stamp_scraped_at=False)
+        out(f"{pt}: total {n_total}, new {n_new}" if delta else f"{pt}: {n_total} products scraped")
+    if delta:
+        out(f"Total products: {sum(n[f'{pt}_total'] for pt in types)}")
+        out(f"New products: {sum(n[f'{pt}_new'] for pt in types)}")
+    else:
+        store.complete_sessions(sessions, {pt: (totals[pt], n[f"{pt}_total"]) for pt in types})
     return 0
 
 
@@ -231,119 +285,28 @@ def _object_storage_postprocess(products, pt, args, out) -> None:
     (ref cli.py:210-212) upload + verify each blob then delete the
     local copy — the filesystem keeps nothing. "both" keeps local +
     object."""
-    if (
-        getattr(args, "storage", "filesystem") not in ("object", "both")
-        or "local_file_path" not in products.columns
-    ):
+    if args.storage == "filesystem" or "local_file_path" not in products.columns:
         return
     from pyspark.sql import functions as F
 
     from insurance_helper_spark.sources import object_store, sinks
 
     downloaded = products.filter(F.col("local_file_path").isNotNull())
+    key = object_store.object_key(F.lit(pt), F.col("local_file_path")).alias("object_key")
     manifest = downloaded.select(
         "document_url",
-        object_store.object_key(F.lit(pt), F.col("local_file_path")).alias("object_key"),
+        key,
         object_store.content_type_for(F.col("local_file_path")).alias("content_type"),
     )
     sinks.write_json(manifest, f"{args.output}/object_manifest/{pt}")
-    if getattr(args, "storage", "filesystem") == "object":
+    if args.storage == "object":
         statuses = object_store.upload_files(
-            downloaded.select(
-                "local_file_path",
-                object_store.object_key(
-                    F.lit(pt), F.col("local_file_path")
-                ).alias("object_key"),
-            ),
+            downloaded.select("local_file_path", key),
             dest_root=f"{args.output}/objects",
             delete_local=True,
         )
         n_up = statuses.filter(F.col("verified")).count()
         out(f"{pt}: {n_up} objects uploaded (local copies removed)")
-
-
-def _cmd_delta(args, spark, out, fetcher, downloader) -> int:
-    """The reference's standalone delta job (scripts/delta_download.py):
-    re-scrape metadata, diff against the EXISTING metadata CSV by
-    document_url (not the state store), download + append only the new
-    rows, report total/new counts per type. Idempotent: a rerun with no
-    site changes appends nothing."""
-    from pyspark.sql import functions as F
-
-    from insurance_helper_spark.sources import http, sinks
-
-    types = PRODUCT_TYPES if args.type == "all" else (args.type,)
-    unknown = [t for t in types if t not in PRODUCT_TYPES]
-    if unknown:
-        out(f"Invalid product type: {unknown[0]}")
-        return 1
-    config = http.ScrapeConfig(rate_limit=args.rate_limit)
-    grand_total = grand_new = 0
-    for pt in types:
-        out(f"Delta scraping {pt}...")
-        if args.total_pages is not None:
-            total_pages = args.end_page or args.total_pages
-        else:
-            total_pages = args.end_page or http.probe_total_pages(
-                url_template(args.base_url, pt), fetcher or http.default_fetcher()
-            )
-        products = http.scrape_pipeline(
-            spark,
-            url_template(args.base_url, pt),
-            total_pages=total_pages,
-            product_type=pt,
-            fetcher=fetcher,
-            config=config,
-            metadata_only=True,
-            start_page=args.start_page or 1,
-            end_page=args.end_page,
-        ).localCheckpoint(eager=True)
-        csv_dir = f"{args.output}/metadata/{pt}"
-        try:
-            existing = sinks.read_bronze_csv(spark, csv_dir).select(
-                F.col("document_url").alias("url")
-            ).distinct()
-        except Exception:
-            existing = None  # first run: no CSV yet
-        new = products
-        if existing is not None:
-            new = products.join(
-                existing, products.document_url == existing.url, "left_anti"
-            )
-        new = new.localCheckpoint(eager=True)
-        n_total, n_new = products.count(), new.count()
-        grand_total += n_total
-        grand_new += n_new
-        if n_new and not args.metadata_only:
-            tasks = http.build_download_tasks(
-                new, pt, None, f"{args.output}/downloads"
-            )
-            results = http.download_batch(
-                tasks, downloader, config, args.concurrent
-            )
-            new = http.join_results(new, results).localCheckpoint(eager=True)
-            _object_storage_postprocess(new, pt, args, out)
-        if n_new:
-            if existing is not None:
-                # CSV appends are positional: align to the existing
-                # table's header, null-filling columns this run lacks
-                # (e.g. download bookkeeping on a -m delta).
-                header = sinks.read_bronze_csv(spark, csv_dir).columns
-                new = new.select(
-                    *[
-                        F.col(c) if c in new.columns else F.lit(None).cast("string").alias(c)
-                        for c in header
-                    ]
-                )
-                sinks.write_bronze_csv(
-                    new, csv_dir, mode="append", stamp_scraped_at=False
-                )
-            else:
-                sinks.write_bronze_csv(new, csv_dir, mode="append")
-        out(f"{pt}: total {n_total}, new {n_new}")
-    out(f"Total products: {grand_total}")
-    out(f"New products: {grand_new}")
-    return 0
 
 
 def _cmd_analyze(args, spark, out) -> int:
@@ -569,22 +532,26 @@ def build_parser() -> argparse.ArgumentParser:
     sub = p.add_subparsers(dest="command", required=True)
 
     sc = sub.add_parser("scrape", help="Scrape insurance products")
-    sc.add_argument("--type", "-t", default="all",
-                    help="life, life_list, nonlife, health, or 'all'")
-    sc.add_argument("--output", "-o", default="data")
-    sc.add_argument("--rate-limit", "-r", type=float, default=10.0, dest="rate_limit",
-                    help="requests per second (0 = no limit)")
-    sc.add_argument("--concurrent", "-c", type=int, default=None,
-                    help="download partitions (ref: max concurrent downloads)")
+    dl = sub.add_parser(
+        "delta", help="Incremental run: scrape, diff vs existing CSV, fetch only new"
+    )
+    for ip in (sc, dl):  # the one ingest path's options
+        ip.add_argument("--type", "-t", default="all",
+                        help="life, life_list, nonlife, health, or 'all'")
+        ip.add_argument("--output", "-o", default="data")
+        ip.add_argument("--rate-limit", "-r", type=float, default=10.0, dest="rate_limit",
+                        help="requests per second (0 = no limit)")
+        ip.add_argument("--concurrent", "-c", type=int, default=None,
+                        help="download partitions (ref: max concurrent downloads)")
+        ip.add_argument("--metadata-only", "-m", action="store_true", dest="metadata_only")
+        ip.add_argument("--start-page", type=int, default=None, dest="start_page")
+        ip.add_argument("--end-page", type=int, default=None, dest="end_page")
+        ip.add_argument("--total-pages", type=int, default=None, dest="total_pages",
+                        help="page count; omitted → probe page 1 (ref get_total_pages)")
+        ip.add_argument("--storage", "-s", default="filesystem",
+                        choices=("filesystem", "object", "both"))
+        ip.add_argument("--base-url", default="https://irdai.gov.in", dest="base_url")
     sc.add_argument("--no-resume", action="store_true", dest="no_resume")
-    sc.add_argument("--metadata-only", "-m", action="store_true", dest="metadata_only")
-    sc.add_argument("--start-page", type=int, default=None, dest="start_page")
-    sc.add_argument("--end-page", type=int, default=None, dest="end_page")
-    sc.add_argument("--total-pages", type=int, default=None, dest="total_pages",
-                    help="page count; omitted → probe page 1 (ref get_total_pages)")
-    sc.add_argument("--storage", "-s", default="filesystem",
-                    choices=("filesystem", "object", "both"))
-    sc.add_argument("--base-url", default="https://irdai.gov.in", dest="base_url")
     sc.add_argument("--state-dir", default="data/state", dest="state_dir")
 
     st = sub.add_parser("status", help="Show session/download status")
@@ -605,21 +572,6 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--limit", type=int, default=20)
     q.add_argument("--explain", action="store_true",
                    help="print the formatted physical plan instead of rows")
-
-    dl = sub.add_parser(
-        "delta", help="Incremental run: scrape, diff vs existing CSV, fetch only new"
-    )
-    dl.add_argument("--type", "-t", default="all")
-    dl.add_argument("--output", "-o", default="data")
-    dl.add_argument("--rate-limit", "-r", type=float, default=10.0, dest="rate_limit")
-    dl.add_argument("--concurrent", "-c", type=int, default=None)
-    dl.add_argument("--metadata-only", "-m", action="store_true", dest="metadata_only")
-    dl.add_argument("--start-page", type=int, default=None, dest="start_page")
-    dl.add_argument("--end-page", type=int, default=None, dest="end_page")
-    dl.add_argument("--total-pages", type=int, default=None, dest="total_pages")
-    dl.add_argument("--storage", "-s", default="filesystem",
-                    choices=("filesystem", "object", "both"))
-    dl.add_argument("--base-url", default="https://irdai.gov.in", dest="base_url")
 
     cu = sub.add_parser(
         "curate", help="Corpus curation: gates -> dedup -> split -> parquet"
@@ -678,8 +630,8 @@ def main(
         return _cmd_status(args, spark, out)
     if args.command == "reset":
         return _cmd_reset(args, spark, out, input_fn)
-    if args.command == "scrape":
-        return _cmd_scrape(args, spark, out, fetcher, downloader)
+    if args.command in ("scrape", "delta"):
+        return _cmd_ingest(args, spark, out, fetcher, downloader)
     if args.command == "retry-failed":
         return _cmd_retry_failed(args, spark, out, downloader)
     if args.command == "query":
@@ -692,8 +644,6 @@ def main(
         return _cmd_vector_store(args, spark, out)
     if args.command == "curate":
         return _cmd_curate(args, spark, out)
-    if args.command == "delta":
-        return _cmd_delta(args, spark, out, fetcher, downloader)
     return 2
 
 

@@ -11,8 +11,9 @@ swap write:
 - completed_downloads(url)             — J1 membership set
 - failed_downloads(url, error, retries, last_attempt) — J4 upserts
 
-Corruption fallback (C1, ref state.py:43-45): unreadable table → empty
-state, never an exception. Reset (C3, ref state.py:169-179) drops rows
+Corruption fallback (C1, ref state.py:43-45): absent or unreadable
+table → empty state, never an exception. A scrape reads each table once
+and writes it at most once. Reset (C3, ref state.py:169-179) drops rows
 or the whole directory. ``retry_failed`` (O4, ref cli.py:416-461)
 re-drives failures through the download stage and reconciles.
 
@@ -27,10 +28,10 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from insurance_helper_spark import schemas
 from insurance_helper_spark.operators import incremental
@@ -54,13 +55,15 @@ class StateStore:
     def read(self, table: str) -> DataFrame:
         path = os.path.join(self.state_dir, table)
         schema = self.TABLES[table]
-        try:
-            df = self.spark.read.schema(schema).parquet(path)
-            df.head(1)  # force schema/footer validation now
-            return df
-        except Exception:
-            # missing or corrupted → fresh empty state (ref state.py:43-45)
-            return self.spark.createDataFrame([], schema)
+        if os.path.isdir(path):
+            try:
+                df = self.spark.read.schema(schema).parquet(path)
+                df.head(1)  # force schema/footer validation now
+                return df
+            except Exception:
+                pass  # corrupted → fresh empty state (ref state.py:43-45)
+        # an empty RDD, not an empty list: no Python tasks to run
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
 
     # -- atomic swap write ---------------------------------------------
     def write(self, table: str, df: DataFrame) -> None:
@@ -75,53 +78,27 @@ class StateStore:
             shutil.rmtree(old, ignore_errors=True)
 
     # -- C2: session cursor ops (ref state.py:92-131) -------------------
-    def start_session(self, product_type: str, resume: bool = True) -> int:
-        """Returns the page to resume from (last_completed + 1)."""
-        sessions = self.read("sessions")
-        if not resume:
-            self.reset_session(product_type)
-            return 1
-        row = (
-            sessions.filter(F.col("product_type") == product_type)
-            .select("last_completed_page")
-            .head(1)
-        )
-        last = row[0]["last_completed_page"] if row else 0
-        return (last or 0) + 1
+    def sessions(self) -> dict[str, Row]:
+        """Session rows by product type: a run's one sessions read."""
+        return {r["product_type"]: r for r in self.read("sessions").collect()}
 
-    def update_page_progress(
-        self, product_type: str, page: int, n_products: int
+    def complete_sessions(
+        self, sessions: dict[str, Row], progress: dict[str, tuple[int, int]]
     ) -> None:
-        """Per-page checkpoint (ref cli.py:148, state.py:108-113):
-        cursor moves forward, totals accumulate, started_at sticks."""
-        sessions = self.read("sessions")
-        prev = sessions.filter(F.col("product_type") == product_type).head(1)
-        prev_total = (prev[0]["total_products"] or 0) if prev else 0
-        started_at = prev[0]["started_at"] if prev else None
-        new_row = self.spark.createDataFrame(
-            [(product_type, page, "running", prev_total + n_products, started_at, None)],
-            schemas.SESSIONS_SCHEMA,
-        )
-        if started_at is None:
-            new_row = new_row.withColumn("started_at", F.current_timestamp())
+        """A run's one sessions write (ref cli.py:148, state.py:108-131).
+        ``sessions`` is the run's earlier read, less any type it starts
+        afresh. Each type in ``progress`` (type → (last page, products))
+        moves its cursor to that page, adds its products to its total,
+        keeps its started_at and is marked completed; other rows stay."""
+        now = datetime.now()
+        rows = {pt: tuple(r) for pt, r in sessions.items()}
+        for pt, (page, n_products) in progress.items():
+            prev = sessions.get(pt)
+            total = (prev["total_products"] or 0) if prev else 0
+            started_at = prev["started_at"] if prev else None
+            rows[pt] = (pt, page, "completed", total + n_products, started_at or now, now)
         self.write(
-            "sessions",
-            sessions.filter(F.col("product_type") != product_type).unionByName(new_row),
-        )
-
-    def complete_session(self, product_type: str) -> None:
-        sessions = self.read("sessions")
-        self.write(
-            "sessions",
-            sessions.withColumn(
-                "status",
-                F.when(F.col("product_type") == product_type, F.lit("completed"))
-                .otherwise(F.col("status")),
-            ).withColumn(
-                "completed_at",
-                F.when(F.col("product_type") == product_type, F.current_timestamp())
-                .otherwise(F.col("completed_at")),
-            ),
+            "sessions", self.spark.createDataFrame(list(rows.values()), schemas.SESSIONS_SCHEMA)
         )
 
     # -- C3: reset ------------------------------------------------------
@@ -137,29 +114,15 @@ class StateStore:
             if os.path.exists(p):
                 shutil.rmtree(p, ignore_errors=True)
 
-    # -- J1/J4 state maintenance ---------------------------------------
-    def mark_completed(self, urls: DataFrame) -> None:
-        merged = incremental.mark_completed(
-            self.read("completed_downloads"), urls.select("url"), "url"
-        )
-        self.write("completed_downloads", merged)
-
-    def mark_failed(self, failures: DataFrame) -> None:
-        """failures: (url, error, last_attempt). Upsert per J4."""
-        merged = incremental.upsert_failed(
-            self.read("failed_downloads"), failures, key="url"
-        )
-        self.write("failed_downloads", merged.select(*[
-            f.name for f in schemas.FAILED_DOWNLOADS_SCHEMA
-        ]))
-
-    def clear_failures(self, succeeded_urls: DataFrame) -> None:
-        self.write(
-            "failed_downloads",
-            incremental.clear_succeeded(
-                self.read("failed_downloads"), succeeded_urls, "url"
-            ),
-        )
+    # -- J4 state maintenance ------------------------------------------
+    def mark_failed(self, failures: DataFrame, succeeded: DataFrame | None = None) -> None:
+        """failures: (url, error, last_attempt). Clears the rows of
+        ``succeeded`` URLs (J4 complement), then upserts per J4."""
+        failed = self.read("failed_downloads")
+        if succeeded is not None:
+            failed = incremental.clear_succeeded(failed, succeeded, "url")
+        merged = incremental.upsert_failed(failed, failures, key="url")
+        self.write("failed_downloads", merged.select(*schemas.FAILED_DOWNLOADS_SCHEMA.fieldNames()))
 
     # -- A2: summary ----------------------------------------------------
     def summary(self) -> DataFrame:
@@ -173,18 +136,25 @@ class StateStore:
                 ("completed_downloads", self.read("completed_downloads").count()),
                 ("failed_downloads", self.read("failed_downloads").count()),
             ],
-            T.StructType([
-                T.StructField("counter", T.StringType()),
-                T.StructField("n", T.LongType()),
-            ]),
+            "counter string, n long",
         )
         return sessions, counts
 
 
-def record_download_outcomes(state: StateStore, results: DataFrame) -> DataFrame:
+def resume_page(sessions: dict[str, Row], product_type: str) -> int:
+    """Page a type's scan resumes from: its last completed page + 1."""
+    row = sessions.get(product_type)
+    return ((row["last_completed_page"] or 0) if row else 0) + 1
+
+
+def record_download_outcomes(
+    state: StateStore, results: DataFrame, completed: DataFrame | None = None
+) -> DataFrame:
     """Post-download reconciliation (ref cli.py:115-143): successes join
     the completed set and clear old failures; failures upsert into
-    failed_downloads. ``results`` follows DOWNLOAD_RESULT_SCHEMA.
+    failed_downloads — one write per table. ``results`` follows
+    DOWNLOAD_RESULT_SCHEMA; ``completed`` is the completed set as the
+    caller already read it (read here when omitted).
 
     The result lineage may read the very state tables this function
     rewrites (retry_failed does exactly that), so the lineage is cut with
@@ -194,15 +164,15 @@ def record_download_outcomes(state: StateStore, results: DataFrame) -> DataFrame
     """
     results = results.localCheckpoint(eager=True)
     ok = results.filter(F.col("success")).select("url")
-    state.mark_completed(ok)
-    state.clear_failures(ok)
+    if completed is None:
+        completed = state.read("completed_downloads")
+    state.write("completed_downloads", incremental.mark_completed(completed, ok, "url"))
     failed = (
         results.filter(~F.col("success"))
         .select("url", F.coalesce("error", F.lit("unknown")).alias("error"))
         .withColumn("last_attempt", F.current_timestamp())
     )
-    if failed.head(1):
-        state.mark_failed(failed)
+    state.mark_failed(failed, succeeded=ok)
     return results
 
 

@@ -2,12 +2,15 @@
 
 The reference runs one asyncio loop on one machine (SURVEY §3); here
 every stage is a DataFrame transform so pages and downloads partition
-across executors:
+across executors. One plan covers every product type of a run:
 
-  pages(range) → fetch+parse (mapInPandas, injected fetcher)
-               → explode rows → typed projection/filters (P5/F1/F2)
-               → anti-join completed (J1) → download (mapInPandas,
-                 token bucket + retries, D1-D4) → join results (J3)
+  pages(range per type, keyed by product_type)
+    → fetch+parse (mapInPandas, injected fetcher; each page once)
+    → typed projection/filters of all types in one pass (P5/F1/F2)
+    → materialize once (feeds both the tasks and the result join)
+    → per-type tasks, anti-join completed (J1) → one download stage
+      over all types (mapInPandas, token bucket + retries, D1-D4)
+    → join results by (product_type, document_url) (J3)
 
 Politeness invariant (ref: config.py:39, async_downloader.py:30): the
 10 req/s cap must hold GLOBALLY. Spark has no cross-executor limiter,
@@ -18,13 +21,15 @@ callables), so tests run on local fixtures and never touch the network.
 
 from __future__ import annotations
 
+import functools
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from insurance_helper_spark import schemas
 from insurance_helper_spark.functions import cleaning
@@ -36,23 +41,27 @@ DEFAULT_RATE_LIMIT = 10.0      # req/s, GLOBAL
 DEFAULT_MAX_CONCURRENT = 10
 DEFAULT_RETRY_ATTEMPTS = 3
 DEFAULT_RETRY_DELAY_S = 2.0    # linear backoff: delay * attempt_no
-DEFAULT_BASE_URL = "https://irdai.gov.in"
 USER_AGENT = "Mozilla/5.0 (compatible; spark-scraper/0.1)"
 
 Fetcher = Callable[[str], str]          # url -> html (raises on error)
 Downloader = Callable[[str], bytes]     # url -> payload (raises on error)
+
+# Parsed rows and download results carry the product_type of their page
+# or task, so one plan over several types keys back to each type.
+_TYPE_FIELD = T.StructField("product_type", T.StringType(), True)
+_PARSED_SCHEMA = T.StructType([*schemas.PARSED_ROW_SCHEMA.fields, _TYPE_FIELD])
+_RESULT_SCHEMA = T.StructType([*schemas.DOWNLOAD_RESULT_SCHEMA.fields, _TYPE_FIELD])
 
 
 class TokenBucket:
     """Per-partition token bucket. With k partitions each running
     ``rate/k``, the fleet stays under the global cap."""
 
-    def __init__(self, rate_per_s: float, burst: float = 1.0) -> None:
+    def __init__(self, rate_per_s: float) -> None:
         # rate <= 0 means "no limit" (reference --rate-limit 0); acquire
         # short-circuits before any division in that case.
         self.rate = rate_per_s
-        self.capacity = max(burst, 1.0)
-        self.tokens = self.capacity
+        self.tokens = 1.0  # capacity: one token, no burst
         self.last = time.monotonic()
 
     def acquire(self) -> None:
@@ -60,7 +69,7 @@ class TokenBucket:
             return
         while True:
             now = time.monotonic()
-            self.tokens = min(self.capacity, self.tokens + (now - self.last) * self.rate)
+            self.tokens = min(1.0, self.tokens + (now - self.last) * self.rate)
             self.last = now
             if self.tokens >= 1.0:
                 self.tokens -= 1.0
@@ -107,8 +116,6 @@ def default_downloader(timeout_s: float = 300.0) -> Downloader:
 
 @dataclass
 class ScrapeConfig:
-    base_url: str = DEFAULT_BASE_URL
-    page_size: int = DEFAULT_PAGE_SIZE
     rate_limit: float = DEFAULT_RATE_LIMIT
     retry_attempts: int = DEFAULT_RETRY_ATTEMPTS
     retry_delay_s: float = DEFAULT_RETRY_DELAY_S
@@ -132,6 +139,12 @@ def page_urls(
     )
 
 
+def _error_row(page, error: str) -> dict:
+    """A page that failed as one parsed row carrying its error (F3)."""
+    row = dict.fromkeys(schemas.PARSED_ROW_SCHEMA.fieldNames())
+    return {**row, "page": int(page), "parse_error": error}
+
+
 def fetch_and_parse_pages(
     pages: DataFrame,
     fetcher: Fetcher | None = None,
@@ -139,9 +152,10 @@ def fetch_and_parse_pages(
 ) -> DataFrame:
     """S2+S5+S6: fetch each page and parse its listing table.
 
-    mapInPandas with one fetcher + token bucket per partition; page
-    fetch errors become parse_error rows (F3), never task failures.
-    Output matches schemas.PARSED_ROW_SCHEMA.
+    ``pages`` carries (product_type, page, page_url). mapInPandas with
+    one fetcher + token bucket per partition; page fetch errors become
+    parse_error rows (F3), never task failures. Output matches
+    schemas.PARSED_ROW_SCHEMA plus the page's product_type.
     """
     from insurance_helper_spark.shipping import ensure_shipped
 
@@ -155,23 +169,16 @@ def fetch_and_parse_pages(
         bucket = TokenBucket(per_partition_rate)
         for pdf in batches:
             out: list[dict] = []
-            for page, url in zip(pdf["page"], pdf["page_url"]):
+            for pt, page, url in zip(pdf["product_type"], pdf["page"], pdf["page_url"]):
                 try:
                     bucket.acquire()
-                    html = fetch(url)
-                    out.extend(html_parse.parse_listing_page(html, int(page)))
+                    rows = html_parse.parse_listing_page(fetch(url), int(page))
                 except Exception as ex:  # F3 page containment
-                    out.append(
-                        {
-                            "page": int(page), "row_index": None,
-                            "row_class": None, "cells": None,
-                            "link_url": None, "link_text": None,
-                            "parse_error": f"fetch-error: {ex}",
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in schemas.PARSED_ROW_SCHEMA])
+                    rows = [_error_row(page, f"fetch-error: {ex}")]
+                out.extend({**r, "product_type": pt} for r in rows)
+            yield pd.DataFrame(out, columns=_PARSED_SCHEMA.fieldNames())
 
-    return pages.repartition(n_parts).mapInPandas(run, schema=schemas.PARSED_ROW_SCHEMA)
+    return pages.repartition(n_parts).mapInPandas(run, schema=_PARSED_SCHEMA)
 
 
 def parse_pages(pages_html: DataFrame, page_col: str = "page", html_col: str = "html") -> DataFrame:
@@ -195,14 +202,7 @@ def parse_pages(pages_html: DataFrame, page_col: str = "page", html_col: str = "
                 try:
                     out.extend(html_parse.parse_listing_page(html, int(page)))
                 except Exception as ex:  # F3 page containment
-                    out.append(
-                        {
-                            "page": int(page), "row_index": None,
-                            "row_class": None, "cells": None,
-                            "link_url": None, "link_text": None,
-                            "parse_error": f"parse-error: {ex}",
-                        }
-                    )
+                    out.append(_error_row(page, f"parse-error: {ex}"))
             yield pd.DataFrame(out, columns=[f.name for f in schemas.PARSED_ROW_SCHEMA])
 
     return pages_html.select(page_col, html_col).mapInPandas(
@@ -234,30 +234,61 @@ _PROJECTIONS: dict[str, list[str]] = {
 }
 
 
-def project_products(parsed_rows: DataFrame, product_type: str) -> DataFrame:
+def _types(product_type: str | Sequence[str]) -> list[str]:
+    types = [product_type] if isinstance(product_type, str) else list(product_type)
+    unknown = [t for t in types if t not in _PROJECTIONS]
+    if unknown:
+        raise ValueError(f"unknown product_type: {unknown[0]}")
+    return types
+
+
+def _by_type(types: list[str], value: Callable[[str], Column]) -> Column:
+    """One expression that takes each row's value from its own product
+    type: ``value(t)`` itself for one type; for several, a CASE over the
+    ``product_type`` column (null for a row of any other type)."""
+    if len(types) == 1:
+        return value(types[0])
+    expr = F.when(F.col("product_type") == types[0], value(types[0]))
+    for t in types[1:]:
+        expr = expr.when(F.col("product_type") == t, value(t))
+    return expr
+
+
+def project_products(
+    parsed_rows: DataFrame, product_type: str | Sequence[str]
+) -> DataFrame:
     """P5+F1+F2+P4: positional cells → named columns, arity and key
     guards, archive classification, document link/filename columns.
 
+    ``product_type`` is one type or several; with several, each row is
+    projected by its own ``product_type`` in one pass onto the union of
+    the types' columns (``rows_of_type`` cuts one type back out).
     Pure column expressions over the parsed-row relation — Catalyst
     pushes the guards below everything downstream.
     """
-    if product_type not in _PROJECTIONS:
-        raise ValueError(f"unknown product_type: {product_type}")
-    cols = _PROJECTIONS[product_type]
-    min_cells = schemas.MIN_CELLS[product_type]
-    key_col = schemas.KEY_COLUMN[product_type]
+    types = _types(product_type)
 
+    def cell(name: str) -> Column:
+        return _by_type(
+            types,
+            lambda t: F.col("cells").getItem(_PROJECTIONS[t].index(name) + 1)
+            if name in _PROJECTIONS[t] else F.lit(None).cast("string"),
+        )
+
+    # rows of any type not asked for fail the arity guard (null bound)
     base = parsed_rows.filter(
-        F.col("parse_error").isNull() & (F.size("cells") >= min_cells)
+        F.col("parse_error").isNull()
+        & (F.size("cells") >= _by_type(types, lambda t: F.lit(schemas.MIN_CELLS[t])))
     )
+    names = dict.fromkeys(n for t in types for n in _PROJECTIONS[t])
     projected = base.select(
         "page",
         "row_index",
-        F.lit(product_type).alias("product_type"),
+        _by_type(types, F.lit).alias("product_type"),
         cleaning.archive_status(
             F.col("row_class"), F.col("cells").getItem(0)
         ).alias("archive_status"),
-        *[F.col("cells").getItem(i + 1).alias(name) for i, name in enumerate(cols)],
+        *[cell(name).alias(name) for name in names],
         F.col("link_url").alias("document_url"),
         F.coalesce(
             F.when(F.length("link_text") >= 3, F.col("link_text")),
@@ -265,43 +296,71 @@ def project_products(parsed_rows: DataFrame, product_type: str) -> DataFrame:
         ).alias("document_filename"),
     )
     # F2: key must be non-empty
-    return projected.filter(
-        F.col(key_col).isNotNull() & (F.trim(F.col(key_col)) != "")
-    )
+    key = _by_type(types, lambda t: F.col(schemas.KEY_COLUMN[t]))
+    return projected.filter(key.isNotNull() & (F.trim(key) != ""))
+
+
+def rows_of_type(products: DataFrame, product_type: str) -> DataFrame:
+    """One type's rows of a multi-type product relation, in the column
+    layout a single-type scrape gives them: the type's projection and
+    ``scraped_at``; after a download stage, ``document_url`` first and
+    the two download columns last."""
+    cols = [
+        "page", "row_index", "product_type", "archive_status",
+        *_PROJECTIONS[product_type], "document_url", "document_filename", "scraped_at",
+    ]
+    if "download_success" in products.columns:
+        cols = [
+            "document_url", *(c for c in cols if c != "document_url"),
+            "local_file_path", "download_success",
+        ]
+    return products.filter(F.col("product_type") == product_type).select(*cols)
 
 
 def build_download_tasks(
     products: DataFrame,
-    product_type: str,
+    product_type: str | Sequence[str],
     completed: DataFrame | None = None,
     base_dir: str = "downloads",
 ) -> DataFrame:
-    """K3+K4+J1: synthesize destination paths, drop null URLs, anti-join
-    the completed set (ref: cli.py:98-108, file_manager.py:116-134)."""
-    fy = F.col("financial_year") if "financial_year" in products.columns else F.lit("unknown")
-    insurer = F.col("insurer") if "insurer" in products.columns else F.lit("unknown")
-    uin = F.col("uin") if "uin" in products.columns else F.col(schemas.KEY_COLUMN[product_type])
-    name = (
-        F.col("product_name") if "product_name" in products.columns
-        else F.col(schemas.KEY_COLUMN[product_type])
-    )
+    """K3+K4+J1: synthesize destination paths, drop null URLs, dedup
+    URLs per type, anti-join the completed set (ref: cli.py:98-108,
+    file_manager.py:116-134). ``product_type``: one type or several;
+    ``completed``: URLs for every type, or per ``product_type``."""
+    types = _types(product_type)
+
+    def named(column: str, fallback: Callable[[str], Column]) -> Column:
+        return _by_type(
+            types, lambda t: F.col(column) if column in _PROJECTIONS[t] else fallback(t)
+        )
+
+    def key(t: str) -> Column:
+        return F.col(schemas.KEY_COLUMN[t])
+
+    pt = _by_type(types, F.lit)
+    uin = named("uin", key)
     tasks = (
         products.filter(F.col("document_url").isNotNull())
         .select(
             F.col("document_url").alias("url"),
             cleaning.partitioned_path(
-                F.lit(product_type), fy, insurer, uin, name,
+                pt,
+                named("financial_year", lambda t: F.lit("unknown")),
+                named("insurer", lambda t: F.lit("unknown")),
+                uin,
+                named("product_name", key),
                 cleaning.extension_from_url(F.col("document_url")),
                 base=base_dir,
             ).alias("destination"),
-            F.lit(product_type).alias("product_type"),
+            pt.alias("product_type"),
             uin.alias("uin"),
         )
-        .dropDuplicates(["url"])
+        .dropDuplicates(["product_type", "url"])
     )
     if completed is not None:
-        tasks = tasks.join(completed.select("url"), on="url", how="left_anti")
-    return tasks
+        keys = [c for c in ("product_type", "url") if c in completed.columns]
+        tasks = tasks.join(completed.select(*keys), on=keys, how="left_anti")
+    return tasks.select("url", "destination", "product_type", "uin")
 
 
 def download_batch(
@@ -317,7 +376,8 @@ def download_batch(
     become error ROWS (success=false), never exceptions (D4). Retry:
     ``retry_attempts`` tries with linear backoff ``delay*attempt``
     (ref: async_downloader.py:50-70, config.py:37-38).
-    Output matches schemas.DOWNLOAD_RESULT_SCHEMA.
+    Output matches schemas.DOWNLOAD_RESULT_SCHEMA plus the task's
+    product_type.
     """
     from insurance_helper_spark.shipping import ensure_shipped
 
@@ -333,7 +393,7 @@ def download_batch(
         bucket = TokenBucket(per_partition_rate)
         for pdf in batches:
             out: list[dict] = []
-            for url, dest in zip(pdf["url"], pdf["destination"]):
+            for url, dest, pt in zip(pdf["url"], pdf["destination"], pdf["product_type"]):
                 attempts, err, payload = 0, None, None
                 while attempts < cfg.retry_attempts:
                     attempts += 1
@@ -361,55 +421,74 @@ def download_batch(
                         "file_size": len(payload) if payload is not None else None,
                         "error": err,
                         "attempts": attempts,
+                        "product_type": pt,
                     }
                 )
-            yield pd.DataFrame(out, columns=[f.name for f in schemas.DOWNLOAD_RESULT_SCHEMA])
+            yield pd.DataFrame(out, columns=_RESULT_SCHEMA.fieldNames())
 
-    return tasks.repartition(n_parts).mapInPandas(run, schema=schemas.DOWNLOAD_RESULT_SCHEMA)
+    return tasks.repartition(n_parts).mapInPandas(run, schema=_RESULT_SCHEMA)
 
 
 def join_results(products: DataFrame, results: DataFrame) -> DataFrame:
     """J3: correlate download results back to products, setting
-    local_file_path (ref: cli.py:119-138). Left join keeps products
-    whose download failed or was skipped."""
+    local_file_path (ref: cli.py:119-138), by (product_type, url): one
+    URL listed under two types has a download of its own in each. Left
+    join keeps products whose download failed or was skipped."""
     r = results.select(
+        "product_type",
         F.col("url").alias("document_url"),
         F.col("file_path").alias("local_file_path"),
         F.col("success").alias("download_success"),
     )
-    return products.join(r, on="document_url", how="left")
+    return products.join(r, on=["product_type", "document_url"], how="left")
 
 
 def scrape_pipeline(
     spark: SparkSession,
-    url_template: str,
-    total_pages: int,
-    product_type: str,
+    url_template: str | dict[str, str],
+    total_pages: int | dict[str, int],
+    product_type: str | Sequence[str],
     fetcher: Fetcher | None = None,
     downloader: Downloader | None = None,
     completed: DataFrame | None = None,
     config: ScrapeConfig | None = None,
     download_dir: str = "downloads",
     metadata_only: bool = False,
-    start_page: int = 1,
+    start_page: int | dict[str, int] = 1,
     end_page: int | None = None,
     download_partitions: int | None = None,
 ) -> DataFrame:
-    """O1/O2/O5 composed: the full scrape as ONE lazy DataFrame plan.
+    """O1/O2/O5 composed: the scrape of one or several product types as
+    ONE DataFrame plan. ``product_type`` is one type or a sequence of
+    types; ``url_template``, ``total_pages`` and ``start_page`` are one
+    value or a dict keyed by type. ``completed``: see
+    ``build_download_tasks``.
 
     metadata_only (O2) skips the download stage — with a lazy DAG the
-    stage simply never exists. Returns the product table with
+    stage simply never exists, and the plan stays lazy. Otherwise the
+    projected products are materialized once, because they feed both
+    the download tasks and the result join; the new documents of every
+    type then download in one stage. Returns the product table with
     local_file_path/download_success populated (or null).
     """
-    pages = page_urls(spark, url_template, total_pages, start_page, end_page)
+    types = _types(product_type)
+
+    def of(value, pt: str):
+        return value[pt] if isinstance(value, dict) else value
+
+    pages = functools.reduce(DataFrame.unionByName, [
+        page_urls(spark, of(url_template, pt), of(total_pages, pt), of(start_page, pt), end_page)
+        .withColumn("product_type", F.lit(pt))
+        for pt in types
+    ])
     parsed = fetch_and_parse_pages(pages, fetcher, config)
-    products = project_products(parsed, product_type)
-    products = products.withColumn(
+    products = project_products(parsed, types).withColumn(
         "scraped_at", F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss")
     )
     if metadata_only:
         return products
-    tasks = build_download_tasks(products, product_type, completed, download_dir)
+    products = products.localCheckpoint(eager=True)
+    tasks = build_download_tasks(products, types, completed, download_dir)
     results = download_batch(tasks, downloader, config, download_partitions)
     return join_results(products, results)
 

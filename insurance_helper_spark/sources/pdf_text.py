@@ -50,6 +50,9 @@ _PAGES_COUNT_RE = re.compile(
 )
 _FLATE_RE = re.compile(rb"/(?:Filter\s*/FlateDecode|FlateDecode)")
 _FILTER_RE = re.compile(rb"/Filter\s*(?:/(\w+)|\[([^\]]*)\])")
+# a direct /Length N (not an indirect "/Length 12 0 R" reference)
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")
+_ENDSTREAM_RE = re.compile(rb"\s*endstream")
 
 _ESCAPES = {
     ord("n"): "\n",
@@ -208,11 +211,17 @@ def extract_pdf_text(content: bytes) -> tuple[str, int]:
         # the object dict sits between the previous 'obj' and 'stream'
         hdr_start = content.rfind(b"obj", 0, m.start())
         header = content[hdr_start if hdr_start >= 0 else 0 : m.start()]
-        # A Flate body may contain the literal bytes 'endstream'; if
-        # decoding fails on the first delimiter, retry with each later
-        # occurrence before giving up on the stream (ADVICE r9).
+        # A direct /Length that lands on 'endstream' gives the exact
+        # body: its last bytes may be CR/LF, so nothing is stripped.
         data = None
-        end = content.find(b"endstream", start)
+        length = _LENGTH_RE.search(header)
+        if length and _ENDSTREAM_RE.match(content, start + int(length.group(1))):
+            data = _decode_stream(content[start : start + int(length.group(1))], header)
+        # Fallback for an indirect or wrong /Length. A Flate body may
+        # contain the literal bytes 'endstream'; if decoding fails on
+        # the first delimiter, retry with each later occurrence before
+        # giving up on the stream (ADVICE r9).
+        end = content.find(b"endstream", start) if data is None else -1
         while end >= 0:
             body = content[start:end].rstrip(b"\r\n")
             data = _decode_stream(body, header)

@@ -7,19 +7,6 @@ import pytest
 from insurance_helper_spark import cli
 from tests.test_scrape_pipeline import NONLIFE_ROWS, fake_fetcher, make_listing_html
 
-import os
-
-# r15 (VERDICT r14 item 2): the 8 heaviest CLI e2e tests (~20-45 s each,
-# ~3.5 min total — each drives many sequential state-store Spark jobs)
-# run in the full configuration only, so the default suite fits the
-# driver's verify window. The CLI surface keeps default smoke coverage
-# via TestStatus/TestDelta/TestCurate/TestRetrieve/TestVectorStoreCli,
-# and the scrape pipeline itself is covered by test_scrape_pipeline.
-FULL = pytest.mark.skipif(
-    not os.environ.get("SPARK_GRAFT_FULL_TESTS"),
-    reason="heavy CLI e2e — run with SPARK_GRAFT_FULL_TESTS=1",
-)
-
 
 @pytest.fixture()
 def pages():
@@ -53,7 +40,6 @@ class TestStatus:
 
 
 class TestScrape:
-    @FULL
     def test_metadata_only_then_status(self, spark, tmp_path, pages):
         state = str(tmp_path / "state")
         rc, out = run(
@@ -78,7 +64,6 @@ class TestScrape:
         )
         assert rc == 1 and "Invalid product type" in out
 
-    @FULL
     def test_download_and_retry(self, spark, tmp_path, pages):
         state = str(tmp_path / "state")
         calls = {"n": 0}
@@ -119,7 +104,6 @@ class TestScrape:
 
 
 class TestReset:
-    @FULL
     def test_confirm_declined(self, spark, tmp_path, pages):
         state = str(tmp_path / "state")
         run(
@@ -134,7 +118,6 @@ class TestReset:
         _, out = run(spark, ["status", "--state-dir", state])
         assert "completed" in out
 
-    @FULL
     def test_reset_one_type_and_all(self, spark, tmp_path, pages):
         state = str(tmp_path / "state")
         run(
@@ -170,7 +153,6 @@ class TestQuery:
 
 
 class TestProbeAndStorage:
-    @FULL
     def test_probe_total_pages_from_counter(self, spark, tmp_path):
         # no --total-pages → CLI probes page 1: "of 120 results" / 60
         # per page → 2 pages (S3 + ceil-div, ref get_total_pages)
@@ -193,7 +175,6 @@ class TestProbeAndStorage:
         assert "Total pages: 2" in out
         assert "nonlife: 4 products scraped" in out  # 3 from page1 + 1 from page2
 
-    @FULL
     def test_object_storage_writes_manifest(self, spark, tmp_path, pages):
         rc, out = run(
             spark,
@@ -212,7 +193,6 @@ class TestProbeAndStorage:
         assert rows and all(k.startswith("nonlife/") for k in rows)
         assert "application/pdf" in rows.values()
 
-    @FULL
     def test_object_only_storage_deletes_local_after_verified_upload(
         self, spark, tmp_path, pages
     ):
@@ -238,7 +218,6 @@ class TestProbeAndStorage:
         ]
         assert leftovers == []
 
-    @FULL
     def test_rate_limit_zero_and_concurrent(self, spark, tmp_path, pages):
         # --rate-limit 0 = no throttle (reference semantics), -c sets
         # download partitioning; scrape must complete normally.
@@ -252,6 +231,81 @@ class TestProbeAndStorage:
             downloader=lambda url: b"%PDF-1.4",
         )
         assert rc == 0 and "nonlife: 3 products scraped" in out
+
+
+class TestIngestPlan:
+    """``scrape -t all`` and ``delta`` run as one all-types plan: every
+    listing page is fetched once by the scan, every document once, and
+    the Spark job count of each command is pinned."""
+
+    # named cells per type (life.py, life_list.py, nonlife.py, health.py)
+    NAMED = {"life": 11, "life_list": 3, "nonlife": 7, "health": 5}
+
+    def site(self):
+        pages = {}
+        for pt, n_named in self.NAMED.items():
+            rows = []
+            for k in range(3):
+                cells = ["", *[f"{pt}-{k}-{j}" for j in range(n_named)]]
+                cells += ["x"] if pt == "health" else []
+                # the last row repeats the first row's document
+                doc = f"/documents/{pt}-{k % 2}.pdf"
+                rows.append({"cells": [*cells, "download"], "href": doc,
+                             "link_text": f"{pt} policy {k}"})
+            base = f"https://x{cli.URL_PATHS[pt]}?_cur="
+            pages[base + "1"] = make_listing_html(rows[:2], total=120)
+            pages[base + "2"] = make_listing_html(rows[2:])
+        return pages
+
+    @staticmethod
+    def logged(log, fn):
+        path = str(log)
+
+        def call(url):
+            # the scan runs in Python workers: count through a file
+            with open(path, "a") as f:
+                f.write(url + "\n")
+            return fn(url)
+
+        return call
+
+    @staticmethod
+    def jobs(spark, group, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_scrape_all_fetches_each_page_once_then_noop_delta(self, spark, tmp_path):
+        import collections
+
+        pages = self.site()
+        fetcher = self.logged(tmp_path / "pages.log", lambda url: pages[url])
+        downloader = self.logged(tmp_path / "docs.log", lambda url: b"%PDF-1.4 " + url.encode())
+        common = ["--output", str(tmp_path / "d"), "--base-url", "https://x"]
+        (rc, out), scrape_jobs = self.jobs(spark, "test-ingest-scrape", lambda: run(
+            spark, ["scrape", "-t", "all", *common, "--state-dir", str(tmp_path / "s")],
+            fetcher=fetcher, downloader=downloader,
+        ))
+        assert rc == 0
+        for pt in cli.PRODUCT_TYPES:
+            assert f"{pt}: 3 products scraped" in out
+        fetched = collections.Counter((tmp_path / "pages.log").read_text().split())
+        # page 1 twice (the probe, then the scan), page 2 once
+        assert fetched == {url: 2 if url.endswith("=1") else 1 for url in pages}
+        downloaded = collections.Counter((tmp_path / "docs.log").read_text().split())
+        assert set(downloaded.values()) == {1}
+        assert len(downloaded) == 2 * len(cli.PRODUCT_TYPES)
+
+        (rc, out), delta_jobs = self.jobs(spark, "test-ingest-delta", lambda: run(
+            spark, ["delta", *common], fetcher=fetcher, downloader=downloader,
+        ))
+        assert rc == 0 and "New products: 0" in out and "Total products: 12" in out
+        assert sum(collections.Counter((tmp_path / "docs.log").read_text().split()).values()) == 8
+        assert (scrape_jobs, delta_jobs) == (18, 13)
 
 
 class TestAnalyze:

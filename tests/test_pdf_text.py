@@ -165,3 +165,24 @@ def test_page_count_regex_fallback_without_pages_root():
     assert b"/Count" not in pdf
     _, n_pages = extract_pdf_text(pdf)
     assert n_pages == 3  # per-page census still works root-less
+
+
+@pytest.mark.parametrize("last", [0x0A, 0x0D])
+def test_flate_body_ending_in_newline_byte_uses_length(last):
+    """About 1% of zlib streams end in 0x0A or 0x0D (the last byte of
+    the Adler-32 checksum). The direct /Length gives the body exactly;
+    stripping trailing CR/LF before 'endstream' would truncate it."""
+    for i in range(2000):
+        body = zlib.compress(b"BT (body %d) Tj ET" % i, 6)
+        if body[-1] == last:
+            break
+    assert body[-1] == last
+    text, _ = extract_pdf_text(mini_pdf([body], filter_name=b"/Filter /FlateDecode "))
+    assert text.strip() == "body %d" % i
+
+
+def test_indirect_length_falls_back_to_endstream_scan():
+    pdf = mini_pdf([b"BT (indirect) Tj ET"], compress=True)
+    pdf = pdf.replace(b"/Length ", b"/Length 7 0 R /Unused ")
+    text, _ = extract_pdf_text(pdf)
+    assert text.strip() == "indirect"

@@ -17,6 +17,7 @@ from insurance_helper_spark import schemas
 from insurance_helper_spark.operators.state import (
     StateStore,
     record_download_outcomes,
+    resume_page,
     retry_failed,
 )
 from insurance_helper_spark.sources.http import ScrapeConfig
@@ -44,26 +45,26 @@ def test_corrupted_table_falls_back_to_empty(store, tmp_path):
 
 
 def test_session_cursor_roundtrip(store):
-    # C2: resume = last_completed_page + 1; totals accumulate
-    assert store.start_session("life") == 1
-    store.update_page_progress("life", page=3, n_products=60)
-    store.update_page_progress("life", page=4, n_products=55)
-    assert store.start_session("life") == 5
-    row = store.read("sessions").filter(F.col("product_type") == "life").first()
+    # C2: resume = last_completed_page + 1; totals accumulate across the
+    # one sessions write each run makes, which completes its types
+    assert resume_page(store.sessions(), "life") == 1
+    store.complete_sessions(store.sessions(), {"life": (3, 60)})
+    first = store.sessions()["life"]
+    assert first["started_at"] is not None
+    store.complete_sessions(store.sessions(), {"life": (4, 55)})
+    sessions = store.sessions()
+    assert resume_page(sessions, "life") == 5
+    row = sessions["life"]
     assert row["total_products"] == 115
-    assert row["status"] == "running"
-    assert row["started_at"] is not None
-
-    store.complete_session("life")
-    row = store.read("sessions").filter(F.col("product_type") == "life").first()
+    assert row["started_at"] == first["started_at"]  # sticks across runs
     assert row["status"] == "completed"
     assert row["completed_at"] is not None
 
     # C3: reset one type; other types untouched
-    store.update_page_progress("health", page=1, n_products=10)
+    store.complete_sessions(store.sessions(), {"health": (1, 10)})
     store.reset_session("life")
-    assert store.start_session("life") == 1
-    assert store.start_session("health") == 2
+    assert resume_page(store.sessions(), "life") == 1
+    assert resume_page(store.sessions(), "health") == 2
 
     store.reset_all()
     assert store.read("sessions").count() == 0
