@@ -551,17 +551,12 @@ def _release_blocks(spark) -> None:
     """
     import gc
 
-    from insurance_helper_spark.queries.shared_cache import keep_ids
-
     gc.collect()  # drop py4j handles so the JVM side is collectable
-    kept = keep_ids(spark)
     for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        # Since r13 the shared_cache staged relations live in
-        # session-temp parquet, not the block manager, so keep_ids()
-        # is empty and EVERY leftover block is sweepable — the sweep
-        # can no longer break a staged-relation consumer.
-        if jrdd.id() not in kept:
-            jrdd.unpersist()
+        # The shared_cache staged relations live in session-temp
+        # parquet, not the block manager, so EVERY leftover block is
+        # sweepable — the sweep cannot break a staged-relation consumer.
+        jrdd.unpersist()
     spark.catalog.clearCache()
 
 

@@ -122,9 +122,9 @@ def _cmd_ingest(args, spark, out, fetcher, downloader) -> int:
       type's EXISTING metadata CSV, not the state store.
     - rows appended: ``scrape`` appends every row (and reads and
       writes each state table once); ``delta`` appends only the new
-      rows, aligned to the CSV header, so a rerun appends nothing.
+      rows, so a rerun appends nothing. Both align the rows to the
+      type's existing CSV header.
     """
-    import os
     from functools import reduce
 
     from pyspark.sql import DataFrame, Observation
@@ -161,18 +161,19 @@ def _cmd_ingest(args, spark, out, fetcher, downloader) -> int:
             if store:
                 out(f"Total pages: {totals[pt]}")
 
-    # delta: each type's metadata CSV, read once for its URLs and header
-    # (no CSV directory yet: every row of the type is new)
+    # each type's metadata CSV header, read on the driver: appended rows
+    # follow it, and a delta reads the table once for its URLs with it as
+    # the schema (no CSV yet: every row of the type is new)
     csv_dirs = {pt: f"{args.output}/metadata/{pt}" for pt in types}
-    existing = {
-        pt: sinks.read_bronze_csv(spark, d)
-        for pt, d in csv_dirs.items() if delta and os.path.isdir(d)
-    }
+    headers = {pt: sinks.bronze_csv_header(d) for pt, d in csv_dirs.items()}
+    headers = {pt: h for pt, h in headers.items() if h}
     if delta:
         known = reduce(DataFrame.unionByName, [
-            df.select(F.lit(pt).alias("product_type"), F.col("document_url").alias("url"))
-            for pt, df in existing.items()
-        ]) if existing else None
+            sinks.read_bronze_csv(spark, csv_dirs[pt], columns=h).select(
+                F.lit(pt).alias("product_type"), F.col("document_url").alias("url")
+            )
+            for pt, h in headers.items()
+        ]) if headers else None
     else:
         known = store.read("completed_downloads")
     # rate_limit passes through verbatim: 0 means "no limit" in the
@@ -214,13 +215,13 @@ def _cmd_ingest(args, spark, out, fetcher, downloader) -> int:
         if n_new:
             rows = http.rows_of_type(new_rows, pt)
             _object_storage_postprocess(rows, pt, args, out)
-            if pt in existing:
+            if pt in headers:
                 # CSV appends are positional: align to the existing
                 # table's header, null-filling columns this run lacks
-                # (e.g. download bookkeeping on a -m delta).
+                # (e.g. download bookkeeping after a -m run).
                 rows = rows.select(*[
                     F.col(c) if c in rows.columns else F.lit(None).cast("string").alias(c)
-                    for c in existing[pt].columns
+                    for c in headers[pt]
                 ])
             sinks.write_bronze_csv(rows, csv_dirs[pt], stamp_scraped_at=False)
         out(f"{pt}: total {n_total}, new {n_new}" if delta else f"{pt}: {n_total} products scraped")

@@ -15,16 +15,22 @@ Fusion: Reciprocal Rank Fusion, score = sum 1/(60+rank) over legs
 (Cormack et al.), fused top-n returned with both leg ranks (0 = not in
 that leg's top-20).
 
-Scale stance: tf rows exist only for the query's <=8 terms (left-semi
-pushdown into the posting build); df/avgdl are tiny broadcast
-aggregates; the vector leg broadcasts ONE query vector and scans
-embeddings once. Each leg is cut to depth 20 by ``orderBy().limit()``
-— Spark plans that as TakeOrderedAndProject (per-partition top-k,
-merged in one final task), never a global sort — and only the <=20
-survivors pass through the rank-assignment window, so no window ever
-sees a corpus-sized partition (ADVICE r10). No all-pairs joins;
-nothing corpus-sized is ever collected (the Rocchio centroid collects
-3 rows).
+Scale stance: the BM25 index (functions/bm25 postings plus N/avgdl)
+does not depend on the query, so it is built once per session and
+corpus version: staged by ``shared_cache.memo_checkpoint`` as parquet
+sorted by term within each file, keyed by the input files' (path,
+size, mtime_ns) so a rewritten corpus is re-indexed, never served
+stale. A request then reads only the postings of its <=8 terms (the
+``term IN (...)`` filter is pushed into the scan and prunes row
+groups), aggregates them per document and takes the top 20 with
+``orderBy().limit()`` — TakeOrderedAndProject, per-partition top-k
+merged in one task, never a global sort. The vector leg scans the
+embeddings once against ONE query vector inlined as a literal array and
+takes its top 20 the same way. Both legs are collected (20 rows each)
+and fused on the driver with the same IEEE expression the catalog
+query uses; the answer is one ``documents`` scan filtered to the fused
+doc ids. A warm request runs about six Spark jobs; nothing
+corpus-sized is collected, re-tokenized or joined per request.
 
 Reference parity: Stage-3 "semantic search / RAG querying"
 (/root/reference/README.md:103-137) exposed at the reference's only
@@ -34,18 +40,27 @@ user surface, the CLI (/root/reference/src/irdai_scraper/cli.py).
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insurance_helper_spark.functions import bm25
 from insurance_helper_spark.functions import text as T
 from insurance_helper_spark.operators.similarity import cosine
+from insurance_helper_spark.queries import shared_cache
 from insurance_helper_spark.sources.tables import load_table
 
 RRF_K = 60
 MAX_QUERY_TERMS = 8
 LEG_DEPTH = 20
 FEEDBACK_DOCS = 3  # Rocchio pseudo-relevance depth for free-text queries
+
+
+class _Served(NamedTuple):
+    index: bm25.Index  # postings staged as session-temp parquet
+    docs: DataFrame  # (doc_id, text)
+    emb: DataFrame  # (vec_id, vv)
 
 
 def _query_terms_from_text(query: str) -> list[str]:
@@ -58,6 +73,58 @@ def _query_terms_from_text(query: str) -> list[str]:
     return out[:MAX_QUERY_TERMS]
 
 
+def _served(spark: SparkSession, sf_dir: str) -> _Served:
+    """The session's index over the embedded corpus of ``sf_dir``,
+    with the readers requests scan; built on first use per corpus
+    version (the input files' fingerprint is part of the key)."""
+    inputs = shared_cache.input_files(sf_dir, "documents", "embeddings")
+
+    def build() -> _Served:
+        docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
+        emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("vv")
+        )
+        corpus = docs.join(emb.select(F.col("vec_id").alias("doc_id")), "doc_id").select(
+            "doc_id", T.tokens(F.col("text")).alias("toks")
+        )
+        idx = bm25.build_index(corpus)
+        postings = shared_cache.memo_checkpoint(
+            spark,
+            ("bm25_postings", sf_dir, inputs),
+            # df's window already partitions by term: each staged file
+            # holds whole terms, sorted, so row-group min/max prune
+            lambda: idx.postings.sortWithinPartitions("term"),
+        )
+        return _Served(idx._replace(postings=postings), docs, emb)
+
+    return shared_cache.memo(spark, ("retrieval_index", sf_dir, inputs), build)
+
+
+def _top(df: DataFrame, score: Column) -> list[int]:
+    """doc_ids of the LEG_DEPTH best rows of ``df`` by ``score``, ties
+    broken by doc_id."""
+    rows = (
+        df.select("doc_id", score.alias("s"))
+        .orderBy(F.desc("s"), "doc_id")
+        .limit(LEG_DEPTH)
+        .collect()
+    )
+    return [r["doc_id"] for r in rows]
+
+
+def _fuse(lex: list[int], vec: list[int]) -> list[tuple[int, float, int, int]]:
+    """(doc_id, rrf, lex_rank, vec_rank) for every doc in either leg,
+    best first; a rank is 0 when the doc is not in that leg."""
+    lex_rank = {d: i for i, d in enumerate(lex, start=1)}
+    vec_rank = {d: i for i, d in enumerate(vec, start=1)}
+    fused = []
+    for d in lex_rank.keys() | vec_rank.keys():
+        lr, vr = lex_rank.get(d, 0), vec_rank.get(d, 0)
+        rrf = (1.0 / (RRF_K + lr) if lr else 0.0) + (1.0 / (RRF_K + vr) if vr else 0.0)
+        fused.append((d, rrf, lr, vr))
+    return sorted(fused, key=lambda r: (-r[1], r[0]))
+
+
 def hybrid_rrf_retrieve(
     spark: SparkSession,
     sf_dir: str,
@@ -65,130 +132,90 @@ def hybrid_rrf_retrieve(
     doc_id: int | None = None,
     topn: int = 10,
 ) -> DataFrame:
-    """Fused top-``topn`` (doc_id, rrf_score, lex_rank, vec_rank,
+    """Fused top-``topn`` (rank, doc_id, rrf_score, lex_rank, vec_rank,
     snippet) for a free-text query or a query-by-example doc_id.
     Exactly one of ``query`` / ``doc_id`` must be given."""
     if (query is None) == (doc_id is None):
         raise ValueError("pass exactly one of query= or doc_id=")
-    k1, b = 1.2, 0.75
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vv")
-    )
-    corpus = (
-        docs.join(emb.select(F.col("vec_id").alias("doc_id")), "doc_id")
-        .select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        .localCheckpoint(eager=True)  # feeds dl/totals/tf (+ q-terms for doc_id mode)
-    )
+    served = _served(spark, sf_dir)
+    postings, emb = served.index.postings, served.emb
 
     if doc_id is not None:
-        qterm_rows = (
-            corpus.where(F.col("doc_id") == doc_id)
-            .select(F.explode("toks").alias("term"))
-            .filter(~F.col("term").isin(*T.EN_STOPWORDS))
-            .groupBy("term")
-            .agg(F.count("*").alias("tf"))
+        # query-by-example: the doc's own most frequent terms
+        terms = [
+            r["term"]
+            for r in postings.where(F.col("doc_id") == doc_id)
+            .where(~F.col("term").isin(*T.EN_STOPWORDS))
             .orderBy(F.desc("tf"), "term")
             .limit(MAX_QUERY_TERMS)
+            .select("term")
             .collect()
-        )
-        terms = [r["term"] for r in qterm_rows]
+        ]
         if not terms:
             raise ValueError(f"doc_id {doc_id} not found or has no indexable terms")
+        postings = postings.where(F.col("doc_id") != doc_id)
+        emb = emb.where(F.col("vec_id") != doc_id)
     else:
         terms = _query_terms_from_text(query or "")
         if not terms:
             raise ValueError("query has no indexable terms after tokenization")
 
-    qterms = spark.createDataFrame([(t,) for t in terms], "term string")
-    dl = corpus.select("doc_id", F.size("toks").alias("dl"))
-    totals = corpus.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
-    )
-    tf = (
-        corpus.select("doc_id", F.explode("toks").alias("term"))
-        .join(F.broadcast(qterms), "term", "left_semi")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    dft = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    term_score = F.round(idf * F.col("tf") * (k1 + 1) / denom * 1e9).cast("long")
-    lex_base = (
-        tf.join(F.broadcast(dft), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-    )
-    if doc_id is not None:
-        lex_base = lex_base.filter(F.col("doc_id") != doc_id)
-    # orderBy().limit() plans as TakeOrderedAndProject — per-partition
-    # top-k then one merge task; the row_number window only ever sees
-    # the <= LEG_DEPTH survivors (never the full candidate set).
-    w_lex = W.orderBy(F.desc("bm4"), "doc_id")
-    lex = (
-        lex_base.groupBy("doc_id")
-        .agg(F.round(F.sum(term_score).cast("double") / 1e9, 4).alias("bm4"))
-        .orderBy(F.desc("bm4"), "doc_id")
-        .limit(LEG_DEPTH)
-        .withColumn("lex_rank", F.row_number().over(w_lex))
-        .select("doc_id", "lex_rank")
-        .localCheckpoint(eager=True)  # reused: vec leg feedback + fusion
+    lex = _top(
+        postings.where(F.col("term").isin(*terms))
+        .groupBy("doc_id")
+        .agg(bm25.quantized_sum(bm25.term_score(served.index)).alias("bm4")),
+        F.col("bm4"),
     )
 
     if doc_id is not None:
-        qv_rows = emb.where(F.col("vec_id") == doc_id).select("vv").collect()
-        qv = qv_rows[0]["vv"] if qv_rows else None
+        rows = served.emb.where(F.col("vec_id") == doc_id).select("vv").collect()
+        qv = rows[0]["vv"] if rows else None
     else:
-        # Rocchio pseudo-relevance: centroid of the top feedback docs
-        fb = [r["doc_id"] for r in lex.orderBy("lex_rank").limit(FEEDBACK_DOCS).collect()]
-        vecs = emb.where(F.col("vec_id").isin(fb)).select("vv").collect() if fb else []
-        if vecs:
-            dim = len(vecs[0]["vv"])
-            qv = [sum(v["vv"][i] for v in vecs) / len(vecs) for i in range(dim)]
-        else:
-            qv = None
+        # Rocchio pseudo-relevance: centroid of the top feedback docs,
+        # summed in vec_id order
+        fb = lex[:FEEDBACK_DOCS]
+        rows = emb.where(F.col("vec_id").isin(fb)).collect() if fb else []
+        vecs = [r["vv"] for r in sorted(rows, key=lambda r: r["vec_id"])]
+        qv = [sum(c) / len(vecs) for c in zip(*vecs)] if vecs else None
 
+    vec = []
     if qv is not None:
-        qvec = spark.createDataFrame([(qv,)], "va array<double>")
-        w_vec = W.orderBy(F.desc("cos6"), "doc_id")
-        vec_base = emb.select(F.col("vec_id").alias("doc_id"), F.col("vv").alias("vb"))
-        if doc_id is not None:
-            vec_base = vec_base.filter(F.col("doc_id") != doc_id)
-        vec = (
-            vec_base.crossJoin(F.broadcast(qvec))
-            .select("doc_id", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos6"))
-            .orderBy(F.desc("cos6"), "doc_id")
-            .limit(LEG_DEPTH)
-            .withColumn("vec_rank", F.row_number().over(w_vec))
-            .select("doc_id", "vec_rank")
+        va = F.array(*[F.lit(float(x)) for x in qv])
+        vec = _top(
+            emb.select(F.col("vec_id").alias("doc_id"), "vv"),
+            F.round(cosine(va, F.col("vv")), 6),
         )
-    else:
-        vec = spark.createDataFrame([], "doc_id bigint, vec_rank int")
 
-    fused = lex.join(vec, "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce(F.col("lex_rank"), F.lit(0)).cast("long").alias("lex_rank"),
-        F.coalesce(F.col("vec_rank"), F.lit(0)).cast("long").alias("vec_rank"),
-        (
-            F.when(F.col("lex_rank").isNotNull(), F.lit(1.0) / (RRF_K + F.col("lex_rank"))).otherwise(F.lit(0.0))
-            + F.when(F.col("vec_rank").isNotNull(), F.lit(1.0) / (RRF_K + F.col("vec_rank"))).otherwise(F.lit(0.0))
-        ).alias("rrf_score"),
-    )
-    w_f = W.orderBy(F.desc("rrf_score"), "doc_id")
+    return _answer(served.docs, _fuse(lex, vec)[: max(topn, 0)])
+
+
+def _answer(docs: DataFrame, fused: list[tuple[int, float, int, int]]) -> DataFrame:
+    """The fused rows with their snippets: one ``documents`` scan
+    filtered to the fused doc ids, each row's ranks and score looked
+    up from a literal map keyed by doc_id."""
+    row_type = "struct<rank:int,rrf:double,lex_rank:bigint,vec_rank:bigint>"
+    if fused:
+        by_id = F.create_map(*[
+            c
+            for rank, (d, rrf, lr, vr) in enumerate(fused, start=1)
+            for c in (
+                F.lit(d).cast("long"),
+                F.struct(F.lit(rank), F.lit(rrf), F.lit(lr), F.lit(vr)).cast(row_type),
+            )
+        ])
+        hit = by_id[F.col("doc_id")]
+    else:
+        hit = F.lit(None).cast(row_type)
     return (
-        fused.withColumn("rank", F.row_number().over(w_f))
-        .filter(F.col("rank") <= topn)
-        .join(docs, "doc_id")
+        docs.where(F.col("doc_id").isin([d for d, *_ in fused]))
         .select(
-            "rank",
+            hit["rank"].alias("rank"),
             "doc_id",
-            F.round("rrf_score", 6).alias("rrf_score"),
-            "lex_rank",
-            "vec_rank",
+            F.round(hit["rrf"], 6).alias("rrf_score"),
+            hit["lex_rank"].alias("lex_rank"),
+            hit["vec_rank"].alias("vec_rank"),
             F.substring(F.regexp_replace("text", r"\s+", " "), 1, 80).alias("snippet"),
         )
         .orderBy("rank")
+        .limit(len(fused))
     )

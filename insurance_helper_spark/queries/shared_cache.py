@@ -4,13 +4,15 @@ Several query families derive from one small intermediate relation
 that is expensive to build but cheap to hold (the co-purchase edge
 list for the nine graph queries, the cumulative development triangle
 for the six reserving queries, the dedup family's shingle/pair/
-component tables). ``memo_checkpoint`` builds the relation ONCE per
-(applicationId, key), writes it to a session-temp parquet directory,
-and returns a reader over that directory on every later call in the
-same session — the in-session analogue of publishing the relation as
-a staged warehouse table, which is exactly what a 100 TB pipeline
-does with these artifacts (Lee et al.'s dedup pair tables, a
-reserving triangle snapshot, a co-occurrence edge list).
+component tables, the BM25 postings that serve retrieval).
+``memo_checkpoint`` builds the relation ONCE per (applicationId, key),
+writes it to a session-temp parquet directory, and returns a reader
+over that directory on every later call in the same session — the
+in-session analogue of publishing the relation as a staged warehouse
+table, which is exactly what a 100 TB pipeline does with these
+artifacts (Lee et al.'s dedup pair tables, a reserving triangle
+snapshot, a co-occurrence edge list). ``memo`` holds any other
+session value the same way (a row count, an index with its readers).
 
 Why parquet, not localCheckpoint (changed r13): eager localCheckpoints
 pin their blocks in the executors' UNIFIED MEMORY region for the whole
@@ -20,10 +22,14 @@ rows at sf0.1) competed with the memory-hungry Arrow/matmul queries
 for that region (r12 driver run: dedup_embedding_cosine 1.29 → 5.60 s,
 the exact block-pressure mode bench.py's r2 comment documents).
 Parquet staging keeps executor memory clean (the OS page cache serves
-re-reads), survives ANY block sweep, and gives consumers column
-pruning for free. ``keep_ids`` remains for sweeper API compatibility
-but is now always empty — nothing is pinned, sweepers may unpersist
-every block.
+re-reads), survives ANY block sweep (nothing is pinned, so sweepers may
+unpersist every block), and gives consumers column pruning for free.
+
+Freshness: a key derived from fixture tables carries
+``input_files(sf_dir, table, ...)`` — each input file's (path, size,
+mtime_ns), read with ``os.stat`` on the driver, no Spark job. A table
+rewritten in place gets a new key, so a staged relation, count or
+index is rebuilt instead of served stale.
 
 Keyed by applicationId so a stopped-and-restarted session can never
 read another session's staging directory; directories are removed at
@@ -34,26 +40,20 @@ regardless).
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import re
 import shutil
 import tempfile
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict = {}
 _STAGE_DIRS: dict[str, str] = {}
-_COUNTS: dict = {}
 
-
-def keep_ids(spark: SparkSession) -> set:
-    """Checkpoint RDD ids a block sweeper must NOT unpersist. Always
-    empty since r13: staged relations live in session-temp parquet,
-    not the block manager, so sweepers are free to unpersist every
-    block. Kept so bench.py/_release_blocks and tools/ansi_sweep.py
-    work unchanged against both this and older revisions."""
-    return set()
+V = TypeVar("V")
 
 
 def _stage_dir(app_id: str) -> str:
@@ -65,6 +65,44 @@ def _stage_dir(app_id: str) -> str:
     return d
 
 
+def input_files(sf_dir: str, *tables: str) -> tuple:
+    """(path, size, mtime_ns) of every data file of the fixture
+    ``tables`` under ``sf_dir`` — a table is ``{name}.parquet``, a file
+    or a directory of part files (hidden and ``_``-prefixed entries
+    skipped, as Spark's reader skips them). Only ``os.stat`` runs: no
+    Spark job. A path the driver cannot stat (absent, or a remote URI)
+    contributes its name alone."""
+    out = []
+    for name in tables:
+        path = f"{sf_dir}/{name}.parquet"
+        if os.path.isdir(path):
+            files = [
+                os.path.join(root, f)
+                for root, dirs, fs in os.walk(path)
+                for f in fs
+                if not f.startswith((".", "_"))
+            ]
+        else:
+            files = [path]
+        for f in sorted(files):
+            try:
+                st = os.stat(f)
+            except OSError:
+                out.append((f,))
+            else:
+                out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], V]) -> V:
+    """Return the session's value for ``key``, calling ``build()`` on
+    first use in this session (applicationId)."""
+    full_key = (spark.sparkContext.applicationId,) + tuple(key)
+    if full_key not in _CACHE:
+        _CACHE[full_key] = build()
+    return _CACHE[full_key]
+
+
 def memo_checkpoint(
     spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
 ) -> DataFrame:
@@ -73,29 +111,27 @@ def memo_checkpoint(
     in this session. Later calls return a reader over the staged files
     (explicit schema — no footer inference, works even for an empty
     relation)."""
-    app_id = spark.sparkContext.applicationId
-    full_key = (app_id,) + tuple(key)
-    cached = _CACHE.get(full_key)
-    if cached is not None:
-        return cached
-    # The readable slug is LOSSY (('a b','c') and ('a','b c') both
-    # sanitize to 'a_b_c'); the appended digest of the raw key tuple
-    # makes the directory injective in the key, so two distinct memos
-    # can never overwrite each other's files (ADVICE r13).
-    import hashlib
 
-    slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", "_".join(str(p) for p in key))
-    digest = hashlib.sha1(repr(key).encode()).hexdigest()[:8]
-    path = os.path.join(_stage_dir(app_id), f"{slug}_{digest}")
-    built = build()
-    built.write.mode("overwrite").parquet(path)
-    df = spark.read.schema(built.schema).parquet(path)
-    _CACHE[full_key] = df
-    return df
+    def stage() -> DataFrame:
+        # The readable slug is LOSSY (('a b','c') and ('a','b c') both
+        # sanitize to 'a_b_c') and cut short (file fingerprints make
+        # keys long); the appended 64-bit digest of the raw key tuple
+        # makes the directory injective in the key up to a ~2⁻⁶⁴
+        # collision, so two distinct memos never overwrite each other's
+        # files (ADVICE r13).
+        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", "_".join(str(p) for p in key))[:96]
+        digest = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+        path = os.path.join(_stage_dir(spark.sparkContext.applicationId), f"{slug}_{digest}")
+        built = build()
+        built.write.mode("overwrite").parquet(path)
+        return spark.read.schema(built.schema).parquet(path)
+
+    return memo(spark, ("staged",) + tuple(key), stage)
 
 
 def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Memoized row count of a fixture table per (app, sf_dir, table).
+    """Memoized row count of a fixture table per (app, sf_dir, table,
+    input files).
 
     Callers that size a plan from corpus cardinality (adaptive SRP
     plane counts in dedup_embedding_cosine_lsh /
@@ -103,17 +139,15 @@ def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     not once per invocation — ``df.count()`` is a real aggregation job
     (parquet footer row-count pushdown is NOT on by default), and
     bench runs every query cold + 2 warm, tripling the tax (ADVICE
-    r12). One count job per (app, sf_dir, table), then a dict hit.
+    r12). One count job per table version, then a dict hit.
     """
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, table)
-    n = _COUNTS.get(key)
-    if n is None:
-        from insurance_helper_spark.sources.tables import load_table
+    from insurance_helper_spark.sources.tables import load_table
 
-        n = load_table(spark, sf_dir, table).count()
-        _COUNTS[key] = n
-    return n
+    return memo(
+        spark,
+        ("count", sf_dir, table, input_files(sf_dir, table)),
+        lambda: load_table(spark, sf_dir, table).count(),
+    )
 
 
 def doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -126,8 +160,8 @@ def doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     resolution, the curation funnel, and the linkage queries all start
     here. Before r12 each query re-ran tokenize→posexplode→window→
     distinct per call (and twice per self-join); now the family shares
-    one build per (applicationId, sf_dir, k), published to session-temp
-    parquet — the in-session analogue of a bucketed staged shingle
+    one build per (applicationId, sf_dir, k, documents files), published
+    to session-temp parquet — the in-session analogue of a bucketed staged shingle
     table at warehouse scale.
 
     Queries whose input is a SUBSET of documents (with text unchanged)
@@ -141,7 +175,9 @@ def doc_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
         return dedup.hashed_shingle_rows(docs, "doc_id", "text", k=k)
 
-    return memo_checkpoint(spark, ("doc_shingles", sf_dir, k), build)
+    return memo_checkpoint(
+        spark, ("doc_shingles", sf_dir, k, input_files(sf_dir, "documents")), build
+    )
 
 
 def doc_shingles_sized(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -167,7 +203,9 @@ def doc_shingles_sized(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFram
             "sh_size", F.count("*").over(Window.partitionBy("doc_id"))
         )
 
-    return memo_checkpoint(spark, ("doc_shingles_sized", sf_dir, k), build)
+    return memo_checkpoint(
+        spark, ("doc_shingles_sized", sf_dir, k, input_files(sf_dir, "documents")), build
+    )
 
 
 # Document-frequency cap carried by the staged pair table. A published
@@ -206,27 +244,17 @@ def ngram_pair_stats(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     from insurance_helper_spark.operators import dedup
     from insurance_helper_spark.sources.tables import load_table
 
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        return dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=k, threshold=0.0,
-            max_doc_freq=PAIR_STATS_MAX_DOC_FREQ,
-            shingles=doc_shingles(spark, sf_dir, k),
-        )
+    from pyspark.sql import functions as F
 
-    app_id = spark.sparkContext.applicationId
-    first_build = (app_id, "ngram_pair_stats", sf_dir, k) not in _CACHE
-    staged = memo_checkpoint(spark, ("ngram_pair_stats", sf_dir, k), build)
-    if first_build:
-        from pyspark.sql import functions as F
+    def build() -> DataFrame:
         # ADVICE r13: the cap must not drop shingles SILENTLY — when it
         # does, every consumer's semantics diverge from the uncapped
         # relation (exactly what dedup_hot_shingle_census reports; this
         # wires the signal into the build itself). One tiny map-side
-        # count-by-shingle job per session, only on the staging call.
+        # count-by-shingle job per build, only on the staging call.
+        shingles = doc_shingles(spark, sf_dir, k)
         n_hot = (
-            doc_shingles(spark, sf_dir, k)
-            .groupBy("h")
+            shingles.groupBy("h")
             .count()
             .filter(F.col("count") > PAIR_STATS_MAX_DOC_FREQ)
             .count()
@@ -240,9 +268,17 @@ def ngram_pair_stats(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
                 "the staged pair table; consumers see capped semantics "
                 "(their oracles carry the same cap). Run "
                 "dedup_hot_shingle_census for the full histogram.",
-                stacklevel=2,
             )
-    return staged
+        docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
+        return dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", k=k, threshold=0.0,
+            max_doc_freq=PAIR_STATS_MAX_DOC_FREQ,
+            shingles=shingles,
+        )
+
+    return memo_checkpoint(
+        spark, ("ngram_pair_stats", sf_dir, k, input_files(sf_dir, "documents")), build
+    )
 
 
 def ngram_components(
@@ -253,7 +289,8 @@ def ngram_components(
     the published dedup-graph labeling that cluster policies (canonical
     winner, best-quality winner, survivorship) all consume. Derived
     from the staged pair table, so the iterative min-label
-    propagation runs once per (app, sf_dir, k, threshold)."""
+    propagation runs once per (app, sf_dir, k, threshold, documents
+    files)."""
     from pyspark.sql import functions as F
 
     from insurance_helper_spark.operators import dedup
@@ -264,4 +301,8 @@ def ngram_components(
         )
         return dedup.connected_components(pairs)
 
-    return memo_checkpoint(spark, ("ngram_components", sf_dir, k, threshold), build)
+    return memo_checkpoint(
+        spark,
+        ("ngram_components", sf_dir, k, threshold, input_files(sf_dir, "documents")),
+        build,
+    )

@@ -2207,10 +2207,10 @@ def similarity_ann_frontier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # break ties on rounded scores + doc_id; the RRF score is a TWO-TERM
 # IEEE expression of exact small integers — bit-identical across
 # engines, so the fused ordering needs no quantization.
-# Scale: posting-list shape — tf rows exist only for the <=20 query
-# terms (semi-join pushdown); df/avgdl are tiny broadcast aggregates;
-# the vector leg broadcasts 4 query vectors; both legs' windows
-# partition on qid. No all-pairs anywhere.
+# Scale: posting-list shape — an in-plan functions/bm25 index whose
+# tf rows exist only for the <=20 query terms (semi-join pushdown);
+# N/avgdl are driver-side scalars; the vector leg broadcasts 4 query
+# vectors; both legs' windows partition on qid. No all-pairs anywhere.
 # ---------------------------------------------------------------------------
 
 _RRF_K = 60
@@ -2338,13 +2338,13 @@ def retrieval_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+vector retrieval with RRF fusion — see the block
     comment. Reference parity: Stage-3 'semantic search / RAG querying'
     (/root/reference/README.md:103-137), composed from the engine's
-    BM25 (text_bm25_topk pattern) and exact-cosine machinery.
+    BM25 (functions/bm25) and exact-cosine machinery.
     """
     from pyspark.sql import Window as W
 
+    from insurance_helper_spark.functions import bm25
     from insurance_helper_spark.functions import text as T
 
-    k1, b = 1.2, 0.75
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
     emb = emb.select(
@@ -2353,7 +2353,7 @@ def retrieval_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = (
         docs.join(emb.select(F.col("vec_id").alias("doc_id")), "doc_id")
         .select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        .localCheckpoint(eager=True)  # feeds dl/totals/tf + query terms
+        .localCheckpoint(eager=True)  # feeds the index + query terms
     )
     hkey = (F.col("vec_id") % _KR) * _KMUL % _KMOD
     qids = (
@@ -2375,33 +2375,14 @@ def retrieval_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _RRF_TERMS)
         .select("qid", "term")
     )
-    dl = corpus.select("doc_id", F.size("toks").alias("dl"))
-    totals = corpus.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
-    )
-    tf = (
-        corpus.select("doc_id", F.explode("toks").alias("term"))
-        .join(F.broadcast(qterms.select("term").distinct()), "term", "left_semi")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    dft = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    term_score_q = F.round(idf * F.col("tf") * (k1 + 1) / denom * 1e9).cast("long")
+    idx = bm25.build_index(corpus, qterms)
     w_lex = W.partitionBy("qid").orderBy(F.desc("bm4"), "doc_id")
     lex = (
         F.broadcast(qterms)
-        .join(tf, "term")
-        .join(F.broadcast(dft), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
+        .join(idx.postings, "term")
         .filter(F.col("doc_id") != F.col("qid"))
         .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum(term_score_q).cast("double") / 1e9, 4).alias("bm4"))
+        .agg(bm25.quantized_sum(bm25.term_score(idx)).alias("bm4"))
         .withColumn("lex_rank", F.row_number().over(w_lex))
         .filter(F.col("lex_rank") <= _RRF_DEPTH)
         .select("qid", "doc_id", "lex_rank")

@@ -13,6 +13,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insurance_helper_spark.functions import bm25
 from insurance_helper_spark.functions import text as T
 from insurance_helper_spark.queries.catalog import register
 from insurance_helper_spark.sources.tables import load_table
@@ -225,11 +226,8 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # BM25 retrieval: score every document against a fixed term query —
 # the classic lexical top-k that complements the embedding ANN path
-# (similarity_queries) in a retrieval pipeline. Okapi BM25 with
-# k1=1.2, b=0.75 and the +1-smoothed idf; every input (tf, df, dl,
-# avgdl, N) is derived with one explode + tiny-key aggregations, so
-# the whole plan is two shuffles (term stats, per-doc sum) regardless
-# of corpus size, with the 3-row term-stats side broadcast.
+# (similarity_queries) in a retrieval pipeline. Okapi BM25 as defined
+# once in functions/bm25 (k1=1.2, b=0.75, the +1-smoothed idf).
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("spark", "join", "window")
@@ -271,33 +269,18 @@ LIMIT 20
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-20 for the fixed query {spark, join, window}.
 
-    Scale: tf rows exist only for query-term hits (the isin filter is
-    pushed below the explode's projection), df/N/avgdl are tiny
-    aggregates joined by broadcast, and the final top-20 is
-    TakeOrdered — no global sort of the scored corpus.
+    Scale: an in-plan ``functions/bm25`` index restricted to the query
+    terms (the isin filter sits right above the explode), df a window
+    over those few term partitions, N/avgdl driver-side scalars, and
+    the final top-20 is TakeOrdered — no join and no global sort.
     """
-    k1, b = 1.2, 0.75
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
-    dl = toks.select("doc_id", F.size("toks").alias("dl"))
-    totals = toks.agg(
-        F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
+    idx = bm25.build_index(
+        docs.select("doc_id", T.tokens(F.col("text")).alias("toks")), _BM25_TERMS
     )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
     return (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * F.col("tf") * (k1 + 1) / denom).alias("score"))
+        idx.postings.groupBy("doc_id")
+        .agg(F.sum(bm25.term_score(idx)).alias("score"))
         .select("doc_id", F.round("score", 4).alias("bm25"))
         .orderBy(F.desc("bm25"), "doc_id")
         .limit(20)

@@ -5,8 +5,9 @@
   ``None`` → empty string, an appended ``scraped_at`` timestamp column,
   append-only semantics. In Spark, "append if exists else create with
   header" collapses to ``mode('append')`` — every part file carries its
-  own header and the CSV reader skips them per-file, so the
-  header-management branch of the reference disappears.
+  own header and the CSV reader skips them per-file. The reader maps
+  columns by position, though, so an append must follow the table's
+  existing header: ``bronze_csv_header`` reads it on the driver.
 - Partitioned parquet sink — the physical realization of K3's
   ``downloads/{type}/{FY}/{Insurer}/...`` path synthesis
   (downloader/file_manager.py:70-114): ``write.partitionBy`` gives the
@@ -22,8 +23,12 @@ tiny ones. ``maxRecordsPerFile`` guards the opposite failure mode.
 
 from __future__ import annotations
 
+import csv
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def write_bronze_csv(
@@ -55,13 +60,30 @@ def write_bronze_csv(
     )
 
 
-def read_bronze_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read a bronze CSV table back; all-string unless a schema is given
-    (the reference's all-string cells, SURVEY §1.2)."""
+def read_bronze_csv(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
+    """Read a bronze CSV table back, all-string (the reference's
+    all-string cells, SURVEY §1.2). Given its header as ``columns``
+    (``bronze_csv_header``), the read runs no header-inference job."""
     reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
+    if columns is not None:
+        reader = reader.schema(StructType([StructField(c, StringType()) for c in columns]))
     return reader.csv(path)
+
+
+def bronze_csv_header(path: str) -> list[str] | None:
+    """Column names of the bronze CSV table at ``path``, parsed on the
+    driver from the first line of its first non-empty part file (no
+    Spark job); None when there is no such file yet."""
+    if not os.path.isdir(path):
+        return None
+    for name in sorted(os.listdir(path)):
+        if name.startswith((".", "_")):
+            continue
+        with open(os.path.join(path, name), newline="", encoding="utf-8") as f:
+            header = next(csv.reader(f), None)
+        if header:
+            return header
+    return None
 
 
 def write_partitioned(

@@ -57,6 +57,27 @@ class TestScrape:
         assert rc == 0
         assert any("nonlife" in l and "completed" in l for l in out.splitlines())
 
+    def test_full_scrape_after_metadata_only_follows_header(self, spark, tmp_path, pages):
+        """A scrape that appends to an existing metadata CSV aligns its
+        rows to that CSV's header (as the delta does): every part file
+        carries one header and the table reads back column by column."""
+        common = ["--total-pages", "1", "--output", str(tmp_path / "data"),
+                  "--state-dir", str(tmp_path / "state"), "--base-url", "https://x"]
+        rc, _ = run(spark, ["scrape", "-t", "nonlife", "-m", *common],
+                    fetcher=fake_fetcher(pages))
+        assert rc == 0
+        rc, out = run(spark, ["scrape", "-t", "nonlife", "--no-resume", *common],
+                      fetcher=fake_fetcher(pages), downloader=lambda url: b"%PDF-1.4")
+        assert rc == 0 and "nonlife: 3 products scraped" in out
+        from insurance_helper_spark.sources import sinks
+
+        d = tmp_path / "data" / "metadata" / "nonlife"
+        parts = [p for p in d.iterdir() if p.name.startswith("part-") and p.stat().st_size]
+        assert len({p.read_text().splitlines()[0] for p in parts}) == 1
+        urls = [r["document_url"] for r in sinks.read_bronze_csv(spark, str(d)).collect()]
+        assert len(urls) == 6
+        assert all(u.startswith("https://") and "/documents/" in u for u in urls), urls
+
     def test_invalid_type(self, spark, tmp_path):
         rc, out = run(
             spark,
@@ -305,7 +326,7 @@ class TestIngestPlan:
         ))
         assert rc == 0 and "New products: 0" in out and "Total products: 12" in out
         assert sum(collections.Counter((tmp_path / "docs.log").read_text().split()).values()) == 8
-        assert (scrape_jobs, delta_jobs) == (18, 13)
+        assert (scrape_jobs, delta_jobs) == (18, 9)
 
 
 class TestAnalyze:

@@ -4,6 +4,8 @@ top-k without global sort) asserted against the executed plan."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from insurance_helper_spark.plans import audit
@@ -148,13 +150,15 @@ def test_pivot_aggregates_with_map_side_partials(spark, sf_dir):
     assert audit.exchange_count(df) <= 3, plan
 
 
-def test_bm25_broadcasts_stats_and_take_ordered(spark, sf_dir):
+def test_bm25_joinless_and_take_ordered(spark, sf_dir):
     df = _q("text_bm25_topk", spark, sf_dir)
     plan = audit.executed_plan(df)
-    # term-stats and totals ride broadcast joins; top-20 never global-sorts
-    assert plan.count("BroadcastHashJoin") >= 2
+    # functions/bm25: dl rides the explode, df is a window over the
+    # query-term partitions and N/avgdl are literals, so the plan joins
+    # nothing; top-20 never global-sorts
+    assert "Join" not in plan
+    assert "Window [count(1)" in plan
     assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_quality_filter_is_shuffle_free(spark, sf_dir):
@@ -240,25 +244,54 @@ def test_spearman_windows_ride_reduced_relations(spark, sf_dir):
 
 
 class TestRetrievePlans:
-    """hybrid_rrf_retrieve (the CLI retrieval core) must keep the
-    catalog twin's plan hygiene: Arrow/JVM-only (no row-wise Python),
-    no cartesian blowup, query terms broadcast into the posting build."""
+    """hybrid_rrf_retrieve (the CLI retrieval core) serves a warm request
+    from the session's staged BM25 postings: every plan the request runs
+    is Arrow/JVM-only (no row-wise Python), has no cartesian blowup and
+    no Generate (the corpus is never re-tokenized per request), and the
+    lexical leg reads the staged postings with its terms pushed into the
+    scan."""
 
-    def test_free_text_plan_clean_and_broadcasts_terms(self, spark, sf_dir):
+    @staticmethod
+    def request_plans(spark, fn) -> list[str]:
+        """Physical plans of the SQL executions ``fn`` runs, from the
+        session's SQL status store (retained executions are capped, so
+        the new ones are picked by id, not by count)."""
+        store = spark._jsparkSession.sharedState().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def latest(n):
+            bus.waitUntilEmpty()
+            ex = store.executionsList(max(0, store.executionsCount() - n), n)
+            return [ex.apply(i) for i in range(ex.size())]
+
+        before = max((e.executionId() for e in latest(1)), default=-1)
+        fn()
+        return [e.physicalPlanDescription() for e in latest(64) if e.executionId() > before]
+
+    def check_warm_request(self, spark, sf_dir, **query):
         from insurance_helper_spark.operators.retrieval import hybrid_rrf_retrieve
-        from insurance_helper_spark.plans import audit
 
-        df = hybrid_rrf_retrieve(spark, sf_dir, query="window merge scan", topn=5)
-        plan = audit.executed_plan(df)
-        assert "BatchEvalPython" not in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+        hybrid_rrf_retrieve(spark, sf_dir, topn=5, **query).collect()  # stages the index
+        plans = self.request_plans(
+            spark, lambda: hybrid_rrf_retrieve(spark, sf_dir, topn=5, **query).collect()
+        )
+        assert plans
+        for plan in plans:
+            assert "BatchEvalPython" not in plan
+            assert "CartesianProduct" not in plan
+            assert "Generate" not in plan
+        # the lexical leg: a scan of the staged postings with the query
+        # terms pushed down (a positive IN, not the stopword NOT IN)
+        by_term = re.compile(r"PushedFilters: \[.*(?<!Not\()In\(term, \[")
+        assert any(
+            "bm25_postings" in plan and by_term.search(plan) for plan in plans
+        ), "no plan reads the staged postings by term"
+        return plans
+
+    def test_free_text_plan_clean_and_reads_staged_postings(self, spark, sf_dir):
+        self.check_warm_request(spark, sf_dir, query="window merge scan")
 
     def test_query_by_example_plan_clean(self, spark, sf_dir):
-        from insurance_helper_spark.operators.retrieval import hybrid_rrf_retrieve
-        from insurance_helper_spark.plans import audit
-
-        df = hybrid_rrf_retrieve(spark, sf_dir, doc_id=3, topn=5)
-        plan = audit.executed_plan(df)
-        assert "BatchEvalPython" not in plan
-        assert "CartesianProduct" not in plan
+        plans = self.check_warm_request(spark, sf_dir, doc_id=3)
+        # the query doc's own terms come from the postings, not the corpus
+        assert any("EqualTo(doc_id,3)" in plan and "bm25_postings" in plan for plan in plans)

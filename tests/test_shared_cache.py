@@ -1,5 +1,5 @@
 """Session-memoized staged relations (queries/shared_cache.py): memo
-identity, the block-sweeper KEEP contract (the r10 ADVICE class), and
+identity, the block-sweeper contract (the r10 ADVICE class), and
 value identity between the staged dedup relations and the operators
 they replace. Plus the adaptive SRP plane-count math (r12)."""
 
@@ -31,16 +31,15 @@ class TestMemoContract:
     def test_staged_relations_survive_block_sweeper(self, spark):
         """Staged relations are parquet-backed (r13), NOT block-manager
         resident: a full block sweep (bench._release_blocks) must leave
-        them readable and value-identical, and keep_ids must be empty —
-        the sweeper no longer has to protect anything, which is what
-        fixed the r12 block-pressure regression (pinned memo blocks
-        taxing the Arrow/matmul queries' unified-memory budget)."""
+        them readable and value-identical — the sweeper has nothing to
+        protect, which is what fixed the r12 block-pressure regression
+        (pinned memo blocks taxing the Arrow/matmul queries'
+        unified-memory budget)."""
         import bench
 
         pairs = SC.ngram_pair_stats(spark, SF_DIR)
         before = _rows(pairs.filter(F.col("jaccard") >= 0.5))
         bench._release_blocks(spark)
-        assert SC.keep_ids(spark) == set()  # nothing pinned anymore
         # nothing the staged relations own is left in the block manager
         assert not spark.sparkContext._jsc.getPersistentRDDs()
         after = _rows(
@@ -64,10 +63,15 @@ class TestMemoContract:
 
     def test_corpus_count_memoized(self, spark):
         n1 = SC.corpus_count(spark, SF_DIR, "embeddings")
-        n2 = SC.corpus_count(spark, SF_DIR, "embeddings")
+        sc = spark.sparkContext
+        sc.setJobGroup("t-count-memo", "t-count-memo")
+        try:
+            n2 = SC.corpus_count(spark, SF_DIR, "embeddings")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         assert n1 == n2 > 0
-        key = (spark.sparkContext.applicationId, SF_DIR, "embeddings")
-        assert SC._COUNTS[key] == n1
+        # the second call is a dict hit: no count job
+        assert not sc.statusTracker().getJobIdsForGroup("t-count-memo")
 
     def test_staged_relations_match_operators(self, spark):
         """The r12 rewiring claim, unit-pinned: the staged shingle /

@@ -46,7 +46,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from insurance_helper_spark.queries import catalog
-    from insurance_helper_spark.queries.shared_cache import keep_ids
 
     catalog.load_all()
     names = [
@@ -63,10 +62,8 @@ def main() -> int:
         if i % 50 == 0:
             print(f"... {i}/{len(names)}", file=sys.stderr, flush=True)
         gc.collect()
-        kept = keep_ids(spark)
         for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            if jrdd.id() not in kept:
-                jrdd.unpersist()
+            jrdd.unpersist()
         spark.catalog.clearCache()
     print(f"swept {len(names)} queries at {sf_dir} under ANSI: {len(fails)} failures")
     for name, msg in fails:
