@@ -466,15 +466,16 @@ def _cmd_vector_store(args, spark, out) -> int:
             )
         return 0
     try:
-        cents = VS.read_centroids(spark, args.store)
+        epoch = VS.read_quantizer(spark, args.store).epoch
     except AnalysisException:
         out(f"no vector store at {args.store} (run ingest first)")
         return 1
     if args.action == "status":
-        epoch = cents.first()["epoch"]
-        vec = VS.read_vector_store(spark, args.store)
-        n = vec.count()
-        stale = vec.where(F.col("epoch") != epoch).count()
+        counts = (
+            VS.read_vector_store(spark, args.store).groupBy("epoch", "cell").count().collect()
+        )
+        n = sum(r["count"] for r in counts)
+        stale = sum(r["count"] for r in counts if r["epoch"] != epoch)
         # stale_fraction is the serving-path health contract: exactly
         # the fraction of rows vector_store_search must exact-scan
         # instead of cell-probing (pinned by tests/test_vector_store).
@@ -483,15 +484,8 @@ def _cmd_vector_store(args, spark, out) -> int:
             f"store {args.store}: epoch {epoch}, {n} vectors, "
             f"{stale} stale (stale_fraction={frac:.4f})"
         )
-        census = (
-            vec.where(F.col("epoch") == epoch)
-            .groupBy("cell")
-            .count()
-            .orderBy("cell")
-            .collect()
-        )
-        for r in census:
-            out(f"  cell {r['cell']:>3}: {r['count']} vectors")
+        for cell, c in sorted((r["cell"], r["count"]) for r in counts if r["epoch"] == epoch):
+            out(f"  cell {cell:>3}: {c} vectors")
         return 0
     if args.action == "reassign":
         n = VS.reassign_stale(spark, args.store)

@@ -45,8 +45,17 @@ def build_index(
     into a semi-join. ``df`` counts every document holding the term,
     and ``n_docs``/``avgdl`` cover the whole corpus (documents without
     tokens included), so a restricted index scores like a full one.
-    One job collects the scalars."""
-    rows = corpus.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
+    One job collects the scalars.
+
+    The explode is ``explode_outer`` followed by ``term IS NOT NULL``
+    (the same rows as ``explode``): for an inner explode Spark infers
+    ``size(toks) > 0 AND toks IS NOT NULL`` and, when ``toks`` is a
+    projected tokenizer expression, copies the whole regexp chain into a
+    Filter below the Project that computes it, tokenizing every
+    document twice."""
+    rows = corpus.select(
+        "doc_id", F.size("toks").alias("dl"), F.explode_outer("toks").alias("term")
+    ).where(F.col("term").isNotNull())
     if isinstance(terms, DataFrame):
         rows = rows.join(F.broadcast(terms.select("term")), "term", "left_semi")
     elif terms is not None:

@@ -22,14 +22,17 @@ sorted by term within each file, keyed by the input files' (path,
 size, mtime_ns) so a rewritten corpus is re-indexed, never served
 stale. A request then reads only the postings of its <=8 terms (the
 ``term IN (...)`` filter is pushed into the scan and prunes row
-groups), aggregates them per document and takes the top 20 with
-``orderBy().limit()`` — TakeOrderedAndProject, per-partition top-k
-merged in one task, never a global sort. The vector leg scans the
+groups), aggregates them per document in ONE task and takes the top 20
+with ``orderBy().limit()`` — never a global sort. The postings of a few
+terms are bounded by their document frequencies, so a shuffle's fixed
+cost (a map stage writing one file per shuffle partition, then a
+second job) would outweigh the aggregation it spreads. The vector leg scans the
 embeddings once against ONE query vector inlined as a literal array and
 takes its top 20 the same way. Both legs are collected (20 rows each)
 and fused on the driver with the same IEEE expression the catalog
 query uses; the answer is one ``documents`` scan filtered to the fused
-doc ids. A warm request runs about six Spark jobs; nothing
+doc ids. A warm request runs four Spark jobs (a by-example request
+collects its terms and its vector in one union scan); nothing
 corpus-sized is collected, re-tokenized or joined per request.
 
 Reference parity: Stage-3 "semantic search / RAG querying"
@@ -42,12 +45,13 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insurance_helper_spark.functions import bm25
 from insurance_helper_spark.functions import text as T
-from insurance_helper_spark.operators.similarity import cosine
+from insurance_helper_spark.operators.similarity import cosine_of
 from insurance_helper_spark.queries import shared_cache
 from insurance_helper_spark.sources.tables import load_table
 
@@ -141,16 +145,24 @@ def hybrid_rrf_retrieve(
     postings, emb = served.index.postings, served.emb
 
     if doc_id is not None:
-        # query-by-example: the doc's own most frequent terms
-        terms = [
-            r["term"]
-            for r in postings.where(F.col("doc_id") == doc_id)
+        # query-by-example: the doc's own most frequent terms and its
+        # vector, both point lookups collected by one union scan
+        rows = (
+            postings.where(F.col("doc_id") == doc_id)
             .where(~F.col("term").isin(*T.EN_STOPWORDS))
-            .orderBy(F.desc("tf"), "term")
-            .limit(MAX_QUERY_TERMS)
-            .select("term")
+            .select("term", "tf", F.lit(None).cast("array<double>").alias("vv"))
+            .unionByName(
+                emb.where(F.col("vec_id") == doc_id).select(
+                    F.lit(None).cast("string").alias("term"),
+                    F.lit(None).cast("long").alias("tf"),
+                    "vv",
+                )
+            )
             .collect()
-        ]
+        )
+        by_tf = sorted((-r["tf"], r["term"]) for r in rows if r["term"] is not None)
+        terms = [t for _, t in by_tf[:MAX_QUERY_TERMS]]
+        qv = next((r["vv"] for r in rows if r["vv"] is not None), None)
         if not terms:
             raise ValueError(f"doc_id {doc_id} not found or has no indexable terms")
         postings = postings.where(F.col("doc_id") != doc_id)
@@ -162,15 +174,13 @@ def hybrid_rrf_retrieve(
 
     lex = _top(
         postings.where(F.col("term").isin(*terms))
+        .coalesce(1)  # a few terms' postings: one task, no shuffle stage
         .groupBy("doc_id")
         .agg(bm25.quantized_sum(bm25.term_score(served.index)).alias("bm4")),
         F.col("bm4"),
     )
 
-    if doc_id is not None:
-        rows = served.emb.where(F.col("vec_id") == doc_id).select("vv").collect()
-        qv = rows[0]["vv"] if rows else None
-    else:
+    if doc_id is None:
         # Rocchio pseudo-relevance: centroid of the top feedback docs,
         # summed in vec_id order
         fb = lex[:FEEDBACK_DOCS]
@@ -180,10 +190,10 @@ def hybrid_rrf_retrieve(
 
     vec = []
     if qv is not None:
-        va = F.array(*[F.lit(float(x)) for x in qv])
+        qv = F.lit(np.asarray(qv, dtype=np.float64))  # one literal, one driver call
         vec = _top(
-            emb.select(F.col("vec_id").alias("doc_id"), "vv"),
-            F.round(cosine(va, F.col("vv")), 6),
+            emb.select(F.col("vec_id").alias("doc_id"), "vv", qv.alias("qv")),
+            F.round(cosine_of(spark, "qv", "vv"), 6),
         )
 
     return _answer(served.docs, _fuse(lex, vec)[: max(topn, 0)])
@@ -191,29 +201,27 @@ def hybrid_rrf_retrieve(
 
 def _answer(docs: DataFrame, fused: list[tuple[int, float, int, int]]) -> DataFrame:
     """The fused rows with their snippets: one ``documents`` scan
-    filtered to the fused doc ids, each row's ranks and score looked
-    up from a literal map keyed by doc_id."""
-    row_type = "struct<rank:int,rrf:double,lex_rank:bigint,vec_rank:bigint>"
-    if fused:
-        by_id = F.create_map(*[
-            c
-            for rank, (d, rrf, lr, vr) in enumerate(fused, start=1)
-            for c in (
-                F.lit(d).cast("long"),
-                F.struct(F.lit(rank), F.lit(rrf), F.lit(lr), F.lit(vr)).cast(row_type),
-            )
-        ])
-        hit = by_id[F.col("doc_id")]
-    else:
-        hit = F.lit(None).cast(row_type)
+    filtered to the fused doc ids, each row's rank, score and leg ranks
+    looked up by its position in literal arrays — one literal per
+    column, so building the plan costs a few driver calls, not a few
+    per row."""
+    dtypes = (np.int64, np.float64, np.int64, np.int64)
+    ids, rrf, lex_rank, vec_rank = (
+        np.array(c, dtype=t) for c, t in zip(list(zip(*fused)) or [()] * 4, dtypes)
+    )
+    pos = F.array_position(F.lit(ids), F.col("doc_id")).cast("int")  # the fused rank
+
+    def at(values: np.ndarray) -> Column:
+        return F.element_at(F.lit(values), pos)
+
     return (
-        docs.where(F.col("doc_id").isin([d for d, *_ in fused]))
+        docs.where(F.col("doc_id").isin(ids.tolist()))
         .select(
-            hit["rank"].alias("rank"),
+            pos.alias("rank"),
             "doc_id",
-            F.round(hit["rrf"], 6).alias("rrf_score"),
-            hit["lex_rank"].alias("lex_rank"),
-            hit["vec_rank"].alias("vec_rank"),
+            F.round(at(rrf), 6).alias("rrf_score"),
+            at(lex_rank).alias("lex_rank"),
+            at(vec_rank).alias("vec_rank"),
             F.substring(F.regexp_replace("text", r"\s+", " "), 1, 80).alias("snippet"),
         )
         .orderBy("rank")

@@ -41,15 +41,20 @@ def arrow_id_matrix(df: DataFrame, id_col: str, vec_col: str):
     """
     tbl = df.select(id_col, vec_col).toArrow()
     ids = tbl.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
-    col = tbl.column(vec_col).combine_chunks()
+    return ids, arrow_matrix(tbl.column(vec_col))
+
+
+def arrow_matrix(col) -> "np.ndarray":
+    """float64[n, dim] of an Arrow list column, flattened zero-copy from
+    the value buffer when every vector has the same width."""
+    col = col.combine_chunks()
     offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     widths = np.diff(offs)
     if len(widths) and (widths == widths[0]).all() and col.null_count == 0:
         flat = col.values.to_numpy(zero_copy_only=False).astype(np.float64)
-        mat = flat[offs[0] : offs[-1]].reshape(len(col), int(widths[0]))
-    else:  # ragged or null-bearing vectors: fall back to the slow path
-        mat = np.array(col.to_pylist(), dtype=np.float64)
-    return ids, mat
+        return flat[offs[0] : offs[-1]].reshape(len(col), int(widths[0]))
+    # ragged or null-bearing vectors: fall back to the slow path
+    return np.array(col.to_pylist(), dtype=np.float64)
 
 
 def unit_rows(mat: "np.ndarray") -> "np.ndarray":
@@ -78,6 +83,15 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def cosine_of(spark, a: str, b: str) -> Column:
+    """``cosine(col(a), col(b))``, built once per session: its four
+    higher-order functions cost ~0.1 s of driver round trips to build,
+    which a per-request serving path would otherwise pay every time."""
+    from insurance_helper_spark.queries.shared_cache import memo
+
+    return memo(spark, ("cosine", a, b), lambda: cosine(F.col(a), F.col(b)))
 
 
 def cosine_topk(

@@ -99,11 +99,12 @@ def _cum_cells(spark: SparkSession, sf_dir: str):
     """The cumulative development cells (cq, max_age, age, cum_cents)
     shared by the reserving queries and the LDF-selection audit —
     identical expressions to the _TRIANGLE_SQL `cum` CTE. Memoized +
-    eagerly checkpointed per (app, sf_dir) via shared_cache (r10): six
-    reserving queries consume the same triangle, and several self-join
-    it, so the orders rollup runs once per session instead of 6+ times
-    — the in-session analogue of a published triangle table."""
-    from insurance_helper_spark.queries.shared_cache import memo_checkpoint
+    eagerly checkpointed per (app, sf_dir, orders files) via
+    shared_cache (r10): six reserving queries consume the same
+    triangle, and several self-join it, so the orders rollup runs once
+    per session instead of 6+ times — the in-session analogue of a
+    published triangle table."""
+    from insurance_helper_spark.queries.shared_cache import input_files, memo_checkpoint
 
     def _o():
         orders = load_table(
@@ -157,8 +158,9 @@ def _cum_cells(spark: SparkSession, sf_dir: str):
         cohort = o.groupBy("o_custkey").agg(F.min("q").alias("cq"))
         return cohort.groupBy("cq").agg(F.count("*").cast("long").alias("n_cust"))
 
-    cum = memo_checkpoint(spark, ("actuarial_cum_cells", sf_dir), build_cum)
-    sizes = memo_checkpoint(spark, ("actuarial_cohort_sizes", sf_dir), build_sizes)
+    inputs = input_files(sf_dir, "orders")
+    cum = memo_checkpoint(spark, ("actuarial_cum_cells", sf_dir, inputs), build_cum)
+    sizes = memo_checkpoint(spark, ("actuarial_cohort_sizes", sf_dir, inputs), build_sizes)
     return cum, sizes
 
 

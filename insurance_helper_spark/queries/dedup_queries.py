@@ -18,6 +18,7 @@ from insurance_helper_spark.queries.shared_cache import (
     corpus_count,
     doc_shingles,
     doc_shingles_sized,
+    input_files,
     memo_checkpoint,
     ngram_components,
     ngram_pair_stats,
@@ -271,7 +272,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale); itself built from the memoized shingle relation.
     sig = memo_checkpoint(
         spark,
-        ("minhash_sigs", sf_dir, 3, 64),
+        ("minhash_sigs", sf_dir, 3, 64, input_files(sf_dir, "documents")),
         lambda: dedup.minhash_signatures(
             docs, "doc_id", "text", k=3, num_perm=64,
             shingles=doc_shingles(spark, sf_dir),
@@ -299,7 +300,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
     sig = memo_checkpoint(
         spark,
-        ("simhash_sigs", sf_dir),
+        ("simhash_sigs", sf_dir, input_files(sf_dir, "documents")),
         lambda: dedup.simhash_signatures(docs, "doc_id", "text"),
     )
     return dedup.simhash_pairs(
@@ -980,7 +981,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (session-scoped: the band planner shares the same relation).
     ex = memo_checkpoint(
         spark,
-        ("portable_shingles", sf_dir, 3),
+        ("portable_shingles", sf_dir, 3, input_files(sf_dir, "documents")),
         lambda: _portable_shingle_rows(docs, k=3),
     )
     # r14: the signature matrix aggregates WIDE — one groupBy(doc_id)
@@ -1305,7 +1306,9 @@ def _lev_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return memo_checkpoint(spark, ("lev_pairs", sf_dir), build)
+    return memo_checkpoint(
+        spark, ("lev_pairs", sf_dir, input_files(sf_dir, "documents")), build
+    )
 
 
 @register("dedup_fuzzy_levenshtein", FUZZY_LEV_ORACLE)
@@ -1418,7 +1421,9 @@ def _lev_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("cluster_id").cast("long"), "n_docs", "members")
         )
 
-    return memo_checkpoint(spark, ("lev_clusters", sf_dir), build)
+    return memo_checkpoint(
+        spark, ("lev_clusters", sf_dir, input_files(sf_dir, "documents")), build
+    )
 
 
 @register("dedup_cluster_connected_components", CC_ORACLE)

@@ -58,9 +58,9 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str, support: int = 1) -> Dat
     """Co-purchase edge relation (both orientations), deduplicated;
     support>=2 keeps only pairs sharing at least 2 orders (the
     strong-tie pruned graph used by the neighborhood operators).
-    Eagerly checkpointed + memoized per (app, sf_dir, support) via
-    shared_cache.memo_checkpoint."""
-    from insurance_helper_spark.queries.shared_cache import memo_checkpoint
+    Eagerly checkpointed + memoized per (app, sf_dir, support, lineitem
+    files) via shared_cache.memo_checkpoint."""
+    from insurance_helper_spark.queries.shared_cache import input_files, memo_checkpoint
 
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem", columns=["l_orderkey", "l_partkey"])
@@ -77,7 +77,9 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str, support: int = 1) -> Dat
             )
         return pairs.select("src", "dst").distinct()
 
-    return memo_checkpoint(spark, ("copurchase_edges", sf_dir, support), build)
+    return memo_checkpoint(
+        spark, ("copurchase_edges", sf_dir, support, input_files(sf_dir, "lineitem")), build
+    )
 
 PAGERANK_ORACLE = f"""
 WITH order_parts AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),

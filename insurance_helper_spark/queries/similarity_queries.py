@@ -2071,13 +2071,13 @@ def similarity_ann_frontier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-per-vector crossJoin + per-vec_id window — bit-identical
     # arithmetic, see that operator's docstring), and the mean rollup
     # reads vv straight off the kernel output instead of re-joining
-    # vecs.
+    # vecs. Each pass collects its k centroids to the driver first.
     from insurance_helper_spark.operators.vector_store import _assign as _vs_assign
+    from insurance_helper_spark.operators.vector_store import collect_quantizer
 
     def assign(base, cents, id_out):
-        return _vs_assign(
-            base, cents.select(F.col("centroid_id").alias("cell"), "cvec")
-        ).select(F.col("vec_id").alias(id_out), "cell", "vv")
+        q = collect_quantizer(cents.select(F.col("centroid_id").alias("cell"), "cvec"))
+        return _vs_assign(base, q).select(F.col("vec_id").alias(id_out), "cell", "vv")
 
     a1 = assign(vecs, seeds, "vec_id")
     cent2 = (

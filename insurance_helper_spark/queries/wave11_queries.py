@@ -123,8 +123,7 @@ FROM a2 GROUP BY cell ORDER BY cell
 @register("vector_store_assignment_census", VS_CENSUS_ORACLE)
 def vector_store_assignment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vecs(spark, sf_dir).localCheckpoint(eager=True)  # seeds + means + assign
-    cents = _elect_centroids(vecs, VS_CENSUS_K).localCheckpoint(eager=True)
-    a = _assign(vecs, cents)
+    a = _assign(vecs, _elect_centroids(vecs, VS_CENSUS_K))
     total = vecs.count()
     return (
         a.groupBy("cell")
@@ -185,8 +184,7 @@ def vector_store_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFra
     vecs = _vecs(spark, sf_dir)
     hist = vecs.where(F.col("vec_id") % 2 == 0).localCheckpoint(eager=True)
     delta = vecs.where(F.col("vec_id") % 2 == 1).localCheckpoint(eager=True)
-    cents = _elect_centroids(hist, VS_INC_K).localCheckpoint(eager=True)
-    a = _assign(delta, cents)
+    a = _assign(delta, _elect_centroids(hist, VS_INC_K))
     n_delta = delta.count()
     return (
         a.groupBy("cell")
@@ -273,11 +271,11 @@ def vector_store_occupancy_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vecs(spark, sf_dir)
     hist = vecs.where(F.col("vec_id") % 2 == 0).localCheckpoint(eager=True)
     delta = vecs.where(F.col("vec_id") % 2 == 1).localCheckpoint(eager=True)
-    cents = _elect_centroids(hist, k).localCheckpoint(eager=True)
-    bc = _assign(delta, cents).groupBy("cell").agg(
+    quantizer = _elect_centroids(hist, k)
+    bc = _assign(delta, quantizer).groupBy("cell").agg(
         F.count("*").cast("long").alias("nb")
     )
-    hc = _assign(hist, cents).groupBy("cell").agg(
+    hc = _assign(hist, quantizer).groupBy("cell").agg(
         F.count("*").cast("long").alias("nh")
     )
     m = hist.count()

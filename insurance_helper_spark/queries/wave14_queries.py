@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from insurance_helper_spark.operators.vector_store import _assign, _elect_centroids
+from insurance_helper_spark.operators.vector_store import (
+    _assign,
+    _elect_centroids,
+    centroid_frame,
+)
 from insurance_helper_spark.queries.catalog import register
 from insurance_helper_spark.queries.wave11_queries import _census_sql, _vecs
 from insurance_helper_spark.sources.tables import load_table
@@ -89,33 +93,34 @@ def _compaction_frames(spark: SparkSession, sf_dir: str) -> dict:
     r14 opt 2 (guide §2.4/§5 — reuse, don't recompute): the census and
     the apply twin each rebuilt the IDENTICAL election + assignment
     from scratch (two elections, four assignment passes per bench
-    pass). Both relations now stage once per (app, sf_dir) to
-    session-temp parquet via shared_cache.memo_checkpoint — the same
-    published-staged-relation pattern as the ngram pair table and the
-    Levenshtein cluster family, and exactly what the production store
-    does (centroids and assignments ARE persisted epoch state,
-    re-derived only on re-election). The k-row flag/target frames stay
-    per-query (one 48-row aggregate + a 48×~40 broadcast cross join)."""
+    pass). Both are now built once per session and embeddings version
+    (the input files' fingerprint is in the key): the elected quantizer
+    is a driver value (shared_cache.memo) and the assignment is staged
+    to session-temp parquet (shared_cache.memo_checkpoint) — exactly
+    what the production store does (centroids and assignments ARE
+    persisted epoch state, re-derived only on re-election). The k-row
+    flag/target frames stay per-query (one 48-row aggregate + a 48×~40
+    broadcast cross join)."""
     from insurance_helper_spark.operators.similarity import cosine
     from insurance_helper_spark.queries.shared_cache import (
         corpus_count,
+        input_files,
+        memo,
         memo_checkpoint,
     )
 
     vecs = _vecs(spark, sf_dir)
-
-    def _build_cents() -> DataFrame:
-        return _elect_centroids(
-            vecs.localCheckpoint(eager=True), VS_COMPACT_K
-        )
-
-    cents = memo_checkpoint(
-        spark, ("vs_compact_cents", sf_dir, VS_COMPACT_K), _build_cents
+    inputs = input_files(sf_dir, "embeddings")
+    quantizer = memo(
+        spark,
+        ("vs_compact_cents", sf_dir, VS_COMPACT_K, inputs),
+        lambda: _elect_centroids(vecs.localCheckpoint(eager=True), VS_COMPACT_K),
     )
+    cents = centroid_frame(spark, quantizer)
     a = memo_checkpoint(
         spark,
-        ("vs_compact_assign", sf_dir, VS_COMPACT_K),
-        lambda: _assign(vecs, cents).select("vec_id", "cell", "cos_c"),
+        ("vs_compact_assign", sf_dir, VS_COMPACT_K, inputs),
+        lambda: _assign(vecs, quantizer).select("vec_id", "cell", "cos_c"),
     )
     n_total = corpus_count(spark, sf_dir, "embeddings")
     occ = cents.join(

@@ -24,9 +24,12 @@ from pyspark.sql import functions as F
 
 from insurance_helper_spark.operators.similarity import cosine
 from insurance_helper_spark.operators.vector_store import (
+    Quantizer,
     _assign,
     _elect_centroids,
     _round4_half_up_matrix,
+    centroid_frame,
+    collect_quantizer,
 )
 
 
@@ -102,7 +105,7 @@ def test_kernel_assign_matches_reference_synthetic_with_ties(spark):
         [(c, [float(x) for x in row]) for c, row in enumerate(cents_np)],
         "cell int, cvec array<double>",
     )
-    got = _as_map(_assign(vecs, cents))
+    got = _as_map(_assign(vecs, collect_quantizer(cents)))
     want = _as_map(_assign_reference(vecs, cents))
     assert got == want
     # the duplicated-centroid tie must resolve to the LOWER cell id
@@ -115,8 +118,9 @@ def test_kernel_assign_matches_reference_fixture(spark):
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vv")
     ).localCheckpoint(eager=True)
-    cents = _elect_centroids(vecs, 8).localCheckpoint(eager=True)
-    assert _as_map(_assign(vecs, cents)) == _as_map(_assign_reference(vecs, cents))
+    q = _elect_centroids(vecs, 8)
+    cents = centroid_frame(spark, q)
+    assert _as_map(_assign(vecs, q)) == _as_map(_assign_reference(vecs, cents))
 
 
 def test_kernel_assign_rejects_ragged_vectors(spark):
@@ -127,4 +131,35 @@ def test_kernel_assign_rejects_ragged_vectors(spark):
         [(0, [1.0, 0.0])], "cell int, cvec array<double>"
     )
     with pytest.raises(Exception, match="uniform width"):
-        _assign(vecs, cents).collect()
+        _assign(vecs, collect_quantizer(cents)).collect()
+
+
+@pytest.mark.parametrize("cell_type", ["tinyint", "smallint", "int", "bigint"])
+def test_kernel_assign_keeps_every_integral_cell_type(spark, cell_type):
+    rng = np.random.default_rng(11)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(rng.normal(size=(80, 4)))],
+        "vec_id long, vv array<double>",
+    )
+    # unordered ids at the edges of the narrowest type
+    ids = [127, -128, 3, 42, 0, -7]
+    cents = spark.createDataFrame(
+        [(c, [float(x) for x in rng.normal(size=4)]) for c in ids],
+        f"cell {cell_type}, cvec array<double>",
+    )
+    got = _assign(vecs, collect_quantizer(cents))
+    assert got.schema["cell"].dataType.simpleString() == cell_type
+    assert _as_map(got) == _as_map(_assign_reference(vecs, cents))
+    assert {c for c, _ in _as_map(got).values()} <= set(ids)
+
+
+def test_kernel_assign_rejects_non_integral_cell_ids(spark):
+    cents = spark.createDataFrame(
+        [(0.0, [1.0, 0.0])], "cell double, cvec array<double>"
+    )
+    with pytest.raises(TypeError, match="integral type"):
+        collect_quantizer(cents)
+    vecs = spark.createDataFrame([(0, [1.0, 2.0])], "vec_id long, vv array<double>")
+    floats = Quantizer(np.array([0.0]), np.array([[1.0, 0.0]]))
+    with pytest.raises(TypeError, match="int8/16/32/64"):
+        _assign(vecs, floats)

@@ -161,6 +161,15 @@ def test_bm25_joinless_and_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_bm25_tokenizes_once_under_explode(spark, sf_dir):
+    # functions/bm25.build_index explodes with explode_outer + IS NOT
+    # NULL: an inner explode lets Spark infer size(toks) > 0 AND toks IS
+    # NOT NULL and copy the tokenizer chain into a Filter below the
+    # Project that computes it, tokenizing every document twice
+    df = _q("text_bm25_topk", spark, sf_dir)
+    assert audit.count_in_plan(df, "regexp_replace") == 1
+
+
 def test_quality_filter_is_shuffle_free(spark, sf_dir):
     df = _q("corpus_quality_filter", spark, sf_dir)
     plan = audit.executed_plan(df)

@@ -96,10 +96,10 @@ def test_elect_centroids_is_deterministic_and_dense(spark):
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("vv"))
     )
-    a = sorted(map(tuple, VS._elect_centroids(vecs, 8).collect()))
-    b = sorted(map(tuple, VS._elect_centroids(vecs, 8).collect()))
-    assert a == b
-    assert [c for c, _ in a] == list(range(8))
+    a = VS._elect_centroids(vecs, 8)
+    b = VS._elect_centroids(vecs, 8)
+    assert a.cells.tolist() == b.cells.tolist() and a.mat.tolist() == b.mat.tolist()
+    assert a.cells.tolist() == list(range(8))
 
 
 # --- r11 wave, part 2: hurst / energy / ewma-vol / boilerplate ---------------

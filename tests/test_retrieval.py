@@ -148,10 +148,10 @@ def test_matches_duckdb_reference(spark, reference, query):
 
 
 def test_warm_request_job_budget(spark):
-    """A warm request reads the staged index: 5 Spark jobs for free
-    text (lexical shuffle + top-20, Rocchio vectors, vector top-20,
-    snippets) and 6 by example (plus the doc's terms; its vector
-    replaces the Rocchio fetch)."""
+    """A warm request reads the staged index: 4 Spark jobs for free
+    text (lexical top-20, Rocchio vectors, vector top-20, snippets) and
+    4 by example (one union scan fetches the doc's terms and its vector
+    in place of the Rocchio fetch)."""
     sc = spark.sparkContext
     hybrid_rrf_retrieve(spark, SF_DIR, query="table", topn=TOPN).collect()
     budget = {}
@@ -163,7 +163,7 @@ def test_warm_request_job_budget(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         budget[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert budget == {"text": 5, "doc": 6}
+    assert budget == {"text": 4, "doc": 4}
 
 
 def test_non_positive_topn_returns_no_rows(spark):

@@ -73,6 +73,30 @@ class TestMemoContract:
         # the second call is a dict hit: no count job
         assert not sc.statusTracker().getJobIdsForGroup("t-count-memo")
 
+    def test_staged_relation_follows_rewritten_input(self, spark, tmp_path):
+        """Staged relations are keyed by their input files' (path, size,
+        mtime_ns): rewriting documents.parquet in place within one
+        session re-stages the Levenshtein pair relation instead of
+        serving the one built from the old texts."""
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from insurance_helper_spark.queries.dedup_queries import _lev_pairs
+
+        sf = str(tmp_path)
+        shutil.copy(f"{SF_DIR}/documents.parquet", f"{sf}/documents.parquet")
+        before = _lev_pairs(spark, sf).count()
+        docs = pq.read_table(f"{sf}/documents.parquet")
+        # every document becomes a copy of the first: one prefix bucket
+        # above the bucket cap, so no pair survives the blocking
+        same = pa.array([docs.column("text")[0].as_py()] * docs.num_rows)
+        docs = docs.set_column(docs.schema.get_field_index("text"), "text", same)
+        pq.write_table(docs, f"{sf}/documents.parquet")
+        after = _lev_pairs(spark, sf).count()
+        assert before > 0 and after != before
+
     def test_staged_relations_match_operators(self, spark):
         """The r12 rewiring claim, unit-pinned: the staged shingle /
         pair / component relations are value-identical to running the

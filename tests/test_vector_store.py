@@ -111,7 +111,7 @@ class TestIngestStream:
         assert VS.stale_fraction(spark, store) == 0.0
         # the inline reassignment stamped the same cells a direct
         # recompute under the current quantizer produces
-        cents_now = VS.read_centroids(spark, store)
+        cents_now = VS.read_quantizer(spark, store)
         direct = {
             r["vec_id"]: r["cell"]
             for r in VS._assign(vec.select("vec_id", "vv"), cents_now).collect()
@@ -154,7 +154,7 @@ def _force_new_epoch(spark, store: str) -> None:
     cents = VS._elect_centroids(
         vec.where(F.col("ingest_batch") == 2).select("vec_id", "vv"), K
     )
-    VS._write_centroids(cents, store, cur + 1)
+    VS._write_centroids(spark, cents, store, cur + 1)
 
 
 class TestMaintenance:
@@ -177,7 +177,7 @@ class TestMaintenance:
         assert VS.stale_fraction(spark, store) == 0.0
         assert vec.count() == 120 and vec.select("vec_id").distinct().count() == 120
         # upgraded cells match a direct recompute under current centroids
-        cents = VS.read_centroids(spark, store)
+        cents = VS.read_quantizer(spark, store)
         direct = {
             r["vec_id"]: r["cell"]
             for r in VS._assign(vec.select("vec_id", "vv"), cents).collect()
@@ -289,10 +289,162 @@ class TestOperatorCatalogTie:
         hist = emb.where(F.col("vec_id") % 2 == 0)
         delta = emb.where(F.col("vec_id") % 2 == 1)
         cents = VS._elect_centroids(hist, 8)
-        psi = VS.occupancy_psi(
-            VS._occupancy(VS._assign(delta, cents)),
-            VS._occupancy(VS._assign(hist, cents)),
-            8,
-        )
+
+        def occupancy(vecs):
+            return {c: n for c, (n, _) in VS._cell_stats(VS._assign(vecs, cents)).items()}
+
+        psi = VS.occupancy_psi(occupancy(delta), occupancy(hist), 8)
         assert round(psi, 9) == row["occupancy_psi"]
         assert (psi >= 0.25) == row["alarm"]
+
+
+def _numpy_topk(vv: dict[int, np.ndarray], qid: int, candidates, k: int) -> dict:
+    """Exact top-k of ``qid`` over ``candidates`` in numpy: cosine
+    rounded to 6 decimals, ties to the lower neighbour id."""
+    q = vv[qid]
+    scored = sorted(
+        (-round(float(vv[i] @ q / (np.linalg.norm(vv[i]) * np.linalg.norm(q))), 6), i)
+        for i in candidates
+        if i != qid
+    )[:k]
+    return {(qid, rk + 1): (i, -s) for rk, (s, i) in enumerate(scored)}
+
+
+def _numpy_probes(store: str, epoch: int, q: np.ndarray, n_probe: int) -> set[int]:
+    """The ``n_probe`` cells whose centroids are nearest ``q`` (the test
+    asserts a margin, so rounding cannot reorder them)."""
+    import pyarrow.parquet as pq
+
+    cents = pq.read_table(f"{store}/centroids/epoch={epoch}")
+    cells = cents.column("cell").to_pylist()
+    mat = np.array(cents.column("cvec").to_pylist())
+    cos = mat @ q / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
+    order = np.argsort(-cos)
+    assert cos[order[n_probe - 1]] - cos[order[n_probe]] > 1e-3
+    return {cells[i] for i in order[:n_probe]}
+
+
+def _search(spark, store: str, qids, k: int, n_probe: int) -> dict:
+    queries = (
+        VS.read_vector_store(spark, store)
+        .where(F.col("vec_id").isin(qids))
+        .select(F.col("vec_id").alias("query_id"), "vv")
+    )
+    return {
+        (r["query_id"], r["nn_rank"]): (r["neighbor_id"], r["cosine_sim"])
+        for r in VS.vector_store_search(spark, store, queries, k=k, n_probe=n_probe).collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def ingested(spark, tmp_path_factory):
+    """A drained store over the clustered fixture (every row current)."""
+    tmp_path = tmp_path_factory.mktemp("vs_numpy")
+    _write_batches(tmp_path)
+    _run(spark, tmp_path)
+    return str(tmp_path / "store")
+
+
+class TestSearchEqualsNumpy:
+    QIDS = [0, 100, 200]
+
+    @staticmethod
+    def _rows(spark, store):
+        return {
+            r["vec_id"]: (np.array(r["vv"]), r["cell"], r["epoch"])
+            for r in VS.read_vector_store(spark, store).collect()
+        }
+
+    def test_full_probe_three_queries(self, spark, ingested):
+        rows = self._rows(spark, ingested)
+        vv = {i: v for i, (v, _, _) in rows.items()}
+        want = {}
+        for qid in self.QIDS:
+            want.update(_numpy_topk(vv, qid, vv, 5))
+        assert _search(spark, ingested, self.QIDS, k=5, n_probe=K) == want
+
+    def test_one_probe_with_stale_rows(self, spark, ingested, tmp_path):
+        """Batch 0 relabelled under the previous epoch (the crash-window
+        shape): each query ranks its one probe cell's current rows plus
+        every stale row."""
+        store = str(tmp_path / "store")
+        shutil.copytree(ingested, store)
+        cur = VS.read_quantizer(spark, store).epoch
+        b0 = (
+            VS.read_vector_store(spark, store)
+            .where(F.col("ingest_batch") == 0)
+            .localCheckpoint(eager=True)
+        )
+        (
+            b0.select(
+                "vec_id", "vv", "cell", F.lit(cur - 1).cast("long").alias("epoch"), "ingest_batch"
+            )
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ingest_batch")
+            .parquet(f"{store}/vectors")
+        )
+        rows = self._rows(spark, store)
+        assert sum(e != cur for _, _, e in rows.values()) == 40
+        vv = {i: v for i, (v, _, _) in rows.items()}
+        want = {}
+        for qid in self.QIDS:
+            probes = _numpy_probes(store, cur, vv[qid], 1)
+            cand = [i for i, (_, c, e) in rows.items() if e != cur or c in probes]
+            want.update(_numpy_topk(vv, qid, cand, 5))
+        assert _search(spark, store, self.QIDS, k=5, n_probe=1) == want
+
+    def test_empty_query_input_returns_no_rows(self, spark, ingested):
+        got = _search(spark, ingested, [-1], k=5, n_probe=2)
+        assert got == {}
+
+
+def _last_job_id(spark, group: str) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestJobBudgets:
+    def test_ingest_search_and_reassign_job_counts(self, spark, tmp_path):
+        """Spark jobs of the three store paths on the clustered fixture.
+        The stream's micro-batches run under their own job group, so the
+        ingest is counted by job ids between two marker jobs."""
+        _write_batches(tmp_path)
+        store = str(tmp_path / "store")
+        before = _last_job_id(spark, "t-vs-ingest-before")
+        _run(spark, tmp_path)
+        after = _last_job_id(spark, "t-vs-ingest-after")
+        # 76 before the quantizer became a driver value
+        assert after - before - 1 == 34
+
+        queries = (
+            VS.read_vector_store(spark, store)
+            .where(F.col("vec_id") == 0)
+            .select(F.col("vec_id").alias("query_id"), "vv")
+        )
+        VS.vector_store_search(spark, store, queries, k=5, n_probe=2).collect()  # warm
+        _, n_search = _jobs(
+            spark,
+            "t-vs-search",
+            lambda: VS.vector_store_search(spark, store, queries, k=5, n_probe=2).collect(),
+        )
+        assert n_search <= 4  # 12 before
+
+        _force_new_epoch(spark, store)
+        n, n_reassign = _jobs(spark, "t-vs-reassign", lambda: VS.reassign_stale(spark, store))
+        assert n == 120 and n_reassign <= 5  # 12 before
