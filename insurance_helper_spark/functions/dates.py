@@ -102,16 +102,6 @@ def parse_dirty_date(col: Column, formats: tuple[str, ...] = DIRTY_DATE_FORMATS)
     return F.coalesce(*parsed)
 
 
-def financial_year_start(fy: Column) -> Column:
-    """Extract the starting calendar year from a financial-year label.
-
-    Accepts both observed styles: ``"FY 2018-19"`` (life) and
-    ``"2022-2023"`` (health). Returns INT year or NULL.
-    """
-    y = F.regexp_extract(fy, r"(\d{4})", 1)
-    return F.when(y == "", F.lit(None).cast("int")).otherwise(y.cast("int"))
-
-
 def fy_label_from_date(d: Column) -> Column:
     """Derive an Indian financial-year label (April–March) from a date.
 

@@ -11,8 +11,6 @@ semantics (storage/state.py:133-156). Re-expressed Spark-first:
   union + window argmax + aggregation (pure DataFrame ops so it runs on
   plain parquet; on a Delta/Iceberg table this is literally MERGE INTO).
 - ``resume_filter``    — C2: page-cursor resume as a predicate.
-- ``run_delta_pipeline`` — O5: the whole snapshot→anti-join→act→append
-  loop as a parameterized function, idempotent by construction.
 
 Scale: every step is a key-partitioned join or aggregation; the
 "existing keys" side at 100 TB stays a table (never a driver-side set —
@@ -20,8 +18,6 @@ the reference's in-memory ``set[str]`` does not scale; SURVEY §7).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -103,23 +99,6 @@ def resume_filter(pages: DataFrame, last_completed_page: int, page_col: str = "p
     """C2: resume = skip pages ≤ the checkpointed cursor
     (ref: state.py:115-117, cli.py:76-77). Partition-pruning-friendly."""
     return pages.filter(F.col(page_col) > last_completed_page)
-
-
-def run_delta_pipeline(
-    snapshot: DataFrame,
-    existing: DataFrame,
-    key: str,
-    act: Callable[[DataFrame], DataFrame] | None = None,
-) -> DataFrame:
-    """O5: the full incremental run — returns the acted-on new rows.
-
-    Append-side effects are the caller's (write.mode('append') /
-    foreachBatch); running twice with the same inputs yields an empty
-    second delta — the idempotence property the reference's CI cron
-    relies on.
-    """
-    new_rows = delta_new_rows(snapshot, existing, key)
-    return act(new_rows) if act else new_rows
 
 
 def aggregate_partials(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:

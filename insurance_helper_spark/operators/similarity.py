@@ -203,15 +203,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature under random hyperplanes, as array<int>."""
-    sigs = []
-    for p in planes:
-        plane_lit = F.array(*[F.lit(float(x)) for x in p])
-        sigs.append((dot(vec, plane_lit) >= 0).cast("int"))
-    return F.array(*sigs)
-
-
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
 from insurance_helper_spark.functions.dates import epoch_us
+from insurance_helper_spark.functions.ranks import cum_counts
 from insurance_helper_spark.queries.catalog import register
 from insurance_helper_spark.sources.tables import load_table
 
@@ -649,11 +650,9 @@ def events_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Recency (days since last order), Frequency (order count), Monetary
 # (total spend), each cut into quartiles by ntile over a deterministic
 # total order (metric, then custkey). Scale: one shuffle on custkey for
-# the per-customer agg; the three ntile windows run over the already-
-# reduced |customers| relation. At 1000 executors the unpartitioned
-# ntile windows single-task — acceptable only because the input is one
-# row per customer; for billions of customers swap ntile for
-# percent-rank cuts (same output, fully parallel).
+# the per-customer agg; each ntile is derived from a bucketed running
+# count over the already-reduced |customers| relation, so no window
+# sorts all customers in one task.
 # ---------------------------------------------------------------------------
 
 RFM_ORACLE = """
@@ -699,48 +698,31 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "monetary_cents"
             ),
         )
-        # feeds three rank pipelines + the count — one orders scan total
+        # feeds the three rank walks — one orders scan total
         .localCheckpoint(eager=True)
     )
-    # r15 (VERDICT r14 item 4, guide §2.5): the three global ntile
-    # windows single-tasked the |customers| relation. ntile(4) over a
-    # TOTAL order (metric, custkey) is a pure function of the row's
-    # 1-based global rank and n, so each rank is computed directly
-    # two-phase: bucket the (possibly negated) metric by a fixed width,
-    # take per-bucket counts and their exclusive prefix (a window over
-    # the tiny bucket relation), then add a within-bucket row_number
-    # ordered by (metric, custkey) — bucket order then in-bucket order
-    # IS the global order, so the rank is exact; Spark's ntile fill
-    # rule (first n%4 buckets take one extra row) is then applied
-    # arithmetically.
+    # ntile(4) over a TOTAL order (metric, custkey) is a pure function
+    # of the row's 1-based global rank and n, so each rank is the
+    # bucketed running count of functions/ranks.cum_counts over
+    # (possibly negated metric, custkey) — `__one_upto` is the row
+    # number and `__one_total` is n — and Spark's ntile fill rule
+    # (first n%4 buckets take one extra row) is applied arithmetically.
+    # Every walk's total is n; each call replaces the previous one.
     def add_rank(df: DataFrame, metric: str, desc: bool, width: int, out: str) -> DataFrame:
         v = (-F.col(metric)) if desc else F.col(metric)
-        b = F.floor(v / width)
-        # bucket counts come from the checkpointed per_cust, not the
-        # accumulating rank relation — each aggregation scans blocks
-        pfx_src = per_cust.select(b.alias("__b"))
-        w_pfx = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-        pfx = (
-            pfx_src.groupBy("__b")
-            .agg(F.count("*").alias("__c"))
-            .select(
-                "__b",
-                F.coalesce(F.sum("__c").over(w_pfx), F.lit(0)).alias("__p"),
-            )
+        walked = cum_counts(
+            df.drop("n").withColumn("__v", v), [], ["__v", "custkey"], ["__one"], width
         )
-        w_in = Window.partitionBy("__b").orderBy(v, "custkey")
         return (
-            df.withColumn("__b", b)
-            .join(F.broadcast(pfx), "__b")
-            .withColumn(out, F.col("__p") + F.row_number().over(w_in))
-            .drop("__b", "__p")
+            walked.withColumnRenamed("__one_upto", out)
+            .withColumnRenamed("__one_total", "n")
+            .drop("__v", "__one_before")
         )
 
-    ranked = add_rank(per_cust, "recency_days", False, 64, "r_rank")
+    ranked = per_cust.withColumn("__one", F.lit(1))
+    ranked = add_rank(ranked, "recency_days", False, 64, "r_rank")
     ranked = add_rank(ranked, "frequency", True, 8, "f_rank")
     ranked = add_rank(ranked, "monetary_cents", True, 1_000_000, "m_rank")
-    ncnt = per_cust.agg(F.count("*").alias("n"))
-    ranked = ranked.crossJoin(F.broadcast(ncnt))
 
     def quartile(rank_col: str) -> F.Column:
         # ntile(4): base = n div 4, rem = n % 4; the first rem buckets
@@ -778,9 +760,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # classify A (first 80% of cumulative revenue share), B (next 15%),
 # C (tail 5%). Integer-cents revenue keeps the running share exact
 # cross-engine. Scale: per-part agg co-shuffles on partkey; the
-# cumulative window runs over the reduced |parts| relation ordered by
-# revenue — single-partition at fixture SF, range-partitioned sort at
-# scale (the running sum is still one streaming pass).
+# running sum over the reduced |parts| relation ordered by revenue is
+# bucketed, so no window sorts all parts in one task.
 # ---------------------------------------------------------------------------
 
 ABC_ORACLE = """
@@ -824,39 +805,15 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
         F.sum(cents).alias("rev_cents")
     )
-    # r15 (VERDICT r14 item 4, guide §2.5): the global desc running sum
-    # single-tasked the whole |parts| relation. Direct two-phase
-    # instead: bucket the negated revenue by a fixed width, take
-    # per-bucket totals and their exclusive prefix (a window over the
-    # tiny bucket relation), then add the within-bucket inclusive
-    # running sum ordered by (neg, partkey) — bucket order then
-    # in-bucket order IS the global (rev desc, partkey) order, and
-    # every quantity is an exact integer sum, so cum_cents is
-    # byte-identical to the global walk. Parallelism becomes #buckets;
-    # the grand total rides a broadcast aggregate, not an unpartitioned
-    # window.
-    stepped = per_part.withColumn("neg", -F.col("rev_cents")).withColumn(
-        "__bkt", F.floor(F.col("neg") / 1_000_000)
-    )
-    w_pfx = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    pfx = (
-        stepped.groupBy("__bkt")
-        .agg(F.sum("rev_cents").alias("__bw"))
-        .select(
-            "__bkt",
-            F.coalesce(F.sum("__bw").over(w_pfx), F.lit(0)).alias("__pfx"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("__bkt")
-        .orderBy("neg", "partkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    total = per_part.agg(F.sum("rev_cents").alias("total_cents"))
-    cum = (
-        stepped.join(F.broadcast(pfx), "__bkt")
-        .withColumn("cum_cents", F.col("__pfx") + F.sum("rev_cents").over(w_in))
-        .crossJoin(F.broadcast(total))
+    # The desc running sum and the grand total ride the bucketed
+    # functions/ranks.cum_counts over (negated revenue, partkey): a
+    # total order, so `rev_cents_upto` is the global running sum.
+    neg = per_part.withColumn("neg", -F.col("rev_cents"))
+    cum = cum_counts(neg, [], ["neg", "partkey"], ["rev_cents"], 1_000_000).select(
+        "partkey",
+        "rev_cents",
+        F.col("rev_cents_upto").alias("cum_cents"),
+        F.col("rev_cents_total").alias("total_cents"),
     )
     classed = cum.select(
         "partkey",

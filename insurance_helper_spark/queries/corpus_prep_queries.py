@@ -914,20 +914,15 @@ ORDER BY shard_id
 
 @register("corpus_shard_manifest", SHARD_ORACLE)
 def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "n_chars"])
     sized = docs.select("doc_id", F.col("n_chars").cast("long").alias("bytes"))
-    # r15 (VERDICT r14 item 4, guide §2.5/§8): bytes_before is an
-    # EXCLUSIVE prefix sum over the unique doc_id order — exactly
-    # functions/ranks.cum_before with the byte size as the weight. The
-    # former global running-sum window sorted the whole relation in ONE
-    # task at any core count; the two-phase bucketed form (doc_id div
-    # 8192 ranges) keeps per-task work at one bucket and is
-    # byte-identical (exact integer sums, associativity only).
-    from insurance_helper_spark.functions.ranks import cum_before
+    # bytes_before is an EXCLUSIVE prefix sum over the unique doc_id
+    # order — functions/ranks.cum_counts with the byte size as the
+    # weight, bucketed by doc_id div 8192 so no task sorts more than
+    # one bucket (guide §2.5/§8).
+    from insurance_helper_spark.functions.ranks import cum_counts
 
-    walked = cum_before(sized, [], "doc_id", "bytes", 8192, out_col="bytes_before").select(
+    walked = cum_counts(sized, [], ["doc_id"], ["bytes"], 8192).select(
         "doc_id", "bytes", F.col("bytes_before").cast("long").alias("bytes_before")
     )
     assigned = walked.select(

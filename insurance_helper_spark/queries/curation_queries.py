@@ -2294,20 +2294,13 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    # r14: cumulative counts and per-flag totals come from the
-    # two-phase bucketed helper + a 3-row broadcast instead of two
-    # flag-partitioned windows over the whole value-collapsed relation
-    # (3 window partitions = 3 tasks sorting ~150k distinct cents each
-    # at sf0.1, and a non-plan at warehouse scale — guide §2.5).
-    # Identical integers, parallelism #flags × ~1.1k buckets.
-    from insurance_helper_spark.functions.ranks import cum_before
+    # Cumulative counts and per-flag totals from the two-phase bucketed
+    # walk: parallelism #flags × ~1.1k buckets instead of 3 window
+    # partitions sorting ~150k distinct cents each (guide §2.5).
+    from insurance_helper_spark.functions.ranks import cum_counts
 
-    nflag = vc.groupBy("flag").agg(F.sum("cnt").cast("long").alias("n"))
-    cum = (
-        cum_before(vc, ["flag"], "y", "cnt", 10_000)
-        .withColumn("cum_cnt", F.col("cum_before") + F.col("cnt"))
-        .join(F.broadcast(nflag), "flag")
-        .select("flag", "y", "cnt", "cum_cnt", "n")
+    cum = cum_counts(vc, ["flag"], ["y"], ["cnt"], 10_000).select(
+        "flag", "y", "cnt", F.col("cnt_upto").alias("cum_cnt"), F.col("cnt_total").alias("n")
     )
     quart = cum.groupBy("flag").agg(
         F.any_value("n").cast("long").alias("n"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from insurance_helper_spark.functions.ranks import cum_counts, with_next_value
 from insurance_helper_spark.queries.catalog import register
 from insurance_helper_spark.queries.text_queries import _TOKS
 from insurance_helper_spark.sources.tables import load_table
@@ -737,10 +738,8 @@ def stat_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an exact multiple of 0.5 below 2^52, so the label-weighted sum
     # (pos·mr, summed) is exact and order-independent, exactly like
     # the per-instance sum it replaces. b comes from the two-phase
-    # bucketed cum_before (unit-width buckets over the bounded metric
-    # domain), so no task ever sorts more than one bucket.
-    from insurance_helper_spark.functions.ranks import cum_before
-
+    # bucketed functions/ranks.cum_counts (unit-width buckets over the
+    # bounded metric domain), so no task ever sorts more than one bucket.
     vc = events.select(
         F.col("value").alias("score"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("label"),
@@ -748,10 +747,10 @@ def stat_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("c"),
         F.sum("label").cast("long").alias("pos"),
     )
-    walked = cum_before(vc, [], "score", "c", 1).select(
+    walked = cum_counts(vc, [], ["score"], ["c"], 1).select(
         "c",
         "pos",
-        ((2 * F.col("cum_before") + F.col("c") + 1) / 2.0).alias("mr"),
+        ((2 * F.col("c_before") + F.col("c") + 1) / 2.0).alias("mr"),
     )
     return walked.agg(
         F.sum("pos").cast("long").alias("n_pos"),
@@ -1393,70 +1392,32 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then ride cumulative-count windows over the triple relation's
     # marginals: doubled average rank = 2*(count below) + ties + 1.
     # No window ever sees a per-row relation.
-    # r15 (VERDICT r14 item 6): the triple relation feeds FOUR
-    # consumers (both marginal rank lookups, the per-flag totals, and
-    # the join's left side); lazily each one re-ran the full lineitem
-    # scan+aggregate (two fused passes survived r14). One eager
-    # checkpoint of the value-domain-bounded relation leaves ONE
-    # FileScan of lineitem in the whole query (guide §2.4).
+    # The triple relation feeds several consumers (the bucket rollups
+    # and the rows they join back to); lazily each one would re-run the
+    # full lineitem scan+aggregate. One eager checkpoint of the
+    # value-domain-bounded relation leaves ONE FileScan of lineitem in
+    # the whole query (guide §2.4).
     triples = (
         base.groupBy("flag", "x", "y")
         .agg(F.count("*").alias("c"))
         .localCheckpoint(eager=True)
     )
-    # r15 (VERDICT r14 item 6, continued): both doubled ranks are now
-    # computed DIRECTLY on the triple relation with RANGE frames — no
-    # marginal collapse, no join back (the y marginal was ~450k rows at
-    # sf0.1 and its shuffle join to the 600k-row triple relation was
-    # the query's dominant stage). Per marginal: bucket the value by a
-    # fixed width, take per-(flag,bucket) totals and their exclusive
-    # prefix (tiny relation, broadcast), then ONE window partitioned by
-    # (flag,bucket) with two RANGE frames over the integer value —
-    # (unboundedPreceding, -1) sums counts of STRICTLY smaller values
-    # (duplicates of the current value excluded by the range bound),
-    # (unboundedPreceding, 0) includes all peers, so
-    # ties = upto − before and r2 = 2·(prefix + before) + ties + 1
-    # = 2·prefix + before + upto + 1. Exact integer sums throughout —
-    # identical to the collapsed-marginal walk.
+    # Both doubled ranks are computed DIRECTLY on the triple relation,
+    # with no marginal collapse and join back (a ~450k-row y marginal
+    # joined to the 600k-row triples at sf0.1). functions/ranks.cum_counts
+    # per marginal: `before` sums counts of strictly smaller values, `upto`
+    # includes all peers, so ties = upto − before and
+    # r2 = 2·before + ties + 1 = before + upto + 1; `c_total` is the
+    # per-flag n. Exact integer sums throughout.
     def add_r2(df: DataFrame, val: str, width: int, out: str) -> DataFrame:
-        b = F.floor(F.col(val) / width)
-        w_pfx = (
-            Window.partitionBy("flag")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        pfx = (
-            df.select("flag", b.alias("__b"), "c")
-            .groupBy("flag", "__b")
-            .agg(F.sum("c").alias("__bw"))
-            .select(
-                "flag",
-                "__b",
-                F.coalesce(F.sum("__bw").over(w_pfx), F.lit(0)).alias("__p"),
-            )
-        )
-        w_val = Window.partitionBy("flag", "__b").orderBy(val)
-        before = F.sum("c").over(w_val.rangeBetween(Window.unboundedPreceding, -1))
-        upto = F.sum("c").over(w_val.rangeBetween(Window.unboundedPreceding, 0))
         return (
-            df.withColumn("__b", b)
-            .join(F.broadcast(pfx), ["flag", "__b"])
-            .withColumn(
-                out,
-                (
-                    2 * F.col("__p")
-                    + F.coalesce(before, F.lit(0))
-                    + upto
-                    + 1
-                ).cast("long"),
-            )
-            .drop("__b", "__p")
+            cum_counts(df, ["flag"], [val], ["c"], width)
+            .withColumn(out, (F.col("c_before") + F.col("c_upto") + 1).cast("long"))
+            .drop("c_before", "c_upto")
         )
 
-    n_by_flag = triples.groupBy("flag").agg(F.sum("c").cast("long").alias("n"))
-    ranked = add_r2(triples, "x", 8, "r2x")
-    ranked = add_r2(ranked, "y", 10_000, "r2y")
-    ranked = ranked.join(F.broadcast(n_by_flag), "flag")
+    ranked = add_r2(triples, "x", 8, "r2x").withColumnRenamed("c_total", "n")
+    ranked = add_r2(ranked, "y", 10_000, "r2y").drop("c_total")
     dx, dy = F.col("r2x") - (F.col("n") + 1), F.col("r2y") - (F.col("n") + 1)
     sums = ranked.groupBy("flag").agg(
         F.any_value("n").alias("n"),
@@ -3322,36 +3283,21 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
     )
     fy = base.groupBy("flag", "y").agg(F.count("*").alias("c"))
-    # r15 (after the r14 cum_before form): the doubled rank AND the tie
-    # correction both ride ONE bucketed window directly over the
-    # (flag, y, c) relation — the y-marginal collapse (~450k-row
-    # aggregate) and its shuffle join back (600k ⋈ 450k, the query's
-    # dominant stage) are gone. Per bucket(y): `before` = Σc over
-    # strictly smaller y (RANGE frame, sums across flags), `upto`
+    # The doubled rank AND the tie correction both ride ONE bucketed
+    # walk (functions/ranks.cum_counts) directly over the (flag, y, c)
+    # relation — no y-marginal collapse and no shuffle join back.
+    # `c_before` = Σc over strictly smaller y (across flags), `c_upto`
     # includes all peers, so tie = upto − before is the y's total count
-    # and r2y = 2·(prefix + before) + tie + 1 — identical integers.
+    # and r2y = 2·before + tie + 1 = before + upto + 1.
     # The tie cubic folds into the SAME chain:
     # Σ_y (tie³ − tie) = Σ_rows c·(tie² − 1) because Σ_{rows of y} c =
     # tie — so t3 rides the per-flag aggregate and no second relation
     # exists (guide §2.4/§2.5).
-    bkt = F.floor(F.col("y") / 10_000)
-    w_pfx = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    pfx = (
-        fy.select(bkt.alias("__b"), "c")
-        .groupBy("__b")
-        .agg(F.sum("c").alias("__bw"))
-        .select("__b", F.coalesce(F.sum("__bw").over(w_pfx), F.lit(0)).alias("__p"))
-    )
-    w_y = Window.partitionBy("__b").orderBy("y")
-    before = F.coalesce(
-        F.sum("c").over(w_y.rangeBetween(Window.unboundedPreceding, -1)), F.lit(0)
-    )
-    upto = F.sum("c").over(w_y.rangeBetween(Window.unboundedPreceding, 0))
-    ranked = (
-        fy.withColumn("__b", bkt)
-        .join(F.broadcast(pfx), "__b")
-        .withColumn("tie", upto - before)
-        .withColumn("r2y", (2 * (F.col("__p") + before) + F.col("tie") + 1).cast("long"))
+    ranked = cum_counts(fy, [], ["y"], ["c"], 10_000).select(
+        "flag",
+        "c",
+        (F.col("c_upto") - F.col("c_before")).alias("tie"),
+        (F.col("c_before") + F.col("c_upto") + 1).cast("long").alias("r2y"),
     )
     grp = ranked.groupBy("flag").agg(
         F.sum("c").cast("long").alias("ng"),
@@ -4163,28 +4109,17 @@ def ml_pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpartitioned relation (~150k distinct cents at sf0.1 took ~550 s).
     # suf_n = nn - cum_n + n and suf_pos = pp - cum_pos + pos are the
     # identical integers at O(n).
-    # r14 (guide §2.5): the O(n) running frame above still rode ONE
-    # unpartitioned window over the value-collapsed price relation (a
-    # 1-task sort at any scale) plus all-rows windows for the totals.
-    # Two-phase bucketed cum_before_multi + a broadcast 1-row total
-    # produce the identical integers: cum_n = n_before + n,
-    # suf_n = nn - n_before, suf_pos = pp - pos_before.
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    tot = vc.agg(
-        F.sum("n").cast("long").alias("nn"), F.sum("pos").cast("long").alias("pp")
-    )
-    cum = (
-        cum_before_multi(vc, [], "cents", ["n", "pos"], 10_000)
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "cents",
-            (F.col("n_before") + F.col("n")).alias("cum_n"),
-            (F.col("nn") - F.col("n_before")).alias("suf_n"),
-            (F.col("pp") - F.col("pos_before")).alias("suf_pos"),
-            "nn",
-            "pp",
-        )
+    # The running frame rides the two-phase bucketed
+    # functions/ranks.cum_counts (no 1-task sort of the value-collapsed
+    # price relation) with the totals on its bucket relation:
+    # cum_n = n_upto, suf_n = nn - n_before, suf_pos = pp - pos_before.
+    cum = cum_counts(vc, [], ["cents"], ["n", "pos"], 10_000).select(
+        "cents",
+        F.col("n_upto").alias("cum_n"),
+        (F.col("n_total") - F.col("n_before")).alias("suf_n"),
+        (F.col("pos_total") - F.col("pos_before")).alias("suf_pos"),
+        F.col("n_total").alias("nn"),
+        F.col("pos_total").alias("pp"),
     )
     cum = cum.localCheckpoint(eager=False)  # edges + confusion join
     deciles = spark.range(1, 10).select(F.col("id").alias("decile"))
@@ -4627,34 +4562,15 @@ def stat_wasserstein_hi_lo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("hi").cast("long").alias("h"),
         F.sum(1 - F.col("hi")).cast("long").alias("l"),
     )
-    # r14 (guide §2.5): ECDF cums via the two-phase bucketed
-    # cum_before_multi; the next-distinct-value lead becomes a
-    # bucket-partitioned lead patched with the next non-empty bucket's
-    # first value (tiny per-bucket min relation — the only remaining
-    # unpartitioned window is over #buckets rows). Identical values.
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    bdiv = 10_000
-    bmin = (
-        by_val.groupBy(F.floor(F.col("cents") / bdiv).alias("__b"))
-        .agg(F.min("cents").alias("__bfirst"))
-    )
-    bnext = bmin.select(
-        "__b", F.lead("__bfirst").over(Window.orderBy("__b")).alias("__nextfirst")
-    )
-    w_in = Window.partitionBy("__b").orderBy("cents")
-    walked = (
-        cum_before_multi(by_val, [], "cents", ["h", "l"], bdiv)
-        .withColumn("__b", F.floor(F.col("cents") / bdiv))
-        .join(F.broadcast(bnext), "__b")
-        .select(
-            "cents",
-            (F.col("h_before") + F.col("h")).alias("c_hi"),
-            (F.col("l_before") + F.col("l")).alias("c_lo"),
-            F.coalesce(
-                F.lead("cents").over(w_in), F.col("__nextfirst")
-            ).alias("next_cents"),
-        )
+    # ECDF cums and the next distinct value, both bucketed
+    # (functions/ranks): no window sorts the whole value relation.
+    walked = cum_counts(
+        with_next_value(by_val, "cents", 10_000), [], ["cents"], ["h", "l"], 10_000
+    ).select(
+        "cents",
+        F.col("h_upto").alias("c_hi"),
+        F.col("l_upto").alias("c_lo"),
+        "next_cents",
     )
     acc = (
         walked.where(F.col("next_cents").isNotNull())
@@ -5197,15 +5113,8 @@ def ml_mcc_threshold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     )
     by_val = arms.groupBy("cents").agg(F.count("*").cast("long").alias("cnt"))
-    # r14: median-threshold walk de-single-tasked via the two-phase
-    # bucketed cum_before + broadcast total (guide §2.5, entry-3 shape).
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    total = by_val.agg(F.sum("cnt").cast("long").alias("n"))
-    walked = (
-        cum_before(by_val, [], "cents", "cnt", 10_000)
-        .select("cents", (F.col("cum_before") + F.col("cnt")).alias("cum"))
-        .crossJoin(F.broadcast(total))
+    walked = cum_counts(by_val, [], ["cents"], ["cnt"], 10_000).select(
+        "cents", F.col("cnt_upto").alias("cum"), F.col("cnt_total").alias("n")
     )
     thr = walked.where(F.col("cum") >= F.expr("(n + 1) div 2")).agg(
         F.min("cents").alias("med")
@@ -5323,15 +5232,8 @@ def ml_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     )
     by_val = arms.groupBy("cents").agg(F.count("*").cast("long").alias("cnt"))
-    # r14: percentile-score walk de-single-tasked via the two-phase
-    # bucketed cum_before + broadcast total (guide §2.5, entry-3 shape).
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    total = by_val.agg(F.sum("cnt").cast("long").alias("n"))
-    walked = (
-        cum_before(by_val, [], "cents", "cnt", 10_000)
-        .select("cents", F.col("cum_before").alias("below"))
-        .crossJoin(F.broadcast(total))
+    walked = cum_counts(by_val, [], ["cents"], ["cnt"], 10_000).select(
+        "cents", F.col("cnt_before").alias("below"), F.col("cnt_total").alias("n")
     )
     scored = arms.join(walked, "cents").select(
         "y", F.expr("(below * 1000000) div (n - 1)").alias("s_micro")
@@ -5550,16 +5452,8 @@ def stat_kendall_tau_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     by_val = arms.groupBy("cents").agg(F.count("*").cast("long").alias("cnt"))
-    # r14: unpartitioned cumulative walk over the value-collapsed price
-    # relation → two-phase bucketed cum_before + broadcast 1-row total
-    # (guide §2.5, the entry-3 shape); identical exact integers.
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    total = by_val.agg(F.sum("cnt").cast("long").alias("n"))
-    walked = (
-        cum_before(by_val, [], "cents", "cnt", 10_000)
-        .select("cents", F.col("cum_before").alias("below"))
-        .crossJoin(F.broadcast(total))
+    walked = cum_counts(by_val, [], ["cents"], ["cnt"], 10_000).select(
+        "cents", F.col("cnt_before").alias("below"), F.col("cnt_total").alias("n")
     )
     cells = (
         arms.join(walked, "cents")
@@ -6443,14 +6337,8 @@ def stat_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = orders.groupBy(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
     ).agg(F.count("*").cast("long").alias("cnt"))
-    # r14: both exclusive walks (count + value·count) over the
-    # value-collapsed order price relation rode one unpartitioned
-    # cumulative window → two-phase bucketed cum_before_multi (guide
-    # §2.5, entry-3 shape); identical exact integers.
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    walked = cum_before_multi(
-        vals.withColumn("vc", F.col("v") * F.col("cnt")), [], "v", ["cnt", "vc"], 10_000
+    walked = cum_counts(
+        vals.withColumn("vc", F.col("v") * F.col("cnt")), [], ["v"], ["cnt", "vc"], 10_000
     ).select(
         "v",
         "cnt",
@@ -6995,26 +6883,14 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = scored.groupBy("cents").agg(
         F.count("*").cast("long").alias("c"), F.sum("ev").cast("long").alias("e")
     )
-    # r14 (guide §2.5): the descending rank walk rode ONE unpartitioned
-    # window over the value-collapsed price relation (plus all-rows
-    # totals). On the value-collapsed relation the descending INCLUSIVE
-    # cum is n - ascending exclusive prefix, so the two-phase bucketed
-    # cum_before + a broadcast total produce the identical integers.
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    tot = dv.agg(
-        F.sum("c").cast("long").alias("n"), F.sum("e").cast("long").alias("etot")
-    )
-    walk = (
-        cum_before(dv, [], "cents", "c", 10_000)
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "c",
-            "e",
-            (F.col("n") - F.col("cum_before")).cast("long").alias("cum"),
-            "n",
-            "etot",
-        )
+    # On the value-collapsed relation the descending INCLUSIVE cum is
+    # n - ascending exclusive prefix.
+    walk = cum_counts(dv, [], ["cents"], ["c", "e"], 10_000).select(
+        "c",
+        "e",
+        (F.col("c_total") - F.col("c_before")).cast("long").alias("cum"),
+        F.col("c_total").alias("n"),
+        F.col("e_total").alias("etot"),
     )
     decs = walk.select(
         F.expr("(cum * 10 + n - 1) div n").alias("decile"), "c", "e", "n", "etot"
@@ -7644,13 +7520,8 @@ def stat_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("c"),
         F.sum(F.when(F.col("diff") > 0, 1).otherwise(0)).cast("long").alias("pos"),
     )
-    # r14: unpartitioned cumulative walk over the value-collapsed
-    # abs-difference relation → two-phase bucketed cum_before (guide
-    # §2.5, entry-3 shape); identical exact integers.
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    walk = cum_before(dv, [], "ad", "c", 10_000, out_col="cb").select(
-        "ad", "c", "pos", F.col("cb").cast("long").alias("cb")
+    walk = cum_counts(dv, [], ["ad"], ["c"], 10_000).select(
+        "ad", "c", "pos", F.col("c_before").cast("long").alias("cb")
     )
     s = walk.agg(
         F.sum("c").cast("long").alias("n"),
@@ -8415,20 +8286,11 @@ def stat_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     obs = obs.localCheckpoint(eager=False)  # walk + cells share the scan
     vc = obs.groupBy("x").agg(F.count("*").cast("long").alias("n"))
-    # r14: the median walk rode ONE unpartitioned cumulative window
-    # over the value-collapsed price relation (~150k distinct cents at
-    # sf0.1, unbounded at scale — a 1-task sort, guide §2.5), plus an
-    # all-rows window for the total. Two-phase bucketed cumulative
-    # count (functions/ranks.cum_before, $100 buckets — the entry-3 /
-    # stat_weighted_median_price shape) + a broadcast 1-row total;
-    # every quantity is the same exact integer sum.
-    from insurance_helper_spark.functions.ranks import cum_before
-
-    total = vc.agg(F.sum("n").cast("long").alias("nn"))
-    walk = (
-        cum_before(vc, [], "x", "n", 10_000)
-        .select("x", (F.col("cum_before") + F.col("n")).cast("long").alias("cum"))
-        .crossJoin(F.broadcast(total))
+    # The median walk: two-phase bucketed cumulative count and total
+    # (functions/ranks.cum_counts, $100 buckets) — no window sorts the
+    # whole value-collapsed price relation.
+    walk = cum_counts(vc, [], ["x"], ["n"], 10_000).select(
+        "x", F.col("n_upto").cast("long").alias("cum"), F.col("n_total").alias("nn")
     )
     med = walk.where(F.col("cum") >= F.expr("(nn + 1) div 2")).agg(
         F.min("x").alias("median_cents")
@@ -8666,14 +8528,8 @@ def stat_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
             for g in range(1, 6)
         ]
     )
-    # r14 (guide §2.5): all five groups' exclusive walks rode ONE
-    # unpartitioned cumulative window over the value-collapsed price
-    # relation — now one two-phase bucketed cum_before_multi pass;
-    # identical exact integers (entry-3 shape).
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    walk = cum_before_multi(
-        vc, [], "x", [f"n{g}" for g in range(1, 6)], 10_000
+    walk = cum_counts(
+        vc, [], ["x"], [f"n{g}" for g in range(1, 6)], 10_000
     ).select(
         "x",
         *[F.col(f"n{g}") for g in range(1, 6)],
@@ -8796,29 +8652,22 @@ def stat_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("hi"),
     )
-    tot = arms.agg(
-        F.sum("hi").cast("long").alias("m"),
-        F.sum(1 - F.col("hi")).cast("long").alias("n"),
-    )
     by_val = arms.groupBy("cents").agg(
         F.sum("hi").cast("long").alias("h"),
         F.sum(1 - F.col("hi")).cast("long").alias("l"),
     )
-    # r14: both arms' ECDF walks de-single-tasked via the two-phase
-    # bucketed cum_before_multi (guide §2.5, entry-3 shape); identical
-    # exact integers.
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    walked = cum_before_multi(by_val, [], "cents", ["h", "l"], 10_000).select(
+    walked = cum_counts(by_val, [], ["cents"], ["h", "l"], 10_000).select(
         "h",
         "l",
-        (F.col("h_before") + F.col("h")).alias("c_hi"),
-        (F.col("l_before") + F.col("l")).alias("c_lo"),
+        F.col("h_upto").alias("c_hi"),
+        F.col("l_upto").alias("c_lo"),
+        F.col("h_total").alias("m"),
+        F.col("l_total").alias("n"),
     )
     gap = (F.col("c_hi") * F.col("n") - F.col("c_lo") * F.col("m")).cast(
         "double"
     ) / (F.col("m") * F.col("n"))
-    terms = walked.crossJoin(F.broadcast(tot)).agg(
+    terms = walked.agg(
         F.sum(
             F.round(F.lit(1e12) * (F.col("h") + F.col("l")) * (gap * gap)).cast(
                 "long"
@@ -8914,25 +8763,17 @@ def stat_kuiper_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("hi"),
     )
-    tot = arms.agg(
-        F.sum("hi").cast("long").alias("m"),
-        F.sum(1 - F.col("hi")).cast("long").alias("n"),
-    )
     by_val = arms.groupBy("cents").agg(
         F.sum("hi").cast("long").alias("h"),
         F.sum(1 - F.col("hi")).cast("long").alias("l"),
     )
-    # r14: both arms' ECDF walks rode ONE unpartitioned cumulative
-    # window over the value-collapsed price relation (guide §2.5) —
-    # now the two-phase bucketed cum_before_multi, one shared pass,
-    # identical exact integers (entry-3 shape).
-    from insurance_helper_spark.functions.ranks import cum_before_multi
-
-    walked = cum_before_multi(by_val, [], "cents", ["h", "l"], 10_000).select(
-        (F.col("h_before") + F.col("h")).alias("c_hi"),
-        (F.col("l_before") + F.col("l")).alias("c_lo"),
+    walked = cum_counts(by_val, [], ["cents"], ["h", "l"], 10_000).select(
+        F.col("h_upto").alias("c_hi"),
+        F.col("l_upto").alias("c_lo"),
+        F.col("h_total").alias("m"),
+        F.col("l_total").alias("n"),
     )
-    gaps = walked.crossJoin(F.broadcast(tot)).agg(
+    gaps = walked.agg(
         F.max(F.col("c_hi") * F.col("n") - F.col("c_lo") * F.col("m"))
         .cast("long")
         .alias("d_plus_num"),

@@ -504,13 +504,10 @@ def stat_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = vals.groupBy("v").agg(
         F.count("*").cast("long").alias("c"), F.sum("hi").cast("long").alias("ch")
     )
-    # r14: unpartitioned cumulative walk over the value-collapsed order
-    # price relation → two-phase bucketed cum_before (guide §2.5, the
-    # entry-3 shape); identical exact integers.
-    from insurance_helper_spark.functions.ranks import cum_before
+    from insurance_helper_spark.functions.ranks import cum_counts
 
-    walk = cum_before(cells, [], "v", "c", 10_000, out_col="cum").select(
-        "v", "c", "ch", F.col("cum").cast("long").alias("cum")
+    walk = cum_counts(cells, [], ["v"], ["c"], 10_000).select(
+        "v", "c", "ch", F.col("c_before").cast("long").alias("cum")
     )
     agg = walk.agg(
         F.sum("ch").cast("long").alias("n1"),

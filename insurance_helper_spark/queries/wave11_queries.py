@@ -779,51 +779,27 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("hi"),
     )
-    tot = arms.agg(
-        F.sum("hi").cast("long").alias("n_hi"),
-        F.sum(1 - F.col("hi")).cast("long").alias("n_lo"),
-    )
     by_val = arms.groupBy("cents").agg(
         F.sum("hi").cast("long").alias("h"),
         F.sum(1 - F.col("hi")).cast("long").alias("l"),
     )
-    # r14 (guide §2.5): the ECDF walk AND the next-distinct-value lead
-    # rode unpartitioned windows over the value-collapsed price
-    # relation. The cums convert to the two-phase bucketed
-    # cum_before_multi; the lead becomes a bucket-partitioned lead
-    # whose per-bucket last row is patched with the NEXT non-empty
-    # bucket's first value (from the tiny per-bucket min relation — the
-    # only remaining unpartitioned window is over #buckets rows, the
-    # same bound as cum_before's phase 2). Identical values: the patch
-    # is exactly the next distinct cents, null only at the global max.
-    from insurance_helper_spark.functions.ranks import cum_before_multi
+    # ECDF cums, arm totals and the next distinct value, all bucketed
+    # (functions/ranks): no window sorts the whole value relation.
+    from insurance_helper_spark.functions.ranks import cum_counts, with_next_value
 
-    bdiv = 10_000
-    bmin = (
-        by_val.groupBy(F.floor(F.col("cents") / bdiv).alias("__b"))
-        .agg(F.min("cents").alias("__bfirst"))
-    )
-    bnext = bmin.select(
-        "__b", F.lead("__bfirst").over(Window.orderBy("__b")).alias("__nextfirst")
-    )
-    w_in = Window.partitionBy("__b").orderBy("cents")
-    walked = (
-        cum_before_multi(by_val, [], "cents", ["h", "l"], bdiv)
-        .withColumn("__b", F.floor(F.col("cents") / bdiv))
-        .join(F.broadcast(bnext), "__b")
-        .select(
-            "cents",
-            (F.col("h_before") + F.col("h")).alias("c_hi"),
-            (F.col("l_before") + F.col("l")).alias("c_lo"),
-            F.coalesce(
-                F.lead("cents").over(w_in), F.col("__nextfirst")
-            ).alias("next_cents"),
-        )
+    walked = cum_counts(
+        with_next_value(by_val, "cents", 10_000), [], ["cents"], ["h", "l"], 10_000
+    ).select(
+        "cents",
+        F.col("h_upto").alias("c_hi"),
+        F.col("l_upto").alias("c_lo"),
+        F.col("h_total").alias("n_hi"),
+        F.col("l_total").alias("n_lo"),
+        "next_cents",
     )
     gap = F.col("next_cents") - F.col("cents")
     acc = (
         walked.where(F.col("next_cents").isNotNull())
-        .join(F.broadcast(tot))
         .agg(
             F.sum(F.col("c_hi") * (F.col("n_hi") - F.col("c_hi")) * gap)
             .cast("long")

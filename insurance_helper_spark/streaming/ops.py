@@ -2,7 +2,7 @@
 
 Streaming re-expressions of the engine's batch shapes:
 
-- watermarked tumbling/sliding window aggregation
+- watermarked tumbling window aggregation
 - session windows per key
 - stateful stream dedup (dropDuplicatesWithinWatermark)
 - the incremental O5 pipeline as Trigger.AvailableNow over a file
@@ -50,21 +50,6 @@ def tumbling_counts(
         .groupBy(F.window(ts_col, window).alias("w"), group_col)
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), group_col, "n_events", "total_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "12 hours",
-    slide: str = "6 hours",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
 

@@ -35,6 +35,12 @@ TOP = [
     "stat_spearman_corr",
     "graph_pagerank_iterations",
     "similarity_cosine_topk",  # BLAS scale path, for contrast with the exact twin
+    # two-phase bucketed walks (functions/ranks.cum_counts): does the
+    # bucket-prefix overhead pay off by sf1?
+    "customer_rfm_segments",
+    "part_abc_classification",
+    "stat_kruskal_wallis",
+    "stat_mood_median_test",
 ]
 
 SF01 = "/root/testdata/sf0.1"
