@@ -15,7 +15,8 @@ Layout:
                    incremental, topk).
 - ``sources``    — table loaders, the paginated-HTTP scrape source, binary
                    (multimodal) ingestion.
-- ``streaming``  — structured-streaming operators (windows, stateful dedup).
+- ``streaming``  — structured-streaming operators (interval and enrichment
+                   joins, corpus ingest, drift gate).
 - ``queries``    — the query catalog backing ``__spark_entry__.py``.
 """
 

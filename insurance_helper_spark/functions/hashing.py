@@ -117,9 +117,6 @@ def hash_family_sql(key_expr: str, seed: int) -> str:
     return f"xor(({x}), ({x}) >> 16)"
 
 
-SHA_PREFIX_BITS = 48  # 12 hex chars -> [0, 2^48): fits int64, exact in double
-
-
 def sha_prefix_long(col: Column) -> Column:
     """Portable STRING hash: the first 12 hex chars of sha2-256 parsed
     as an integer in [0, 2^48). xxhash64 differs between engines, but

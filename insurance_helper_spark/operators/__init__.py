@@ -1,7 +1,6 @@
 from insurance_helper_spark.operators import (
     corpus,
     dedup,
-    grouped,
     incremental,
     scd,
     similarity,
@@ -10,6 +9,6 @@ from insurance_helper_spark.operators import (
 )
 
 __all__ = [
-    "corpus", "dedup", "grouped", "incremental", "scd", "similarity",
+    "corpus", "dedup", "incremental", "scd", "similarity",
     "skew", "state",
 ]

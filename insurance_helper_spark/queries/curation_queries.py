@@ -1851,7 +1851,7 @@ def ops_file_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ops_zorder_locality_audit — measures WHY multi-dimensional
 # clustering works: quantize orders to a 256×256 (price, date) grid,
 # lay the occupied cells out in Z-order (Morton bit-interleave — the
-# same curve sources/maintenance.py's z-order writer uses), and
+# curve an OPTIMIZE ZORDER BY rewrite sorts on), and
 # compare the average Manhattan jump between CONSECUTIVE cells
 # against the lexicographic (sort-by-price-then-date) layout. Z-order
 # keeps both dimensions local (small jumps → range scans on either

@@ -1911,14 +1911,13 @@ FROM gap
 @register("stat_ks_two_sample", KS_ORACLE)
 def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(
-        spark, sf_dir, "orders", columns=["o_orderpriority", "o_orderkey", "o_totalprice"]
+        spark, sf_dir, "orders", columns=["o_orderpriority", "o_totalprice"]
     )
     arms = orders.select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.when(
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
         ).otherwise(0).alias("hi"),
-        "o_orderkey",
     )
     tot = arms.agg(
         F.sum("hi").cast("long").alias("n_hi"),

@@ -2,10 +2,12 @@
 
 The driver's oracle is batch DuckDB SQL, so these register the
 batch-equivalent computations (Spark's window/session_window functions
-produce identical results in batch mode). The true Structured Streaming
-versions — readStream, watermarks, dropDuplicatesWithinWatermark,
-AvailableNow — live in ``insurance_helper_spark/streaming/`` and are
-exercised by tests/test_streaming.py with a rate-limited file source.
+produce identical results in batch mode). The Structured Streaming
+operators that the interval-join and enrichment queries call — the
+watermarked stream–stream interval join and the stream–static
+enrichment join — live in ``insurance_helper_spark/streaming/ops.py``
+and are exercised as real streams by tests/test_streaming.py over a
+file source.
 """
 
 from __future__ import annotations
@@ -156,13 +158,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Batch twin of the custom applyInPandasWithState operator
-# (streaming/ops.py::user_running_state): the per-user summary the
-# stateful accumulator emits at idle-timeout equals this full-history
-# aggregate when every user has gone idle (end of stream).
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
 # Batch twins of the stream–stream interval join and the stream–static
 # enrichment join (streaming/ops.py::interval_join / enrich_with_dim).
 # Both call the REAL operator: withWatermark is a no-op on batch inputs
@@ -192,7 +187,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view→click correlation within 30 minutes per user — the
     impression→click shape. Scale: the join key is (user_id), the range
     predicate prunes within the key's bucket; in streaming mode the same
-    operator bounds state with two watermarks (streaming/ops.py:234)."""
+    operator bounds state with two watermarks (streaming/ops.py::interval_join)."""
     from insurance_helper_spark.streaming.ops import interval_join
 
     ev = load_table(spark, sf_dir, "events", columns=["event_id", "user_id", "ts", "event_type"])
@@ -223,7 +218,7 @@ ORDER BY e.event_id
 @register("stream_enrich_dim", ENRICH_DIM_ORACLE)
 def stream_enrich_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream–static enrichment: every event joined to its customer dim
-    row via the broadcast left join (streaming/ops.py:225). Left join
+    row via the broadcast left join (streaming/ops.py::enrich_with_dim). Left join
     keeps events whose dim row is missing (user 0 has no customer) —
     late dim loads must not drop facts."""
     from insurance_helper_spark.streaming.ops import enrich_with_dim
@@ -254,7 +249,7 @@ ORDER BY user_id
 
 @register("stream_user_state", USER_STATE_ORACLE)
 def stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running session state over the event stream (count/sum/last-seen), the batch twin of the stateful-stream operator."""
+    """Per-user running session state over the event stream (count/sum/last-seen), the full-history summary a stateful per-user accumulator emits once every user has gone idle."""
     ev = load_table(spark, sf_dir, "events", columns=["user_id", "ts", "value"]).filter(
         F.col("user_id") <= 50
     )

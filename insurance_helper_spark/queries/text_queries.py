@@ -547,13 +547,10 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_burst_terms — batch twin of streaming/ops.trending_terms_stream:
-# the corpus is split into history (doc_id < split) and delta, each
-# side's term counts aggregated, and delta terms scored with the SAME
-# burst ratio the stream uses (delta_cnt / (hist_cnt + smoothing)),
-# top-k by (burst, count, term). Gives the trending-terms component
-# value-checked oracle evidence alongside its streaming e2e tests —
-# the batch-twin pattern every foreachBatch operator here follows.
+# text_burst_terms — trending-term burst detection: the corpus is split
+# into history (doc_id < split) and delta, each side's term counts
+# aggregated, and delta terms scored with a smoothed burst ratio
+# (delta_cnt / (hist_cnt + smoothing)), top-k by (burst, count, term).
 # Scale: two term aggregations (map-side combined) + one left join on
 # the term key; the top-k is a single-partition window over the
 # DELTA's vocabulary only (bounded by the delta, not the corpus).
@@ -591,8 +588,8 @@ ORDER BY rank
 
 @register("text_burst_terms", BURST_ORACLE)
 def text_burst_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of trending_terms_stream (streaming/ops.py) — same
-    burst ratio, deterministic history/delta split on doc_id."""
+    """Trending-term bursts: smoothed delta/history count ratio over a
+    deterministic history/delta split on doc_id."""
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])

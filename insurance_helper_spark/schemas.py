@@ -1,57 +1,14 @@
-"""Declared schemas: bronze product tables, state/checkpoint tables,
-download task/result relations.
+"""Declared schemas: per-product-type parse guards, state/checkpoint
+tables, the download result relation and the parsed-row relation.
 
 The reference declares each table twice — column order in
 ``PAGE_CONFIGS[..].columns`` (config.py:49-125) and field types in the
-Pydantic models (models.py:22-66). Here each is ONE StructType; bronze
-keeps everything string (even dirty dates — SURVEY §1.2), a silver
-layer adds typed columns via ``functions.dates``.
+Pydantic models (models.py:22-66). Here each is ONE StructType.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-
-def _string_struct(*names: str) -> T.StructType:
-    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-
-
-# Bronze product tables (ref: config.py:49-125; all-string per
-# csv_writer.py:44-51, scraped_at appended per :53-54).
-
-LIFE_SCHEMA = _string_struct(
-    "archive_status", "financial_year", "insurer", "product_name", "uin",
-    "type_of_product", "launch_modification_date", "closing_withdrawal_date",
-    "protection_savings_retirement", "par_nonpar", "individual_group",
-    "remarks", "document_url", "document_filename", "local_file_path",
-    "r2_url", "scraped_at",
-)
-
-LIFE_LIST_SCHEMA = _string_struct(
-    "archive_status", "short_description", "last_updated", "sub_title",
-    "document_url", "document_filename", "local_file_path", "r2_url",
-    "scraped_at",
-)
-
-NONLIFE_SCHEMA = _string_struct(
-    "s_no", "financial_year", "insurer", "product_name", "type_of_product",
-    "uin", "date_of_approval", "document_url", "document_filename",
-    "local_file_path", "r2_url", "archive_status", "scraped_at",
-)
-
-HEALTH_SCHEMA = _string_struct(
-    "financial_year", "insurer", "uin", "product_name", "date_of_approval",
-    "document_url", "document_filename", "local_file_path", "r2_url",
-    "type_of_product", "archive_status", "scraped_at",
-)
-
-PRODUCT_SCHEMAS: dict[str, T.StructType] = {
-    "life": LIFE_SCHEMA,
-    "life_list": LIFE_LIST_SCHEMA,
-    "nonlife": NONLIFE_SCHEMA,
-    "health": HEALTH_SCHEMA,
-}
 
 # Minimum cell arity per product type (F1 guards — life.py:23-24 etc.)
 MIN_CELLS = {"life": 13, "life_list": 5, "nonlife": 9, "health": 8}
@@ -88,14 +45,8 @@ FAILED_DOWNLOADS_SCHEMA = T.StructType([
     T.StructField("last_attempt", T.TimestampType(), True),
 ])
 
-# Download task/result relations (ref: models.py:69-89).
+# Download result relation (ref: models.py:69-89).
 
-DOWNLOAD_TASK_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("destination", T.StringType(), True),
-    T.StructField("product_type", T.StringType(), True),
-    T.StructField("uin", T.StringType(), True),
-])
 
 DOWNLOAD_RESULT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),

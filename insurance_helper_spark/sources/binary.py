@@ -196,152 +196,3 @@ def pdf_text_extract(binaries: DataFrame, extractor=None) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in PDF_TEXT_SCHEMA])
 
     return binaries.select("path", "content").mapInPandas(run, schema=PDF_TEXT_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("target_w", T.IntegerType(), True),
-        T.StructField("target_h", T.IntegerType(), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("length", T.LongType(), True),
-        T.StructField("resize_error", T.StringType(), True),
-    ]
-)
-
-
-def resize_images(
-    binaries: DataFrame, width: int, height: int, decode_stub: bool = True
-) -> DataFrame:
-    """Image-resize plumbing over binary blobs (mapInPandas).
-
-    Real decode/resample (PIL) is not in this container, so the stub
-    produces a deterministic surrogate: sha256-keyed bytes of exactly
-    width×height×3 length, so downstream stages (batch shapes, size
-    accounting, partition sizing) exercise realistic payload sizes.
-    ``decode_stub=False`` marks where PIL plugs in and converts the
-    NotImplementedError into a per-row error (never a task failure).
-
-    Scale: same no-blob-shuffle contract as extract_features — resized
-    output is written/consumed in the same pass wherever possible.
-    """
-    from insurance_helper_spark.shipping import ensure_shipped
-
-    ensure_shipped(binaries.sparkSession)
-    out_len = width * height * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                row = {
-                    "path": path, "target_w": width, "target_h": height,
-                    "content": None, "length": None, "resize_error": None,
-                }
-                try:
-                    if not decode_stub:
-                        raise NotImplementedError(
-                            "real image resize (PIL) not available in this "
-                            "container; pass decode_stub=True"
-                        )
-                    seed = hashlib.sha256(bytes(content)).digest()
-                    reps = out_len // len(seed) + 1
-                    row["content"] = (seed * reps)[:out_len]
-                    row["length"] = out_len
-                except Exception as ex:
-                    row["resize_error"] = str(ex)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA])
-
-    return binaries.select("path", "content").mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-ARCHIVE_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("archive_format", T.StringType(), True),
-        T.StructField("member", T.StringType(), True),
-        T.StructField("member_size", T.LongType(), True),
-        T.StructField("member_crc", T.LongType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def archive_manifest(binaries: DataFrame) -> DataFrame:
-    """Explode archive blobs into per-member manifest rows — a REAL
-    decode path (stdlib zipfile/tarfile/gzip, no external libs), unlike
-    the image/audio stubs: (path, archive_format, member, member_size,
-    member_crc, error).
-
-    Same 100 TB stance as extract_features: blobs never shuffle — the
-    archive is opened inside the mapInPandas pass that scanned it, and
-    only small manifest rows flow downstream. Corrupt or non-archive
-    inputs become error ROWS (the engine-wide F3 contract), never task
-    failures. CRC comes free from the zip central directory; tar has
-    none (null).
-    """
-    import gzip
-    import io
-    import tarfile
-    import zipfile
-
-    from insurance_helper_spark.shipping import ensure_shipped
-
-    ensure_shipped(binaries.sparkSession)
-
-    def one(path: str, content: bytes) -> list[dict]:
-        buf = io.BytesIO(content)
-        try:
-            if content[:4] == b"PK\x03\x04":
-                with zipfile.ZipFile(buf) as zf:
-                    return [
-                        {
-                            "path": path, "archive_format": "zip",
-                            "member": zi.filename, "member_size": zi.file_size,
-                            "member_crc": zi.CRC, "error": None,
-                        }
-                        for zi in zf.infolist()
-                    ] or [{"path": path, "archive_format": "zip", "member": None,
-                           "member_size": None, "member_crc": None, "error": None}]
-            if content[:2] == b"\x1f\x8b":
-                try:
-                    with tarfile.open(fileobj=buf, mode="r:gz") as tf:
-                        return [
-                            {
-                                "path": path, "archive_format": "tar.gz",
-                                "member": m.name, "member_size": m.size,
-                                "member_crc": None, "error": None,
-                            }
-                            for m in tf.getmembers()
-                        ]
-                except tarfile.TarError:
-                    buf.seek(0)
-                    raw = gzip.decompress(buf.read())
-                    return [{"path": path, "archive_format": "gzip",
-                             "member": None, "member_size": len(raw),
-                             "member_crc": None, "error": None}]
-            if len(content) > 262 and content[257:262] == b"ustar":
-                with tarfile.open(fileobj=buf, mode="r:") as tf:
-                    return [
-                        {"path": path, "archive_format": "tar", "member": m.name,
-                         "member_size": m.size, "member_crc": None, "error": None}
-                        for m in tf.getmembers()
-                    ]
-            return [{"path": path, "archive_format": None, "member": None,
-                     "member_size": None, "member_crc": None,
-                     "error": "not an archive"}]
-        except Exception as ex:  # corrupt archive → error row (F3)
-            return [{"path": path, "archive_format": None, "member": None,
-                     "member_size": None, "member_crc": None, "error": str(ex)}]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(one(path, bytes(content)))
-            yield pd.DataFrame(rows, columns=[f.name for f in ARCHIVE_MANIFEST_SCHEMA])
-
-    return binaries.select("path", "content").mapInPandas(
-        run, schema=ARCHIVE_MANIFEST_SCHEMA
-    )

@@ -1,86 +1,16 @@
-"""Table-maintenance operators: compaction + multi-dimensional
-clustering (the lakehouse OPTIMIZE / ZORDER BY pair).
+"""Table maintenance: compaction (the lakehouse OPTIMIZE rewrite).
 
-At 100 TB the dominant operational failure modes of a parquet table are
-(a) small-file explosion from incremental appends and (b) scans that
-can't skip row groups because the data is clustered on nothing. These
-two operators are the standard maintenance response:
-
-- ``compact``: rewrite a directory into N right-sized files.
-- ``zorder_value`` + ``compact_clustered``: interleave the bits of two
-  normalized sort keys so files/row-groups become axis-aligned boxes in
-  (a, b) space — min/max footer stats then prune scans filtered on
-  EITHER key, not just the primary sort key. (On Delta/Iceberg this is
-  OPTIMIZE ... ZORDER BY; here it's the engine-level equivalent over
-  plain parquet.)
-
-Everything is expression-level (bit shifts fold into whole-stage
-codegen); the only shuffle is the one repartitionByRange that the
-rewrite needs anyway.
+At 100 TB a dominant operational failure mode of a parquet table is
+small-file explosion from incremental appends. ``compact`` rewrites a
+directory into N right-sized files, optionally range-clustered on a
+sort key so footer min/max stats stay selective. The multi-key
+(z-order) clustering argument is measured by the registered
+``ops_zorder_locality_audit`` query, which computes its own curve.
 """
 
 from __future__ import annotations
 
-import functools
-
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-Z_BITS = 21  # 2 interleaved 21-bit keys fit a 42-bit non-negative long
-
-
-def _normalize_to_bits(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
-    """Min-max normalize a numeric column into [0, 2^bits). Constant
-    columns (max == min) map to 0."""
-    span = (cmax - cmin).cast("double")
-    scaled = F.when(
-        span > 0.0,
-        ((col.cast("double") - cmin.cast("double")) / span) * float(2**bits - 1),
-    ).otherwise(F.lit(0.0))
-    return F.round(scaled).cast("long")
-
-
-def zorder_value(a_bits: Column, b_bits: Column, bits: int = Z_BITS) -> Column:
-    """Interleave two ``bits``-wide longs: z = ...b1 a1 b0 a0.
-
-    A pure fold of shift/mask terms — stays inside whole-stage codegen,
-    no UDF. Locality property: sorting by z gives runs that are tight
-    boxes in (a, b), which is what makes footer min/max stats selective
-    on both columns.
-    """
-    terms = []
-    for i in range(bits):
-        terms.append(F.shiftleft(F.shiftright(a_bits, i).bitwiseAND(F.lit(1)), 2 * i))
-        terms.append(
-            F.shiftleft(F.shiftright(b_bits, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return functools.reduce(lambda x, y: x.bitwiseOR(y), terms)
-
-
-def with_zorder(
-    df: DataFrame, col_a: str, col_b: str, out_col: str = "__z"
-) -> DataFrame:
-    """Attach the z-order key for (col_a, col_b).
-
-    The min/max needed for normalization come from one tiny aggregate
-    broadcast back via crossJoin — a single extra pass, no driver
-    collect in the plan.
-    """
-    bounds = df.agg(
-        F.min(col_a).alias("__amin"),
-        F.max(col_a).alias("__amax"),
-        F.min(col_b).alias("__bmin"),
-        F.max(col_b).alias("__bmax"),
-    )
-    z = zorder_value(
-        _normalize_to_bits(F.col(col_a), F.col("__amin"), F.col("__amax"), Z_BITS),
-        _normalize_to_bits(F.col(col_b), F.col("__bmin"), F.col("__bmax"), Z_BITS),
-    )
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn(out_col, z)
-        .drop("__amin", "__amax", "__bmin", "__bmax")
-    )
+from pyspark.sql import DataFrame
 
 
 def compact(
@@ -99,25 +29,3 @@ def compact(
     else:
         out = df.repartition(n_files)
     out.write.mode("overwrite").format(fmt).save(path)
-
-
-def compact_clustered(
-    df: DataFrame,
-    path: str,
-    n_files: int,
-    col_a: str,
-    col_b: str,
-    fmt: str = "parquet",
-) -> None:
-    """OPTIMIZE+ZORDER: rewrite as n_files files clustered on the
-    z-order curve of (col_a, col_b); the helper key is dropped from the
-    persisted schema."""
-    zed = with_zorder(df, col_a, col_b)
-    (
-        zed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )

@@ -202,26 +202,3 @@ def upload_files(
             )
 
     return files_df.select(path_col, key_col).mapInPandas(run, schema=schema)
-
-
-def write_verified(df, path: str, fmt: str = "parquet", mode: str = "overwrite") -> bool:
-    """Write + read-back verification — the reference's
-    upload-then-verify contract (ref upload_file :64-87).
-
-    An existence check alone is vacuous (the committer creates the
-    output directory even for an empty/failed write, and _SUCCESS is
-    absent under the object-store committer configs s3a_conf targets),
-    so verification is a count round-trip: the persisted relation must
-    contain exactly the rows the input produced. Costs one scan of the
-    freshly written files — the price of the verify, same as the
-    reference's post-upload HEAD."""
-    spark = df.sparkSession
-    df = df.localCheckpoint(eager=True)  # pin the input row count
-    expected = df.count()
-    getattr(df.write.mode(mode), fmt)(path)
-    actual = getattr(spark.read, fmt)(path).count()
-    if actual != expected:
-        raise RuntimeError(
-            f"write verification failed: {path} has {actual} rows, expected {expected}"
-        )
-    return True

@@ -48,7 +48,6 @@ _PAGES_COUNT_RE = re.compile(
     rb"/Type\s*/Pages\b[^>]*?/Count\s+(\d+)|/Count\s+(\d+)[^>]*?/Type\s*/Pages\b",
     re.S,
 )
-_FLATE_RE = re.compile(rb"/(?:Filter\s*/FlateDecode|FlateDecode)")
 _FILTER_RE = re.compile(rb"/Filter\s*(?:/(\w+)|\[([^\]]*)\])")
 # a direct /Length N (not an indirect "/Length 12 0 R" reference)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")

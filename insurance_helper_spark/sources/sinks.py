@@ -8,17 +8,10 @@
   own header and the CSV reader skips them per-file. The reader maps
   columns by position, though, so an append must follow the table's
   existing header: ``bronze_csv_header`` reads it on the driver.
-- Partitioned parquet sink — the physical realization of K3's
-  ``downloads/{type}/{FY}/{Insurer}/...`` path synthesis
-  (downloader/file_manager.py:70-114): ``write.partitionBy`` gives the
-  same layout plus partition pruning on read.
-- JSON sink/roundtrip — state-file-shaped records (storage/state.py:49-83)
-  as line-delimited JSON, the Spark-native exchange format.
+- JSON sink — state-file-shaped records (storage/state.py:49-83) as
+  line-delimited JSON, the Spark-native exchange format.
 
-Scale: all writers are executor-side and embarrassingly parallel; the
-partition columns are chosen low-cardinality (product_type, year) so a
-100 TB write produces wide files per partition rather than millions of
-tiny ones. ``maxRecordsPerFile`` guards the opposite failure mode.
+Scale: all writers are executor-side and embarrassingly parallel.
 """
 
 from __future__ import annotations
@@ -86,71 +79,6 @@ def bronze_csv_header(path: str) -> list[str] | None:
     return None
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    max_records_per_file: int = 5_000_000,
-) -> None:
-    """K3's layout as a physical partitioned write. Partition pruning on
-    read is the scan-side payoff (PartitionFilters in the plan)."""
-    (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_cols)
-        .format(fmt)
-        .save(path)
-    )
-
-
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Line-delimited JSON sink (state-record exchange format)."""
     df.write.mode(mode).json(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — the columnar alternative for Hive-ecosystem consumers.
-
-    Same pushdown/pruning properties as parquet on the read side
-    (PushedFilters appear in the scan); useful where the downstream
-    warehouse is ORC-native. Executor-side and embarrassingly parallel
-    like every writer here.
-    """
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def read_text(spark: SparkSession, path: str, whole: bool = False) -> DataFrame:
-    """Raw text source: one row per line (or per file with ``whole``) —
-    the ingest shape for unstructured corpus files feeding the text/
-    dedup operators."""
-    return spark.read.text(path, wholetext=whole)
-
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet directory written by SEVERAL schema versions with
-    schema merging: columns added over time come back as one unified
-    schema, with nulls where an older file lacks the column — the
-    append-only table-evolution contract a long-lived bronze layer
-    needs (the reference recreates its CSVs wholesale; an engine
-    cannot). mergeSchema reads every file's footer (a metadata pass,
-    not a data pass); at 100 TB prefer declaring the CURRENT schema
-    explicitly and letting parquet's by-name column resolution null-fill
-    older files — this helper is the discovery path.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)

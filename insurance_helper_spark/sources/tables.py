@@ -24,11 +24,6 @@ FIXTURE_TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins at any
-# scale factor (region: 5 rows, nation: 25 rows — fixed-size dims in the
-# TPC-H model, independent of SF).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, columns: list[str] | None = None

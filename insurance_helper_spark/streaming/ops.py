@@ -1,27 +1,23 @@
 """Structured Streaming operators (SURVEY §2B streaming group).
 
-Streaming re-expressions of the engine's batch shapes:
+- stream–static enrichment (``enrich_with_dim``) and the watermarked
+  stream–stream interval join (``interval_join``) that the batch
+  ``stream_*`` queries mirror
+- streaming corpus ingest (``corpus_ingest_stream``): quality gates and
+  in-/cross-batch dedup under Trigger.AvailableNow over a file source —
+  the reference's monthly delta cron becomes "process whatever arrived
+  since the last checkpoint, then stop"
+  (ref: scripts/delta_download.py:167-211, scrape.yml:4-6)
+- the PSI drift gate (``drift_gate_stream``) over per-file term partials
 
-- watermarked tumbling window aggregation
-- session windows per key
-- stateful stream dedup (dropDuplicatesWithinWatermark)
-- the incremental O5 pipeline as Trigger.AvailableNow over a file
-  source — the reference's monthly delta cron becomes "process
-  whatever arrived since the last checkpoint, then stop"
-  (ref: scripts/delta_download.py:167-211, scrape.yml:4-6).
-
-All functions take/return streaming DataFrames and never start queries
-themselves except the ``run_*`` helpers, which tests use with a
-temp checkpoint + memory/parquet sink.
+``read_event_stream`` and ``run_to_memory`` are the file-source and
+memory-sink helpers the streaming tests drive these operators with.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (  # protobuf-free import
-    StatefulProcessor as _StatefulProcessor,
-)
 
 
 def read_event_stream(
@@ -33,76 +29,6 @@ def read_event_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(path)
-
-
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked tumbling-window counts; late rows beyond the
-    watermark are dropped (the streaming semantics the batch query
-    ``stream_tumbling_window`` mirrors)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), group_col)
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), group_col, "n_events", "total_value")
-    )
-
-
-def session_aggregate(
-    events: DataFrame,
-    gap: str = "2 hours",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Session windows with dynamic gap — Spark's native stateful
-    session operator (batch twin: ``stream_session_windows``)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), key_col)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            key_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def stream_dedup(
-    events: DataFrame, keys: list[str], watermark: str = "1 hour", ts_col: str = "ts"
-) -> DataFrame:
-    """Stateful dedup bounded by the watermark: duplicate keys arriving
-    within the watermark horizon are dropped; state is GC'd past it —
-    the property that makes exactly-once dedup feasible at 100 TB/day
-    (an unbounded dropDuplicates would grow state forever)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def run_available_now(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    output_path: str,
-    output_mode: str = "append",
-) -> None:
-    """O5 as Trigger.AvailableNow: drain everything new since the last
-    checkpoint into parquet, then stop. Idempotent across reruns — the
-    checkpoint is the 'existing CSV' of the reference's delta job."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", output_path)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_to_memory(
@@ -117,203 +43,6 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-
-
-def user_running_state(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    idle_timeout: str = "2 hours",
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running activity accumulator with idle-timeout flush.
-
-    Spark's built-in session_window emits only windowed aggregates;
-    this operator keeps ARBITRARY per-key state (count, value sum,
-    first/last seen) and emits one summary row when a user goes idle
-    past ``idle_timeout`` (event-time timeout driven by the watermark)
-    — the applyInPandasWithState shape any bespoke stateful pipeline
-    (fraud scoring, per-host crawl budgets, sessionized feature
-    extraction) plugs into.
-
-    Scale: state lives in the state store, partitioned by user —
-    thousands of executors each hold a shard; the watermark bounds
-    state lifetime so the store cannot grow unboundedly.
-
-    Input schema is FIXED (``ts``/``user_id``/``value`` — the
-    events-table shape); rename upstream with ``select`` to adapt
-    other sources.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-            T.StructField("first_seen", T.TimestampType()),
-            T.StructField("last_seen", T.TimestampType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("first_ts", T.LongType()),
-            T.StructField("last_ts", T.LongType()),
-        ]
-    )
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            n, total, first_us, last_us = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "first_seen": [pd.Timestamp(first_us, unit="us")],
-                    "last_seen": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-            return
-        n, total, first_us, last_us = (state.get if state.exists else (0, 0.0, None, None))
-        for pdf in pdf_iter:
-            ts_us = (pdf["ts"].astype("int64") // 1000).tolist()
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            first_us = min([u for u in [first_us, *ts_us] if u is not None])
-            last_us = max([u for u in [last_us, *ts_us] if u is not None])
-        state.update((n, total, first_us, last_us))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + _duration_ms(idle_timeout))
-        return
-        yield  # pragma: no cover — keeps fn a generator on the flush-free path
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def _duration_ms(spec: str) -> int:
-    qty, unit = spec.split()
-    mult = {"second": 1_000, "seconds": 1_000, "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000, "day": 86_400_000, "days": 86_400_000}[unit]
-    return int(qty) * mult
-
-
-def running_zscore_anomalies(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    min_history: int = 5,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Streaming twin of the batch ``events_rolling_zscore`` query:
-    per-user online anomaly scoring with Welford running mean/variance
-    state (n, mean, M2 — O(1) per key, no sample buffer).
-
-    Input schema is FIXED: ``(event_id long, ts timestamp, user_id
-    long, value double, ...)`` — the events-table shape. The column
-    names are baked into the pandas kernel, its sort keys, and the
-    output schema; rename upstream with ``select`` to adapt other
-    sources (parameterizing the names here would silently break the
-    kernel, which is why there are no ts_col/key_col arguments).
-
-    Each event is scored against the state accumulated from STRICTLY
-    EARLIER events (trailing semantics, matching the batch twin's
-    trailing frame), then folded into the state. Events inside one
-    microbatch are processed in (ts, event_id) order, so replaying the
-    same files through AvailableNow is deterministic.
-
-    Scale: state is three scalars per user in the state store,
-    partitioned by user across executors; the watermark only gates
-    late data (state never times out — it IS the model). For drifting
-    streams swap Welford for an EWMA fold: same operator shape.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("zscore", T.DoubleType()),
-            T.StructField("anomaly", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("mean", T.DoubleType()),
-            T.StructField("m2", T.DoubleType()),
-        ]
-    )
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        out: dict[str, list] = {"event_id": [], "value": [], "zscore": [], "anomaly": []}
-        # Concatenate ALL Arrow chunks before the single sort: a group
-        # larger than arrow.maxRecordsPerBatch arrives as several
-        # chunks, and per-chunk sorting would fold the Welford state in
-        # chunk order, not global (ts, event_id) order.
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        merged_pdf = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        )
-        if len(merged_pdf):
-            for row in merged_pdf.sort_values(["ts", "event_id"]).itertuples(index=False):
-                v = float(row.value)
-                # Score against history BEFORE folding this event in.
-                sd = (m2 / (n - 1)) ** 0.5 if n >= 2 else 0.0
-                if n >= min_history and sd > 0:
-                    z = (v - mean) / sd
-                    out["zscore"].append(round(z, 4))
-                    out["anomaly"].append(bool(abs(z) > z_threshold))
-                else:
-                    out["zscore"].append(None)
-                    out["anomaly"].append(False)
-                out["event_id"].append(int(row.event_id))
-                out["value"].append(round(v, 4))
-                # Welford fold.
-                n += 1
-                delta = v - mean
-                mean += delta / n
-                m2 += delta * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out["event_id"]),
-                "event_id": out["event_id"],
-                "value": out["value"],
-                "zscore": pd.array(out["zscore"], dtype="float64"),
-                "anomaly": out["anomaly"],
-            }
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
@@ -488,8 +217,7 @@ def read_ingested_corpus(
     The ingest stream writes ``ingest_batch`` as a directory partition
     key; partition-column type inference would hand it back as INT,
     which breaks any union with the LONG the pipeline stamps
-    (PARQUET_COLUMN_DATA_TYPE_MISMATCH — the same hazard the trending
-    snapshot guards against). An explicit read schema overrides the
+    (PARQUET_COLUMN_DATA_TYPE_MISMATCH). An explicit read schema overrides the
     inference, so every layout ever written reads back identically."""
     return spark.read.schema(schema + ", ingest_batch long").parquet(corpus_dir)
 
@@ -500,220 +228,6 @@ def read_ingested_fingerprints(spark, fingerprints_dir: str) -> DataFrame:
     return spark.read.schema("fingerprint string, ingest_batch long").parquet(
         fingerprints_dir
     )
-
-
-def continuous_rollup_stream(
-    stream_events: DataFrame,
-    minute_dir: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    watermark: str = "10 minutes",
-) -> None:
-    """Streaming half of the hypertable/continuous-aggregate pattern
-    (batch twin: queries/analytics_ext.events_rollup_hourly): 1-minute
-    partial aggregates stream into a parquet table in APPEND mode —
-    each minute window is written exactly once, when the watermark
-    finalizes it — and coarser rollups (hour, day) derive from the
-    partials by re-aggregation, never rescanning raw events.
-
-    At 100 TB/day this is the only shape that works: raw events are
-    write-once cold storage, the minute table is ~1e4× smaller, and
-    every dashboard window is a sum over partials. Append-only
-    finalized windows also make the table idempotently rebuildable —
-    the checkpoint guarantees each window lands once.
-    """
-    from pyspark.sql import functions as F
-
-    minutes = (
-        stream_events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 minute").alias("w"), F.col(type_col))
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("bucket_min"),
-            type_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-    q = (
-        minutes.writeStream.format("parquet")
-        .option("checkpointLocation", checkpoint_dir)
-        .option("path", minute_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def hourly_from_minute_partials(spark, minute_dir: str) -> DataFrame:
-    """Derive the hourly rollup from streamed minute partials
-    (sum-of-sums / sum-of-counts — associativity is the contract)."""
-    from pyspark.sql import functions as F
-
-    minutes = spark.read.parquet(minute_dir)
-    return (
-        minutes.groupBy(
-            F.date_trunc("hour", "bucket_min").alias("bucket_hour"), "event_type"
-        )
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").alias("sum_value"),
-        )
-        .orderBy("bucket_hour", "event_type")
-    )
-
-
-def trending_terms_stream(
-    spark,
-    input_dir: str,
-    counts_dir: str,
-    trending_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string, lang string, source string, n_chars long",
-    top_k: int = 10,
-    smoothing: int = 5,
-) -> None:
-    """Streaming trending-terms detector: each micro-batch's term
-    counts are scored against the MAINTAINED historical vocabulary
-    (burst ratio = batch_count / (historical_count + smoothing)), the
-    per-batch top-k snapshot is appended to ``trending_dir``, and the
-    batch counts are merged into the cumulative counts table — the
-    mergeable-partials pattern (operators/incremental) driven from
-    foreachBatch, Trigger.AvailableNow.
-
-    foreachBatch rather than a stateful operator for the same reason as
-    corpus_ingest_stream: the vocabulary table must be queryable by
-    batch jobs and survives restarts as plain parquet. Scale: the
-    vocabulary is |terms|-sized (millions of rows at web scale — a
-    normal shuffle join against the batch delta); the trending window
-    is a top-k over the DELTA's vocabulary only.
-
-    Replay safety is CONTENT-based, not batch-id-based: batch ids are
-    only meaningful within one checkpoint lineage, so a guard that
-    compares them against a persisted marker silently drops data when
-    the checkpoint is lost but ``counts_dir`` survives (restarted low
-    batch ids would be skipped → permanent undercount). Instead the
-    counts table holds per-INPUT-FILE term partials, partitioned by a
-    key derived from the file name (``src_key``); every write is a
-    dynamic partition overwrite of exactly its own files' partitions,
-    so replaying a batch — in ANY lineage, with ANY batch id — rewrites
-    identical partitions instead of double-merging. The top-k snapshot
-    is likewise partitioned by a hash of the batch's file list
-    (``snap_key``), so replays rewrite rather than append. Partition
-    keys carry a letter prefix so parquet partition-column inference
-    can never flip them to a numeric type. The cumulative vocabulary is
-    the sum over partials (``trending_vocabulary``) — the mergeable-
-    partials pattern (operators/incremental); a periodic compaction of
-    old partitions into one keeps the file count bounded at scale.
-    """
-    import hashlib
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from insurance_helper_spark.functions import text as T
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        staged = batch_df.withColumn("_src", F.input_file_name())
-        # File list is bounded by maxFilesPerTrigger — driver-safe.
-        files = sorted(r[0] for r in staged.select("_src").distinct().collect())
-        if not files:
-            return
-        snap_key = "s" + hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
-        src_key = F.concat(F.lit("f"), F.substring(F.sha2(F.col("_src"), 256), 1, 16))
-        # sha2 (column) and hashlib.sha256 (driver) agree on hex prefix.
-        batch_keys = ["f" + hashlib.sha256(f.encode()).hexdigest()[:16] for f in files]
-        partials = (
-            staged.select("_src", F.explode(T.tokens(F.col("text"))).alias("term"))
-            .groupBy(src_key.alias("src_key"), "term")
-            .agg(F.count("*").alias("cnt"))
-        )
-        # One tokenize pass feeds both the snapshot and the counts write.
-        partials = partials.localCheckpoint(eager=True)
-        batch_counts = partials.groupBy("term").agg(F.sum("cnt").alias("batch_cnt"))
-        from pyspark.errors import AnalysisException
-
-        try:
-            hist_partials = spark_b.read.parquet(counts_dir)
-        except AnalysisException:
-            # First batch: table not created yet. ONLY the analysis
-            # error is absorbed — a corrupt/unreadable table must fail
-            # the batch, not silently reset history.
-            hist_partials = None
-        if hist_partials is not None:
-            # Exclude THIS batch's partitions (present iff replaying),
-            # so a replay scores against exactly the history the
-            # original run saw, plus any manifest-listed dead partitions
-            # (replays of already-compacted files — their counts live in
-            # the compacted partition). Partition pruning makes this a
-            # metadata-only filter. One caveat: replaying a file AFTER
-            # its partials were folded rescored it against a history
-            # that already contains its own counts, so its snapshot is
-            # recomputed-as-of-now rather than bit-stable; the counts
-            # table stays exact either way.
-            folded, current = _read_manifest(spark_b, counts_dir)
-            dead = sorted(k for k in folded if k not in batch_keys)
-            hist = (
-                _live_filter(hist_partials, set(dead), current)
-                .filter(~F.col("src_key").isin(batch_keys))
-                .groupBy("term")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            scored = batch_counts.join(hist, "term", "left").withColumn(
-                "hist_cnt", F.coalesce(F.col("cnt"), F.lit(0)).cast("long")
-            )
-        else:
-            scored = batch_counts.withColumn("hist_cnt", F.lit(0).cast("long"))
-        scored = scored.select(
-            "term",
-            "batch_cnt",
-            "hist_cnt",
-            F.round(
-                F.col("batch_cnt") / (F.col("hist_cnt") + F.lit(smoothing)), 4
-            ).alias("burst"),
-        )
-        top = (
-            scored.withColumn(
-                "rank",
-                F.row_number().over(W.orderBy(F.desc("burst"), F.desc("batch_cnt"), "term")),
-            )
-            .filter(F.col("rank") <= top_k)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("snap_key", F.lit(snap_key))
-        )
-        # Dynamic partition overwrite on the CONTENT key: a replayed
-        # batch (any lineage) rewrites its own snapshot partition.
-        (
-            top.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("snap_key")
-            .parquet(trending_dir)
-        )
-        # Same for the counts: only this batch's file partitions are
-        # touched; history partitions are never rewritten, so there is
-        # no read-then-overwrite cycle on the same data.
-        (
-            partials.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_key")
-            .parquet(counts_dir)
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 _FOLDED_DIR = "_compaction"  # leading underscore: invisible to parquet reads
@@ -770,7 +284,7 @@ def _live_filter(df, folded, current):
 
 def trending_vocabulary(spark, counts_dir: str) -> DataFrame:
     """Cumulative term counts from the per-file partials that
-    trending_terms_stream maintains: sum over ``src_key`` partitions —
+    drift_gate_stream maintains: sum over ``src_key`` partitions —
     the read half of the mergeable-partials contract. One shuffle on
     the term key. Partials listed in the compaction manifest are
     EXCLUDED (their counts live inside the current compacted
@@ -785,352 +299,6 @@ def trending_vocabulary(spark, counts_dir: str) -> DataFrame:
     return df.groupBy("term").agg(F.sum("cnt").alias("cnt"))
 
 
-def _append_manifest(spark, counts_dir: str, rows) -> None:
-    """The compaction COMMIT POINT: one single-file parquet append that
-    declares a new compacted generation and the keys folded into it.
-    Factored out so crash-window tests can fail it deliberately."""
-    import os
-
-    spark.createDataFrame(rows, "src_key string, new_key string").coalesce(
-        1
-    ).write.mode("append").parquet(os.path.join(counts_dir, _FOLDED_DIR))
-
-
-def _delete_partitions(spark, counts_dir: str, keys) -> None:
-    """Drop partition dirs via the Hadoop FS API (storage-agnostic)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for k in keys:
-        p = jvm.org.apache.hadoop.fs.Path(f"{counts_dir}/src_key={k}")
-        fs = p.getFileSystem(hconf)
-        fs.delete(p, True)
-
-
-def compact_term_partials(spark, counts_dir: str) -> int:
-    """Maintenance job: fold every live per-file partition, plus the
-    current compacted generation, into ONE fresh ``src_key=c{n+1}``
-    partition; COMMIT by appending the folded keys + new generation to
-    the manifest; then delete the folded partition directories.
-    Returns the number of live partitions folded.
-
-    CRASH-SAFE BY CONSTRUCTION (r7 ADVICE): the merge is staged under a
-    key that is never part of the read set, and the single manifest
-    append is the only commit point —
-    - crash BEFORE the manifest: the staged c{n+1} partition is
-      unmanifested, so every reader excludes it (``_live_filter``) and
-      a re-run overwrites it from the same still-live inputs;
-    - crash AFTER the manifest: readers already see exactly the new
-      generation; the re-run finds no live keys and only sweeps the
-      now-dead directories.
-    Either way counts are exact at every intermediate state and
-    re-running converges — no read-then-overwrite cycle exists, so no
-    localCheckpoint snapshot is needed. Replay safety is unchanged: a
-    checkpoint-loss replay of an already-folded input file rewrites its
-    (deleted) partition, which stays manifest-excluded dead weight
-    until the next compaction sweeps it. At scale this is the parquet
-    analog of a log-structured merge: O(files) partials between
-    compactions, one bounded aggregation per compaction."""
-    from pyspark.sql import functions as F
-    import re
-
-    folded, current = _read_manifest(spark, counts_dir)
-    df = spark.read.parquet(counts_dir)
-    keys = {r[0] for r in df.select("src_key").distinct().collect()}
-    comp = re.compile(_COMPACTED_RE)
-    # Crashed staging outputs + superseded generations (never counted).
-    stale = {k for k in keys if comp.match(k) and k != current}
-    # Post-compaction replays of already-folded input files.
-    dead = {k for k in keys if k in folded and not comp.match(k)}
-    live = sorted(k for k in keys if k not in folded and not comp.match(k))
-    if not live:
-        _delete_partitions(spark, counts_dir, sorted(stale | dead))
-        return 0
-    merge_keys = live + ([current] if current in keys else [])
-    new_key = f"c{int(current[1:]) + 1}" if current else _COMPACTED_KEY
-    merged = (
-        df.filter(F.col("src_key").isin(merge_keys))
-        .groupBy("term")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("src_key", F.lit(new_key))
-    )
-    # Stage the new generation (dynamic overwrite replaces any stale
-    # staging dir a crashed prior attempt left under the same key).
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("src_key")
-        .parquet(counts_dir)
-    )
-    _append_manifest(spark, counts_dir, [(k, new_key) for k in merge_keys])
-    _delete_partitions(
-        spark, counts_dir, sorted((set(merge_keys) | stale | dead) - {new_key})
-    )
-    return len(live)
-
-
-def scd2_maintenance_stream(
-    spark,
-    updates_dir: str,
-    dim_dir: str,
-    checkpoint_dir: str,
-    key: str,
-    tracked: list[str],
-    schema: str,
-    effective_col: str = "effective_date",
-) -> None:
-    """CDC-style streaming SCD2 maintenance: micro-batches of dimension
-    updates flow through ``operators.scd.scd2_merge`` against the
-    persisted dimension table — the change-data-capture pipeline that
-    keeps a versioned dim current as updates stream in
-    (Trigger.AvailableNow: one cron drain per feed drop).
-
-    Per micro-batch: collapse the batch to its LATEST update per key
-    (window argmax on effective date — scd2_merge expects one update
-    per key), merge against the current dim parquet, rewrite. The
-    rewrite touches |dim| rows; at 100 TB partition the dim on the key
-    and rewrite only matched partitions (the merge itself already
-    isolates untouched keys to a pass-through branch).
-
-    First batch bootstraps the dim from the updates themselves (every
-    key inserts).
-
-    Replay safety: scd2_merge suppresses no-op updates (tracked values
-    equal to the current row produce no new version), so a replayed
-    batch — crash after the dim rewrite but before the checkpoint
-    commit — merges the same updates into a dim that already reflects
-    them and rewrites it unchanged. Verified by
-    test_streaming::TestScd2Stream::test_replay_is_noop.
-    """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from insurance_helper_spark.operators.scd import scd2_merge
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        w = W.partitionBy(key).orderBy(F.desc(effective_col))
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        try:
-            dim = spark_b.read.parquet(dim_dir)
-        except AnalysisException:
-            dim = None  # bootstrap (only missing-table absorbed)
-        if dim is None:
-            merged = latest.select(
-                F.col(key),
-                *[F.col(t) for t in tracked],
-                F.col(effective_col).alias("valid_from"),
-                F.lit(None).cast("date").alias("valid_to"),
-                F.lit(True).alias("is_current"),
-            )
-        else:
-            merged = scd2_merge(dim, latest, key=key, tracked=tracked,
-                                effective_col=effective_col)
-        # Cut the read-then-overwrite cycle on dim_dir.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(dim_dir)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(updates_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-class TopKProcessor(_StatefulProcessor):
-    """StatefulProcessor for user_topk_state, defined at module level
-    so its state-fold logic is unit-testable with a fake handle even
-    where the transformWithState RUNTIME (protobuf) is unavailable.
-    State: (tops array<double>, n long)."""
-
-    def __init__(self, k: int) -> None:
-        self._k = k
-
-    def state_schema(self):
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            [
-                T.StructField("tops", T.ArrayType(T.DoubleType())),
-                T.StructField("n", T.LongType()),
-            ]
-        )
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("topk", self.state_schema())
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (user_id,) = key
-        if self._state.exists():
-            tops, n = self._state.get()
-            tops = list(tops)
-        else:
-            tops, n = [], 0
-        for pdf in rows:
-            vals = pdf["value"].astype(float).tolist()
-            n += len(vals)
-            tops = sorted(tops + vals, reverse=True)[: self._k]
-        self._state.update((tops, n))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "top_values": [tops], "n_seen": [n]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_topk_state(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    k: int = 3,
-) -> DataFrame:
-    """Per-user running top-k values on the NEW state API
-    (transformWithStateInPandas, Spark 4 state processor v2) — the
-    successor to applyInPandasWithState the engine's other custom
-    stateful ops use. Demonstrates the StatefulProcessor lifecycle
-    (init → getValueState → handleInputRows → close) with typed,
-    individually-evolvable state variables instead of one packed tuple.
-
-    Emits one row per user per micro-batch containing the post-batch
-    top-k (descending) — the "current leaderboard" shape. State is the
-    k-element list per key: O(k) per user, store-partitioned.
-
-    Input schema is FIXED (``ts``/``user_id``/``value`` — the
-    events-table shape); rename upstream with ``select`` to adapt
-    other sources.
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (ships with ``pyspark[connect]``; absent in
-    minimal containers — the test suite skips there, and
-    ``user_running_state`` above provides the same capability tier on
-    the v1 applyInPandasWithState API with no extra dependency).
-    """
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("top_values", T.ArrayType(T.DoubleType())),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TopKProcessor(k),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-def event_type_topk_spacesaving(
-    events: DataFrame, capacity: int = 8, shards: int = 4
-) -> DataFrame:
-    """Streaming heavy hitters via the SpaceSaving algorithm (Metwally
-    et al. 2005) as a custom stateful operator: each shard (user_id %
-    shards — a partitioning key, so counter state is distributed, not
-    a single hot task) maintains at most ``capacity`` (item, count,
-    err) counters; an unseen item evicts the minimum counter and
-    inherits its count as its error bound. Emits the full counter
-    snapshot per shard per micro-batch; a downstream batch merge sums
-    counts and errs per item (SpaceSaving counters are mergeable with
-    additive error). Guarantees: est_count >= true_count and
-    est_count - err <= true_count — pinned by tests; with capacity >=
-    distinct items the sketch is exact. The constant-size-state
-    alternative to the exact streaming rollup when the item domain is
-    unbounded; the batch CMS heavy-hitters row carries the
-    oracle-backed twin of this guarantee tier.
-
-    Scale: state is O(shards * capacity) regardless of stream volume;
-    each micro-batch folds rows in (ts, event_id) order so replays
-    are deterministic.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("shard", T.LongType()),
-            T.StructField("item", T.StringType()),
-            T.StructField("est_count", T.LongType()),
-            T.StructField("err", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("counts", T.ArrayType(T.LongType())),
-            T.StructField("errs", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fn(key, pdf_iter, state: GroupState):
-        (shard,) = key
-        if state.exists:
-            items, counts, errs = state.get
-            items, counts, errs = list(items), list(counts), list(errs)
-        else:
-            items, counts, errs = [], [], []
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        merged = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        if len(merged):
-            for row in merged.sort_values(["ts", "event_id"]).itertuples(index=False):
-                it = str(row.event_type)
-                if it in items:
-                    counts[items.index(it)] += 1
-                elif len(items) < capacity:
-                    items.append(it)
-                    counts.append(1)
-                    errs.append(0)
-                else:
-                    # Evict the minimum counter (ties: first slot —
-                    # deterministic given the fold order).
-                    j = min(range(len(counts)), key=lambda k: (counts[k], k))
-                    errs[j] = counts[j]
-                    counts[j] = counts[j] + 1
-                    items[j] = it
-        state.update((items, counts, errs))
-        yield pd.DataFrame(
-            {
-                "shard": [shard] * len(items),
-                "item": items,
-                "est_count": pd.array(counts, dtype="int64"),
-                "err": pd.array(errs, dtype="int64"),
-            }
-        )
-
-    return (
-        events.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def drift_gate_stream(
     spark,
     input_dir: str,
@@ -1143,8 +311,8 @@ def drift_gate_stream(
 ) -> None:
     """Streaming distribution-drift gate: each micro-batch's term
     distribution is PSI-scored against the MAINTAINED historical
-    vocabulary (the same mergeable per-file term partials
-    trending_terms_stream keeps), and a one-row drift report is written
+    vocabulary (mergeable per-file term partials, read back through
+    trending_vocabulary), and a one-row drift report is written
     per batch — the gate a training-data ingest pipeline puts in front
     of "did today's crawl change character?".
 
@@ -1159,19 +327,17 @@ def drift_gate_stream(
     "significant shift" line). The first batch (empty history) reports
     psi NULL / alarm false / note 'baseline_empty'.
 
-    Replay safety follows the judge-established content-key contract
-    (see trending_terms_stream): term partials are partitioned by a
-    hash of the input FILE name, reports by a hash of the batch's file
-    list, and every write is a dynamic partition overwrite of exactly
-    its own content partitions — replaying a batch in ANY checkpoint
-    lineage rewrites identical data instead of double-merging. A
-    replayed batch's baseline is "all partials except its own
-    partitions": for the latest batch that is exactly the history the
-    original run saw (bit-identical report); an EARLIER batch replayed
-    after later files were ingested is rescored against as-of-now
-    history — same caveat as trending_terms_stream's snapshots; the
-    counts table stays exact either way. Compaction-manifest handling
-    matches trending_vocabulary.
+    Replay safety follows the content-key contract: term partials are
+    partitioned by a hash of the input FILE name, reports by a hash of
+    the batch's file list, and every write is a dynamic partition
+    overwrite of exactly its own content partitions — replaying a batch
+    in ANY checkpoint lineage rewrites identical data instead of
+    double-merging. A replayed batch's baseline is "all partials except
+    its own partitions": for the latest batch that is exactly the
+    history the original run saw (bit-identical report); an EARLIER
+    batch replayed after later files were ingested is rescored against
+    as-of-now history; the counts table stays exact either way.
+    Compaction-manifest handling matches trending_vocabulary.
 
     Scale: the vocabulary is |terms|-sized (normal shuffle join against
     the batch delta); the bucket spine is top_v + 1 rows (broadcast);

@@ -207,9 +207,7 @@ class TestProbeAndStorage:
             downloader=lambda url: b"%PDF-1.4",
         )
         assert rc == 0
-        from insurance_helper_spark.sources import sinks
-
-        manifest = sinks.read_json(spark, str(tmp_path / "d" / "object_manifest" / "nonlife"))
+        manifest = spark.read.json(str(tmp_path / "d" / "object_manifest" / "nonlife"))
         rows = {r["object_key"]: r["content_type"] for r in manifest.collect()}
         assert rows and all(k.startswith("nonlife/") for k in rows)
         assert "application/pdf" in rows.values()

@@ -1,46 +1,7 @@
-"""Grouped vectorized ops (applyInPandas model fit) + approx frequent
-items — the split-apply-combine and sketch corners of the surface."""
+"""Approx frequent items and stratified sampling — the sketch and
+sampling corners of the surface."""
 
 from __future__ import annotations
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from insurance_helper_spark.operators import grouped
-
-
-def test_grouped_linear_fit_matches_numpy(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from insurance_helper_spark.functions import text as T
-
-    feats = docs.select(
-        "source",
-        T.token_count(F.col("text")).cast("double").alias("x"),
-        F.length("text").cast("double").alias("y"),
-    )
-    got = {
-        r["source"]: r.asDict()
-        for r in grouped.grouped_linear_fit(feats, "source", "x", "y").collect()
-    }
-    pdf = feats.toPandas()
-    for src, sub in pdf.groupby("source"):
-        a, b = np.polyfit(sub["x"], sub["y"], 1)
-        assert got[src]["n"] == len(sub)
-        assert got[src]["slope"] == pytest.approx(float(a), rel=1e-9)
-        assert got[src]["intercept"] == pytest.approx(float(b), rel=1e-9)
-        assert 0.0 <= got[src]["r2"] <= 1.0
-
-
-def test_grouped_linear_fit_degenerate_group(spark):
-    df = spark.createDataFrame(
-        [("g1", 1.0, 2.0), ("g2", 3.0, 1.0), ("g2", 3.0, 5.0)],
-        "k string, x double, y double",
-    )
-    rows = {r["k"]: r for r in grouped.grouped_linear_fit(df, "k", "x", "y").collect()}
-    assert rows["g1"]["slope"] is None and rows["g1"]["n"] == 1
-    # zero x-variance → NULL fit, no exception
-    assert rows["g2"]["slope"] is None and rows["g2"]["n"] == 2
 
 
 def test_freq_items_sketch_covers_exact_heavy_hitters(spark, sf_dir):

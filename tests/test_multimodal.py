@@ -92,72 +92,3 @@ def test_pdf_text_extract_injected_extractor(spark, blob_dir):
         blobs, extractor=lambda b: (f"{len(b)} bytes", 3)
     ).collect()[0]
     assert out["n_pages"] == 3 and out["text"].endswith("bytes")
-
-
-def test_resize_stub_shapes_and_determinism(spark, blob_dir):
-    blobs = binary.read_binary_dir(spark, str(blob_dir), glob="*.png")
-    out1 = binary.resize_images(blobs, 8, 6).collect()[0]
-    out2 = binary.resize_images(blobs, 8, 6).collect()[0]
-    assert out1["length"] == 8 * 6 * 3 == len(out1["content"])
-    assert bytes(out1["content"]) == bytes(out2["content"])  # deterministic
-    assert out1["resize_error"] is None
-
-    err = binary.resize_images(blobs, 8, 6, decode_stub=False).collect()[0]
-    assert err["content"] is None and "not available" in err["resize_error"]
-
-
-class TestArchiveManifest:
-    """archive_manifest is a REAL decode path (stdlib zip/tar/gzip):
-    member listings must be exact, corrupt inputs become error rows."""
-
-    def _write_archives(self, tmp_path):
-        import gzip
-        import tarfile
-        import zipfile
-
-        d = tmp_path / "blobs"
-        d.mkdir()
-        with zipfile.ZipFile(d / "a.zip", "w") as zf:
-            zf.writestr("docs/readme.txt", b"hello world")
-            zf.writestr("data.bin", b"\x00" * 1024)
-        with tarfile.open(d / "b.tar.gz", "w:gz") as tf:
-            import io
-            info = tarfile.TarInfo("nested/file.csv")
-            payload = b"a,b\n1,2\n"
-            info.size = len(payload)
-            tf.addfile(info, io.BytesIO(payload))
-        with gzip.open(d / "c.gz", "wb") as gz:
-            gz.write(b"plain gzip payload")
-        (d / "junk.dat").write_bytes(b"\xde\xad\xbe\xef not an archive")
-        # Truncated zip: magic present, central directory missing.
-        (d / "broken.zip").write_bytes(b"PK\x03\x04" + b"\x00" * 10)
-        return d
-
-    def test_manifest_members_and_errors(self, spark, tmp_path):
-        from insurance_helper_spark.sources import binary as B
-
-        d = self._write_archives(tmp_path)
-        out = B.archive_manifest(B.read_binary_dir(spark, str(d))).collect()
-        by_file = {}
-        for r in out:
-            by_file.setdefault(r.path.rsplit("/", 1)[-1], []).append(r)
-
-        zip_rows = {r.member: r for r in by_file["a.zip"]}
-        assert set(zip_rows) == {"docs/readme.txt", "data.bin"}
-        assert zip_rows["docs/readme.txt"].member_size == 11
-        assert zip_rows["data.bin"].member_size == 1024
-        import zlib
-        assert zip_rows["docs/readme.txt"].member_crc == zlib.crc32(b"hello world")
-
-        (tgz,) = by_file["b.tar.gz"]
-        assert tgz.archive_format == "tar.gz"
-        assert tgz.member == "nested/file.csv" and tgz.member_size == 8
-
-        (gz,) = by_file["c.gz"]
-        assert gz.archive_format == "gzip" and gz.member_size == len(b"plain gzip payload")
-
-        (junk,) = by_file["junk.dat"]
-        assert junk.error == "not an archive"
-
-        (broken,) = by_file["broken.zip"]
-        assert broken.error is not None and broken.member is None

@@ -1,18 +1,8 @@
 """The primary correctness gate, run locally: every query with an
 oracle must hash-match DuckDB at sf0.01 (same check the driver runs).
-
-Default selection (r15, VERDICT r14 item 2 — the full 406-query sweep
-had pushed the suite past the driver's verify window): every query
-touched by the optimization rounds (tests/parity_rounds) PLUS a
-deterministic rotating sample of the rest, keyed by the current round
-number so consecutive rounds sweep different subsets. Set
-SPARK_GRAFT_FULL_PARITY=1 for the full sweep (the builder runs it at
-least once per round)."""
+The default run parametrizes over every name in ``ORACLE_SQL``."""
 
 from __future__ import annotations
-
-import hashlib
-import os
 
 import pytest
 
@@ -27,31 +17,7 @@ def _all_queries():
     return catalog
 
 
-def _selected_parity_queries() -> list[str]:
-    cat = _all_queries()
-    names = sorted(cat.ORACLE_SQL.keys())
-    if os.environ.get("SPARK_GRAFT_FULL_PARITY"):
-        return names
-    from tests.parity_rounds import ROTATING_SAMPLE, TOUCHED_RECENT
-
-    selected = set(TOUCHED_RECENT) & set(names)
-    rest = [n for n in names if n not in selected]
-    try:
-        import bench
-
-        rnd = bench._current_round(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    except Exception:
-        rnd = 0
-    rest.sort(key=lambda n: hashlib.sha1(f"{rnd}:{n}".encode()).hexdigest())
-    selected |= set(rest[:ROTATING_SAMPLE])
-    return sorted(selected)
-
-
-def pytest_generate_tests(metafunc):
-    if "query_name" in metafunc.fixturenames:
-        metafunc.parametrize("query_name", _selected_parity_queries())
-
-
+@pytest.mark.parametrize("query_name", sorted(_all_queries().ORACLE_SQL))
 def test_oracle_parity(spark, query_name):
     cat = _all_queries()
     spark_df = cat.QUERIES[query_name](spark, SF_DIR_ORACLE)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from insurance_helper_spark.plans import audit
 from insurance_helper_spark.queries import catalog
+from tests import plan_helpers
 
 
 def _q(name, spark, sf_dir):
@@ -32,7 +33,7 @@ def test_repetition_gate_survives_predicate_pushdown(spark, sf_dir):
     # optimized (logical) plan: the level the inlining happens at. The
     # executed-plan STRING prints the predicate twice (Filter node +
     # the scan's DataFilters echo) without executing it twice.
-    assert audit.optimized_plan(gated).count("regexp_replace") == 1
+    assert plan_helpers.optimized_plan(gated).count("regexp_replace") == 1
 
 
 def test_flagship_broadcasts_the_dim(spark, sf_dir):
@@ -42,10 +43,10 @@ def test_flagship_broadcasts_the_dim(spark, sf_dir):
 
 def test_q1_scan_prunes_and_pushes(spark, sf_dir):
     df = _q("q1_pricing_summary", spark, sf_dir)
-    cols = audit.read_schema_columns(df)
+    cols = plan_helpers.read_schema_columns(df)
     # 7 needed lineitem columns, not all 11
     assert 0 < len(cols) <= 7, cols
-    assert "l_shipdate" in audit.pushed_filters(df)
+    assert "l_shipdate" in plan_helpers.pushed_filters(df)
 
 
 def test_shingle_path_runs_tokenizer_once(spark, sf_dir):
@@ -55,7 +56,7 @@ def test_shingle_path_runs_tokenizer_once(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = dedup.hashed_shingle_rows(docs, "doc_id", "text", k=3)
-    assert audit.count_in_plan(sh, "regexp_replace") == 1
+    assert plan_helpers.count_in_plan(sh, "regexp_replace") == 1
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
@@ -68,7 +69,7 @@ def test_whole_stage_codegen_covers_agg(spark, sf_dir):
     # map-side partial aggregation present…
     assert "partial_sum" in audit.executed_plan(df)
     # …and the executed plan runs inside whole-stage codegen stages.
-    assert audit.codegen_stage_count(df) >= 1
+    assert plan_helpers.codegen_stage_count(df) >= 1
 
 
 def test_semi_join_is_not_inner(spark, sf_dir):
@@ -109,9 +110,9 @@ def test_q7_broadcasts_all_dims(spark, sf_dir):
 
 def test_q6_filters_reach_the_scan(spark, sf_dir):
     df = _q("q6_revenue_forecast", spark, sf_dir)
-    pf = audit.pushed_filters(df)
+    pf = plan_helpers.pushed_filters(df)
     assert "l_shipdate" in pf and "l_discount" in pf and "l_quantity" in pf, pf
-    cols = audit.read_schema_columns(df)
+    cols = plan_helpers.read_schema_columns(df)
     assert 0 < len(cols) <= 4, cols
 
 
@@ -167,7 +168,7 @@ def test_bm25_tokenizes_once_under_explode(spark, sf_dir):
     # NOT NULL and copy the tokenizer chain into a Filter below the
     # Project that computes it, tokenizing every document twice
     df = _q("text_bm25_topk", spark, sf_dir)
-    assert audit.count_in_plan(df, "regexp_replace") == 1
+    assert plan_helpers.count_in_plan(df, "regexp_replace") == 1
 
 
 def test_quality_filter_is_shuffle_free(spark, sf_dir):
@@ -187,7 +188,7 @@ def test_simhash_signature_computed_once(spark, sf_dir):
     pairs = dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=8)
     plan = audit.executed_plan(pairs)
     assert "Scan ExistingRDD" in plan
-    assert audit.count_in_plan(pairs, "partial_sum") == 0
+    assert plan_helpers.count_in_plan(pairs, "partial_sum") == 0
 
 
 class TestCorpusPrepPlanShapes:
@@ -199,11 +200,11 @@ class TestCorpusPrepPlanShapes:
         # HOF re-inlining pitfall would multiply it per shingle window
         # (measured 6× slower at sf0.1).
         df = _q("corpus_contamination", spark, sf_dir)
-        assert audit.count_in_plan(df, "regexp_replace") <= 2
+        assert plan_helpers.count_in_plan(df, "regexp_replace") <= 2
 
     def test_span_dedup_tokenizer_once_and_bounded_shuffles(self, spark, sf_dir):
         df = _q("corpus_span_dedup", spark, sf_dir)
-        assert audit.count_in_plan(df, "regexp_replace") == 1
+        assert plan_helpers.count_in_plan(df, "regexp_replace") == 1
         # span window + per-doc reassembly + final sort; anything more
         # means a redundant exchange crept in.
         assert audit.exchange_count(df) <= 3
@@ -213,7 +214,7 @@ class TestCorpusPrepPlanShapes:
         # final orderBy's range partitioning.
         df = _q("text_repetition_gates", spark, sf_dir)
         assert audit.exchange_count(df) <= 1
-        assert audit.count_in_plan(df, "regexp_replace") == 1
+        assert plan_helpers.count_in_plan(df, "regexp_replace") == 1
 
     def test_pack_sequences_single_group_shuffle(self, spark, sf_dir):
         df = _q("corpus_pack_sequences", spark, sf_dir)

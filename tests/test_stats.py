@@ -23,10 +23,11 @@ def test_column_stats_is_one_job(spark, sf_dir):
     # every aggregate fused into a single aggregation over one scan:
     # exactly one Exchange in the plan (the global agg's).
     from insurance_helper_spark.plans import audit
+    from tests import plan_helpers
 
     df = stats.collect_column_stats(load_table(spark, sf_dir, "orders"))
     assert audit.exchange_count(df) <= 1
-    assert audit.count_in_plan(df, "FileScan") == 1
+    assert plan_helpers.count_in_plan(df, "FileScan") == 1
 
 
 def test_analyze_persists_and_reloads(spark, sf_dir, tmp_path):

@@ -44,132 +44,6 @@ def event_dir(tmp_path):
     return d
 
 
-def test_tumbling_with_watermark(spark, event_dir):
-    stream = ops.read_event_stream(spark, str(event_dir), EVENT_SCHEMA)
-    assert stream.isStreaming
-    agg = ops.tumbling_counts(stream, window="6 hours", watermark="1 hour")
-    ops.run_to_memory(agg, "tumbling_t", output_mode="complete")
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM tumbling_t").collect()
-    }
-    assert got[("2024-01-01 00:00:00", "view")] == (2, 3.0)
-    assert got[("2024-01-01 06:00:00", "click")] == (2, 6.0)
-
-
-def test_stream_dedup_within_watermark(spark, event_dir):
-    stream = ops.read_event_stream(spark, str(event_dir), EVENT_SCHEMA)
-    deduped = ops.stream_dedup(stream, ["event_id"], watermark="1 hour")
-    ops.run_to_memory(deduped, "dedup_t")
-    n = spark.sql("SELECT count(*) AS n FROM dedup_t").collect()[0]["n"]
-    assert n == 4  # duplicate event_id=3 dropped
-
-
-def test_session_windows_streaming(spark, event_dir):
-    stream = ops.read_event_stream(spark, str(event_dir), EVENT_SCHEMA)
-    sessions = ops.session_aggregate(stream, gap="2 hours", watermark="1 hour")
-    ops.run_to_memory(sessions, "sessions_t", output_mode="complete")
-    rows = spark.sql(
-        "SELECT user_id, n_events FROM sessions_t ORDER BY user_id, session_start"
-    ).collect()
-    # user 1: events at 00:10/00:20 (one session) + 07:00 (dup collapses
-    # into the same session row); user 2: one session
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r["n_events"])
-    assert by_user[1] == [2, 2]
-    assert by_user[2] == [1]
-
-
-def test_available_now_incremental_idempotent(spark, event_dir, tmp_path):
-    """O5 as AvailableNow: run → new data → run → run. Each run picks up
-    exactly the unprocessed files; an idle rerun appends nothing."""
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    def run():
-        stream = ops.read_event_stream(spark, str(event_dir), EVENT_SCHEMA)
-        ops.run_available_now(stream.filter(F.col("value") > 0), str(ckpt), str(out))
-        return spark.read.parquet(str(out)).count()
-
-    assert run() == 5
-    write_events_file(
-        event_dir / "batch2.json",
-        [{"event_id": 9, "ts": "2024-01-02T00:00:00", "user_id": 3, "event_type": "view", "value": 9.0}],
-    )
-    assert run() == 6
-    assert run() == 6  # idempotent rerun
-
-
-def test_user_running_state_flushes_on_timeout(spark, event_dir):
-    # Second batch advances event time far past user 1's idle timeout,
-    # so the custom stateful operator flushes user 1's accumulated
-    # summary (4 events incl. the duplicate id, value sum 9.0).
-    write_events_file(
-        event_dir / "batch2.json",
-        [{"event_id": 9, "ts": "2024-01-02T12:00:00", "user_id": 3,
-          "event_type": "view", "value": 7.0}],
-    )
-    stream = ops.read_event_stream(spark, str(event_dir), EVENT_SCHEMA,
-                                   max_files_per_trigger=1)
-    out = ops.user_running_state(stream, watermark="1 hour", idle_timeout="2 hours")
-    ops.run_to_memory(out, "user_state_sink")
-    rows = {r["user_id"]: r for r in spark.table("user_state_sink").collect()}
-    assert 1 in rows
-    assert rows[1]["n_events"] == 4
-    assert rows[1]["total_value"] == 9.0
-    assert rows[1]["first_seen"].isoformat().startswith("2024-01-01T00:10")
-    assert rows[1]["last_seen"].isoformat().startswith("2024-01-01T07:00")
-
-
-def test_late_data_dropped_by_watermark(spark, tmp_path):
-    # Four files → four microbatches (maxFilesPerTrigger=1 under
-    # AvailableNow). The watermark operating in batch N derives from
-    # batch N-1's max event time, and a window's state is EVICTED (and
-    # its append-mode row emitted) at the end of the first batch whose
-    # operating watermark passes the window end — so the [00:00,06:00)
-    # window finalizes during batch 3 (wm 07:00, from batch 2's 08:00
-    # event). The 01:00 event in batch 4 then hits evicted state and is
-    # dropped; Spark merges late events only while state is still live.
-    import os
-    import time
-
-    d = tmp_path / "late_in"
-    d.mkdir()
-    files = [
-        ("b1.json", [
-            {"event_id": 1, "ts": "2024-01-01T00:10:00", "user_id": 1, "event_type": "view", "value": 1.0},
-            {"event_id": 2, "ts": "2024-01-01T00:20:00", "user_id": 1, "event_type": "view", "value": 2.0},
-        ]),
-        ("b2.json", [
-            {"event_id": 3, "ts": "2024-01-01T08:00:00", "user_id": 1, "event_type": "view", "value": 4.0},
-        ]),
-        ("b3.json", [
-            {"event_id": 4, "ts": "2024-01-01T09:30:00", "user_id": 2, "event_type": "view", "value": 8.0},
-        ]),
-        ("b4.json", [
-            {"event_id": 5, "ts": "2024-01-01T01:00:00", "user_id": 1, "event_type": "view", "value": 100.0},
-        ]),
-    ]
-    now = time.time()
-    for i, (name, events) in enumerate(files):
-        write_events_file(d / name, events)
-        os.utime(d / name, (now + i * 10, now + i * 10))  # arrival order = batch order
-
-    stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA, max_files_per_trigger=1)
-    agg = ops.tumbling_counts(stream, window="6 hours", watermark="1 hour")
-    ops.run_to_memory(agg, "late_drop_t", output_mode="append")
-    rows = {
-        str(r["window_start"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM late_drop_t").collect()
-    }
-    # the finalized morning window holds only the two on-time events —
-    # the late 100.0-value event arrived after eviction and was dropped
-    assert rows["2024-01-01 00:00:00"] == (2, 3.0)
-    # the still-open [06:00, 12:00) window was never emitted in append mode
-    assert len(rows) == 1
-
-
 def test_stream_static_enrichment_broadcast(spark, event_dir):
     dim = spark.createDataFrame(
         [(1, "gold"), (3, "silver")], "user_id long, tier string"
@@ -334,61 +208,6 @@ class TestCorpusIngestStream:
         assert corpus.unionByName(delta).count() == 2
 
 
-class TestContinuousRollup:
-    """Streaming continuous aggregate: minute partials append as the
-    watermark finalizes them; hours derive from partials and match a
-    direct batch aggregation of the on-time events."""
-
-    def test_minute_partials_and_hourly_derivation(self, spark, tmp_path):
-        import os
-        import time as _time
-
-        d = tmp_path / "ev_in"
-        d.mkdir()
-        batches = [
-            ("b1.json", [
-                {"event_id": 1, "ts": "2024-01-01T00:00:10", "user_id": 1, "event_type": "view", "value": 1.0},
-                {"event_id": 2, "ts": "2024-01-01T00:00:40", "user_id": 1, "event_type": "view", "value": 2.0},
-                {"event_id": 3, "ts": "2024-01-01T00:01:10", "user_id": 1, "event_type": "click", "value": 4.0},
-            ]),
-            # far-future event time pushes the watermark past every
-            # batch-1 window, finalizing them
-            ("b2.json", [
-                {"event_id": 4, "ts": "2024-01-01T02:00:00", "user_id": 2, "event_type": "view", "value": 8.0},
-            ]),
-            ("b3.json", [
-                {"event_id": 5, "ts": "2024-01-01T05:00:00", "user_id": 2, "event_type": "view", "value": 16.0},
-            ]),
-        ]
-        now = _time.time()
-        for i, (name, events) in enumerate(batches):
-            write_events_file(d / name, events)
-            os.utime(d / name, (now + i * 10, now + i * 10))
-
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA, max_files_per_trigger=1)
-        ops.continuous_rollup_stream(
-            stream, str(tmp_path / "minutes"), str(tmp_path / "ckpt")
-        )
-        minutes = {
-            (str(r["bucket_min"]), r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in spark.read.parquet(str(tmp_path / "minutes")).collect()
-        }
-        # batch-1 windows finalized by the watermark advance
-        assert minutes[("2024-01-01 00:00:00", "view")] == (2, 3.0)
-        assert minutes[("2024-01-01 00:01:00", "click")] == (1, 4.0)
-        assert minutes[("2024-01-01 02:00:00", "view")] == (1, 8.0)
-
-        hourly = {
-            (str(r["bucket_hour"]), r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in ops.hourly_from_minute_partials(
-                spark, str(tmp_path / "minutes")
-            ).collect()
-        }
-        assert hourly[("2024-01-01 00:00:00", "view")] == (2, 3.0)
-        assert hourly[("2024-01-01 00:00:00", "click")] == (1, 4.0)
-        assert hourly[("2024-01-01 02:00:00", "view")] == (1, 8.0)
-
-
 class TestLeftOuterIntervalJoin:
     def test_unmatched_impression_emits_null_after_watermark(self, spark, tmp_path):
         import os
@@ -440,648 +259,6 @@ class TestLeftOuterIntervalJoin:
         # emits exactly once with a NULL click after watermark passage
         assert (10, 20) in pairs
         assert (11, None) in pairs
-
-
-class TestRunningZscore:
-    def test_state_spans_microbatches_and_flags_outlier(self, spark, tmp_path):
-        d = tmp_path / "z_in"
-        d.mkdir()
-        base = [
-            {"event_id": i, "ts": f"2024-01-01T00:{i:02d}:00", "user_id": 1,
-             "event_type": "view", "value": float(1 + (i % 2))}
-            for i in range(1, 7)  # values 2,1,2,1,2,1 — sd > 0, n=6
-        ]
-        write_events_file(d / "b1.json", base)
-        write_events_file(d / "b2.json", [
-            # Scored against batch-1 state only if state survived the
-            # microbatch boundary: mean 1.5, sd ~0.55 → z >> 3.
-            {"event_id": 7, "ts": "2024-01-01T01:00:00", "user_id": 1,
-             "event_type": "view", "value": 100.0},
-            # New user: no history → null zscore, not anomalous.
-            {"event_id": 8, "ts": "2024-01-01T01:00:00", "user_id": 2,
-             "event_type": "view", "value": 100.0},
-        ])
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA,
-                                       max_files_per_trigger=1)
-        out = ops.running_zscore_anomalies(stream, watermark="1 hour")
-        ops.run_to_memory(out, "zscore_sink")
-        rows = {r["event_id"]: r for r in spark.table("zscore_sink").collect()}
-        assert len(rows) == 8
-        # First min_history events of user 1: no score yet.
-        for i in range(1, 6):
-            assert rows[i]["zscore"] is None and rows[i]["anomaly"] is False
-        # Event 6 has 5 prior observations → scored, but in-band.
-        assert rows[6]["zscore"] is not None and rows[6]["anomaly"] is False
-        assert rows[7]["zscore"] is not None and rows[7]["zscore"] > 3.0
-        assert rows[7]["anomaly"] is True
-        assert rows[8]["zscore"] is None and rows[8]["anomaly"] is False
-
-    def test_batch_twin_agrees_on_flagged_ids(self, spark, tmp_path):
-        # The streaming operator and the batch rolling-zscore query use
-        # different history frames (all-history Welford vs trailing-20),
-        # but on a short stable series with one gross outlier both must
-        # flag exactly that event.
-        d = tmp_path / "z_twin"
-        d.mkdir()
-        evs = [
-            {"event_id": i, "ts": f"2024-01-01T00:{i:02d}:00", "user_id": 9,
-             "event_type": "view", "value": float(10 + (i % 3))}
-            for i in range(1, 11)
-        ] + [
-            {"event_id": 11, "ts": "2024-01-01T00:30:00", "user_id": 9,
-             "event_type": "view", "value": 500.0},
-        ]
-        write_events_file(d / "all.json", evs)
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA)
-        out = ops.running_zscore_anomalies(stream, watermark="1 hour")
-        ops.run_to_memory(out, "zscore_twin_sink")
-        flagged = {r["event_id"] for r in spark.table("zscore_twin_sink")
-                   .filter("anomaly").collect()}
-        assert flagged == {11}
-
-
-class TestTrendingTerms:
-    def test_burst_detection_across_batches(self, spark, tmp_path):
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in"
-        in_dir.mkdir()
-        base_text = "the quick brown fox jumps over the lazy dog " * 3
-        # Batch 1: baseline vocabulary. Batch 2: "solareclipse" bursts.
-        pd.DataFrame({
-            "doc_id": [1, 2], "text": [base_text, base_text],
-            "lang": ["en", "en"], "source": ["s", "s"],
-            "n_chars": [len(base_text)] * 2,
-        }).to_parquet(in_dir / "b1.parquet")
-        burst_text = "solareclipse " * 8 + base_text
-        pd.DataFrame({
-            "doc_id": [3], "text": [burst_text], "lang": ["en"],
-            "source": ["s"], "n_chars": [len(burst_text)],
-        }).to_parquet(in_dir / "b2.parquet")
-
-        counts_dir = str(tmp_path / "counts")
-        trending_dir = str(tmp_path / "trending")
-        ops.trending_terms_stream(
-            spark, str(in_dir), counts_dir, trending_dir,
-            str(tmp_path / "ckpt"), top_k=3,
-        )
-
-        trending = spark.read.parquet(trending_dir)
-        batches = sorted(
-            r.batch_id for r in trending.select("batch_id").distinct().collect()
-        )
-        assert len(batches) == 2
-        # In the second batch the burst term ranks first: 8 occurrences
-        # against zero history beats every baseline word (history >= 6).
-        second = {r.rank: r for r in trending.filter(
-            trending.batch_id == batches[1]).collect()}
-        assert second[1].term == "solareclipse"
-        assert second[1].hist_cnt == 0 and second[1].batch_cnt == 8
-        # Cumulative counts (sum over per-file partials) merged both batches.
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, counts_dir).collect()}
-        assert counts["solareclipse"] == 8
-        assert counts["the"] == 6 * 2 + 6  # 6 per doc x 3 docs
-
-    def test_rerun_is_idempotent(self, spark, tmp_path):
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in2"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        args = (spark, str(in_dir), str(tmp_path / "c"), str(tmp_path / "t"),
-                str(tmp_path / "k"))
-        ops.trending_terms_stream(*args)
-        ops.trending_terms_stream(*args)  # checkpoint: second drain is a no-op
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, str(tmp_path / "c")).collect()}
-        assert counts == {"alpha": 2, "beta": 1, "gamma": 1}
-
-    def test_replay_after_lost_checkpoint_is_idempotent(self, spark, tmp_path):
-        """Crash-replay safety: foreachBatch re-runs every batch when
-        the checkpoint commit is lost; the content-keyed partition
-        overwrites must keep counts and snapshots exact."""
-        import shutil
-
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in3"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        pd.DataFrame({
-            "doc_id": [2], "text": ["delta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [11],
-        }).to_parquet(in_dir / "b2.parquet")
-        ckpt = tmp_path / "k3"
-        args = (spark, str(in_dir), str(tmp_path / "c3"), str(tmp_path / "t3"),
-                str(ckpt))
-        ops.trending_terms_stream(*args)
-        # Simulate a crash that lost the commit log: the whole input
-        # replays through foreachBatch with the same batch ids.
-        shutil.rmtree(ckpt)
-        ops.trending_terms_stream(*args)
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, str(tmp_path / "c3")).collect()}
-        assert counts == {"alpha": 3, "beta": 1, "gamma": 1, "delta": 1}
-        trending = spark.read.parquet(str(tmp_path / "t3"))
-        # No duplicate snapshot rows: one rank-1 row per batch.
-        assert trending.filter("rank = 1").count() == 2
-
-    def test_lost_checkpoint_with_new_data_no_undercount(self, spark, tmp_path):
-        """The batch-id-marker failure mode: checkpoint lost, counts
-        table survives, NEW files arrive. A marker-based guard skips
-        the restarted low batch ids and permanently undercounts; the
-        content-based guard must (a) replay old files idempotently and
-        (b) fully count the new ones."""
-        import shutil
-
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in4"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        pd.DataFrame({
-            "doc_id": [2], "text": ["delta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [11],
-        }).to_parquet(in_dir / "b2.parquet")
-        ckpt = tmp_path / "k4"
-        args = (spark, str(in_dir), str(tmp_path / "c4"), str(tmp_path / "t4"),
-                str(ckpt))
-        ops.trending_terms_stream(*args)
-        # Checkpoint gone, counts table kept, and two NEW files land.
-        shutil.rmtree(ckpt)
-        pd.DataFrame({
-            "doc_id": [3], "text": ["epsilon alpha epsilon"], "lang": ["en"],
-            "source": ["s"], "n_chars": [21],
-        }).to_parquet(in_dir / "b3.parquet")
-        pd.DataFrame({
-            "doc_id": [4], "text": ["zeta"], "lang": ["en"],
-            "source": ["s"], "n_chars": [4],
-        }).to_parquet(in_dir / "b4.parquet")
-        ops.trending_terms_stream(*args)
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, str(tmp_path / "c4")).collect()}
-        # Old files counted once, new files counted fully — no skips.
-        assert counts == {"alpha": 4, "beta": 1, "gamma": 1, "delta": 1,
-                          "epsilon": 2, "zeta": 1}
-        # The new files also produced snapshots, scored against the
-        # surviving history (epsilon bursts: 2 hits vs 0 history).
-        trending = spark.read.parquet(str(tmp_path / "t4"))
-        assert trending.filter("rank = 1").count() == 4
-        eps = trending.filter("term = 'epsilon' and rank = 1").collect()
-        assert len(eps) == 1 and eps[0].hist_cnt == 0 and eps[0].batch_cnt == 2
-
-    def test_compaction_folds_partials_and_preserves_counts(self, spark, tmp_path):
-        """compact_term_partials merges per-file partitions into one,
-        the vocabulary is unchanged, and new files still merge in."""
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in5"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        pd.DataFrame({
-            "doc_id": [2], "text": ["delta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [11],
-        }).to_parquet(in_dir / "b2.parquet")
-        c = str(tmp_path / "c5")
-        args = (spark, str(in_dir), c, str(tmp_path / "t5"), str(tmp_path / "k5"))
-        ops.trending_terms_stream(*args)
-        expected = {"alpha": 3, "beta": 1, "gamma": 1, "delta": 1}
-        n = ops.compact_term_partials(spark, c)
-        assert n == 2
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == expected
-        # Exactly one live partition remains on disk.
-        keys = {r[0] for r in spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert keys == {"c0"}
-        # Idempotent rerun: nothing new to fold.
-        assert ops.compact_term_partials(spark, c) == 0
-        # New file after compaction merges into the vocabulary.
-        pd.DataFrame({
-            "doc_id": [3], "text": ["zeta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [10],
-        }).to_parquet(in_dir / "b3.parquet")
-        ops.trending_terms_stream(*args)
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == {"alpha": 4, "beta": 1, "gamma": 1, "delta": 1, "zeta": 1}
-
-    def test_replay_of_folded_file_does_not_double_count(self, spark, tmp_path):
-        """The compaction hazard: a checkpoint-loss replay of a file
-        whose partials were already folded rewrites its partition, but
-        the manifest exclusion must keep the vocabulary exact."""
-        import shutil
-
-        import pandas as pd
-
-        in_dir = tmp_path / "trend_in6"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        c = str(tmp_path / "c6")
-        ckpt = tmp_path / "k6"
-        args = (spark, str(in_dir), c, str(tmp_path / "t6"), str(ckpt))
-        ops.trending_terms_stream(*args)
-        ops.compact_term_partials(spark, c)
-        # Lose the checkpoint; add one genuinely new file; replay all.
-        shutil.rmtree(ckpt)
-        pd.DataFrame({
-            "doc_id": [2], "text": ["delta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [11],
-        }).to_parquet(in_dir / "b2.parquet")
-        ops.trending_terms_stream(*args)
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == {"alpha": 3, "beta": 1, "gamma": 1, "delta": 1}
-        # The next compaction sweeps the replayed dead partition.
-        ops.compact_term_partials(spark, c)
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == {"alpha": 3, "beta": 1, "gamma": 1, "delta": 1}
-        # Exactly one (generational) compacted partition remains.
-        keys = {r[0] for r in spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert len(keys) == 1 and keys == {"c1"}
-
-    @staticmethod
-    def _seed_two_files(spark, tmp_path, tag):
-        import pandas as pd
-
-        in_dir = tmp_path / f"trend_in_{tag}"
-        in_dir.mkdir()
-        pd.DataFrame({
-            "doc_id": [1], "text": ["alpha beta gamma alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [22],
-        }).to_parquet(in_dir / "b1.parquet")
-        pd.DataFrame({
-            "doc_id": [2], "text": ["delta alpha"], "lang": ["en"],
-            "source": ["s"], "n_chars": [11],
-        }).to_parquet(in_dir / "b2.parquet")
-        c = str(tmp_path / f"c_{tag}")
-        ops.trending_terms_stream(
-            spark, str(in_dir), c, str(tmp_path / f"t_{tag}"),
-            str(tmp_path / f"k_{tag}"),
-        )
-        return c
-
-    EXPECTED = {"alpha": 3, "beta": 1, "gamma": 1, "delta": 1}
-
-    def test_crash_before_manifest_commit_stays_exact(self, spark, tmp_path,
-                                                      monkeypatch):
-        """r7 ADVICE crash window: die AFTER the staged merge partition
-        is written but BEFORE the manifest append. The unmanifested
-        staging partition must be invisible to readers, and a re-run
-        must converge to exact counts (the pre-fix code overwrote c0 in
-        place first, making the double-count permanent)."""
-        c = self._seed_two_files(spark, tmp_path, "crash1")
-
-        def boom(*a, **k):
-            raise RuntimeError("crash before manifest commit")
-
-        monkeypatch.setattr(ops, "_append_manifest", boom)
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="before manifest"):
-            ops.compact_term_partials(spark, c)
-        # Staged c0 exists on disk but is unmanifested → excluded.
-        keys = {r[0] for r in
-                spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert "c0" in keys and len(keys) == 3
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == self.EXPECTED
-        # Recovery run (manifest append restored) converges.
-        monkeypatch.undo()
-        assert ops.compact_term_partials(spark, c) == 2
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == self.EXPECTED
-        keys = {r[0] for r in
-                spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert keys == {"c0"}
-        # And the next run is a no-op.
-        assert ops.compact_term_partials(spark, c) == 0
-
-    def test_crash_after_manifest_before_sweep_stays_exact(self, spark, tmp_path,
-                                                           monkeypatch):
-        """The other crash window: manifest committed, folded partition
-        dirs not yet deleted. Readers must count the new generation
-        exactly once; the re-run sweeps the dead dirs and folds
-        nothing."""
-        c = self._seed_two_files(spark, tmp_path, "crash2")
-
-        def boom(*a, **k):
-            raise RuntimeError("crash before sweep")
-
-        monkeypatch.setattr(ops, "_delete_partitions", boom)
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="before sweep"):
-            ops.compact_term_partials(spark, c)
-        # Folded dirs still on disk next to the committed generation…
-        keys = {r[0] for r in
-                spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert "c0" in keys and len(keys) == 3
-        # …but the manifest exclusion keeps the vocabulary exact.
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == self.EXPECTED
-        monkeypatch.undo()
-        assert ops.compact_term_partials(spark, c) == 0  # sweep only
-        counts = {r.term: r.cnt
-                  for r in ops.trending_vocabulary(spark, c).collect()}
-        assert counts == self.EXPECTED
-        keys = {r[0] for r in
-                spark.read.parquet(c).select("src_key").distinct().collect()}
-        assert keys == {"c0"}
-
-
-class TestScd2Stream:
-    def test_cdc_versions_accumulate_across_batches(self, spark, tmp_path):
-        import json as _json
-
-        upd_dir = tmp_path / "scd_in"
-        upd_dir.mkdir()
-
-        def drop(name, rows):
-            with open(upd_dir / name, "w") as f:
-                for r in rows:
-                    f.write(_json.dumps(r) + "\n")
-
-        # Batch 1 bootstraps; batch 2 changes k=1 (two updates in-batch,
-        # later one wins), no-ops k=2, inserts k=3.
-        drop("b1.json", [
-            {"k": 1, "tier": "bronze", "effective_date": "2024-01-01"},
-            {"k": 2, "tier": "silver", "effective_date": "2024-01-01"},
-        ])
-        drop("b2.json", [
-            {"k": 1, "tier": "gold", "effective_date": "2024-02-01"},
-            {"k": 1, "tier": "platinum", "effective_date": "2024-03-01"},
-            {"k": 2, "tier": "silver", "effective_date": "2024-03-01"},
-            {"k": 3, "tier": "bronze", "effective_date": "2024-03-01"},
-        ])
-        dim_dir = str(tmp_path / "dim")
-        ops.scd2_maintenance_stream(
-            spark, str(upd_dir), dim_dir, str(tmp_path / "ckpt"),
-            key="k", tracked=["tier"],
-            schema="k long, tier string, effective_date date",
-        )
-        rows = sorted(
-            spark.read.parquet(dim_dir).collect(),
-            key=lambda r: (r.k, str(r.valid_from)),
-        )
-        by_key = {}
-        for r in rows:
-            by_key.setdefault(r.k, []).append(r)
-        # k=1: bronze closed at 2024-03-01 (latest in-batch update wins),
-        # platinum current.
-        assert [(r.tier, r.is_current) for r in by_key[1]] == [
-            ("bronze", False), ("platinum", True)]
-        assert str(by_key[1][0].valid_to) == "2024-03-01"
-        # k=2: no-op update → single current version.
-        assert [(r.tier, r.is_current) for r in by_key[2]] == [("silver", True)]
-        # k=3: inserted in batch 2.
-        assert [(r.tier, r.is_current, str(r.valid_from)) for r in by_key[3]] == [
-            ("bronze", True, "2024-03-01")]
-        # Exactly one current row per key.
-        for k, rs in by_key.items():
-            assert sum(1 for r in rs if r.is_current) == 1
-
-    def test_replay_is_noop(self, spark, tmp_path):
-        """scd2_merge's no-op suppression makes batch replay (lost
-        checkpoint) idempotent: same updates against a dim that
-        already reflects them must add no versions."""
-        import json as _json
-        import shutil
-
-        upd_dir = tmp_path / "scd_in2"
-        upd_dir.mkdir()
-        with open(upd_dir / "b1.json", "w") as f:
-            for r in [
-                {"k": 1, "tier": "bronze", "effective_date": "2024-01-01"},
-                {"k": 2, "tier": "silver", "effective_date": "2024-01-01"},
-            ]:
-                f.write(_json.dumps(r) + "\n")
-        dim_dir = str(tmp_path / "dim2")
-        args = (spark, str(upd_dir), dim_dir, str(tmp_path / "ckpt2"))
-        kw = dict(key="k", tracked=["tier"],
-                  schema="k long, tier string, effective_date date")
-        ops.scd2_maintenance_stream(*args, **kw)
-        before = sorted(
-            (r.k, r.tier, r.is_current)
-            for r in spark.read.parquet(dim_dir).collect()
-        )
-        shutil.rmtree(tmp_path / "ckpt2")
-        ops.scd2_maintenance_stream(*args, **kw)
-        after = sorted(
-            (r.k, r.tier, r.is_current)
-            for r in spark.read.parquet(dim_dir).collect()
-        )
-        assert before == after == [(1, "bronze", True), (2, "silver", True)]
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-class TestTransformWithState:
-    def test_plan_construction_without_protobuf(self, spark, tmp_path):
-        """The StatefulProcessor wiring (groupBy → transformWithState
-        InPandas → output schema) must analyze without the protobuf
-        runtime — regressions in the v2 plumbing surface here even in
-        containers where the e2e test below is env-skipped."""
-        d = tmp_path / "tws_plan"
-        d.mkdir()
-        write_events_file(d / "b.json", [
-            {"event_id": 1, "ts": "2024-01-01T00:01:00", "user_id": 1,
-             "event_type": "view", "value": 5.0}])
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA)
-        out = ops.user_topk_state(stream, k=3)
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "user_id", "top_values", "n_seen"]
-        assert "TransformWithStateIn" in out._jdf.queryExecution().analyzed().toString()
-
-    def test_topk_processor_state_fold_unit(self):
-        """TopKProcessor's fold logic against a fake state handle —
-        the part of the v2 path that needs no Spark runtime at all."""
-        import pandas as pd
-
-        class FakeState:
-            def __init__(self):
-                self._v = None
-            def exists(self):
-                return self._v is not None
-            def get(self):
-                return self._v
-            def update(self, v):
-                self._v = v
-
-        class FakeHandle:
-            def __init__(self):
-                self.state = FakeState()
-            def getValueState(self, name, schema):
-                return self.state
-
-        proc = ops.TopKProcessor(k=3)
-        handle = FakeHandle()
-        proc.init(handle)
-        (out1,) = list(proc.handleInputRows(
-            (1,), [pd.DataFrame({"value": [5.0, 9.0, 1.0, 7.0]})], None))
-        assert out1["top_values"][0] == [9.0, 7.0, 5.0]
-        assert out1["n_seen"][0] == 4
-        # Second micro-batch folds on top of persisted state.
-        (out2,) = list(proc.handleInputRows(
-            (1,), [pd.DataFrame({"value": [8.0]})], None))
-        assert out2["top_values"][0] == [9.0, 8.0, 7.0]
-        assert out2["n_seen"][0] == 5
-        proc.close()
-
-    @pytest.mark.skipif(
-        not _has_protobuf(),
-        reason="transformWithState's driver worker needs protobuf "
-        "(pyspark[connect] extra); not shipped in this container",
-    )
-    def test_topk_accumulates_across_microbatches(self, spark, tmp_path):
-        # The v2 state API requires the RocksDB state store provider.
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        d = tmp_path / "twstate_in"
-        d.mkdir()
-        write_events_file(d / "b1.json", [
-            {"event_id": 1, "ts": "2024-01-01T00:01:00", "user_id": 1,
-             "event_type": "view", "value": 5.0},
-            {"event_id": 2, "ts": "2024-01-01T00:02:00", "user_id": 1,
-             "event_type": "view", "value": 9.0},
-            {"event_id": 3, "ts": "2024-01-01T00:03:00", "user_id": 2,
-             "event_type": "view", "value": 1.0},
-        ])
-        write_events_file(d / "b2.json", [
-            {"event_id": 4, "ts": "2024-01-01T01:00:00", "user_id": 1,
-             "event_type": "view", "value": 7.0},
-            {"event_id": 5, "ts": "2024-01-01T01:01:00", "user_id": 1,
-             "event_type": "view", "value": 2.0},
-        ])
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA,
-                                       max_files_per_trigger=1)
-        out = ops.user_topk_state(stream, k=3)
-        ops.run_to_memory(out, "twstate_sink")
-        rows = spark.table("twstate_sink").collect()
-        # User 1 appears once per batch; the SECOND emission must carry
-        # state from the first (9,7,5 across both batches, n_seen=4).
-        u1 = sorted(
-            [r for r in rows if r.user_id == 1], key=lambda r: r.n_seen
-        )
-        assert [list(r.top_values) for r in u1] == [[9.0, 5.0], [9.0, 7.0, 5.0]]
-        assert [r.n_seen for r in u1] == [2, 4]
-        u2 = [r for r in rows if r.user_id == 2]
-        assert len(u2) == 1 and list(u2[0].top_values) == [1.0]
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-class TestSpaceSavingTopK:
-    def _events(self, d, n_types=6, per_type=None):
-        per_type = per_type or {}
-        rows, eid = [], 0
-        for t in range(n_types):
-            for _ in range(per_type.get(f"type{t}", t + 1)):
-                rows.append(
-                    {"event_id": eid, "ts": f"2024-01-01T00:{eid % 60:02d}:00",
-                     "user_id": eid % 3, "event_type": f"type{t}", "value": 1.0}
-                )
-                eid += 1
-        write_events_file(d / "b1.json", rows)
-        return rows
-
-    def test_exact_when_capacity_sufficient(self, spark, tmp_path):
-        d = tmp_path / "ss_exact"
-        d.mkdir()
-        rows = self._events(d, n_types=4)
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA)
-        out = ops.event_type_topk_spacesaving(stream, capacity=8, shards=2)
-        ops.run_to_memory(out, "ss_exact_sink", output_mode="update")
-        got = spark.table("ss_exact_sink").collect()
-        # Merge shards: counts are additive, errs are additive.
-        merged: dict[str, list[int]] = {}
-        for r in got:
-            m = merged.setdefault(r.item, [0, 0])
-            m[0] += r.est_count
-            m[1] += r.err
-        true = {}
-        for r in rows:
-            true[r["event_type"]] = true.get(r["event_type"], 0) + 1
-        # Capacity >= distinct types per shard: sketch must be exact.
-        assert {k: v[0] for k, v in merged.items()} == true
-        assert all(v[1] == 0 for v in merged.values())
-
-    def test_overestimate_bound_when_capacity_small(self, spark, tmp_path):
-        d = tmp_path / "ss_bound"
-        d.mkdir()
-        rows = self._events(
-            d, n_types=6,
-            per_type={f"type{t}": c for t, c in enumerate([1, 2, 3, 4, 20, 30])},
-        )
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA)
-        out = ops.event_type_topk_spacesaving(stream, capacity=3, shards=1)
-        ops.run_to_memory(out, "ss_bound_sink", output_mode="update")
-        got = spark.table("ss_bound_sink").collect()
-        assert 0 < len(got) <= 3  # state never exceeds capacity
-        true = {}
-        for r in rows:
-            true[r["event_type"]] = true.get(r["event_type"], 0) + 1
-        for r in got:
-            t = true.get(r.item, 0)
-            # SpaceSaving guarantee: true <= est, and est - err <= true.
-            assert r.est_count >= t
-            assert r.est_count - r.err <= t
-        # The two genuine heavy hitters must survive in the sketch.
-        kept = {r.item for r in got}
-        assert {"type4", "type5"} <= kept
-
-    def test_state_folds_across_microbatches(self, spark, tmp_path):
-        d = tmp_path / "ss_fold"
-        d.mkdir()
-        write_events_file(d / "b1.json", [
-            {"event_id": 1, "ts": "2024-01-01T00:01:00", "user_id": 1,
-             "event_type": "alpha", "value": 1.0}])
-        write_events_file(d / "b2.json", [
-            {"event_id": 2, "ts": "2024-01-01T00:02:00", "user_id": 1,
-             "event_type": "alpha", "value": 1.0}])
-        stream = ops.read_event_stream(spark, str(d), EVENT_SCHEMA,
-                                       max_files_per_trigger=1)
-        out = ops.event_type_topk_spacesaving(stream, capacity=4, shards=1)
-        ops.run_to_memory(out, "ss_fold_sink", output_mode="update")
-        got = sorted(
-            [r for r in spark.table("ss_fold_sink").collect() if r.item == "alpha"],
-            key=lambda r: r.est_count,
-        )
-        # Second micro-batch emission must carry count folded from the
-        # first batch's persisted state.
-        assert [r.est_count for r in got] == [1, 2]
 
 
 class TestDriftGate:
