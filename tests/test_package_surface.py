@@ -126,8 +126,7 @@ def _definitions_and_roots() -> tuple[dict[str, tuple[str, ast.AST]], set[str]]:
     return defs, roots
 
 
-def unreached_definitions() -> set[str]:
-    defs, roots = _definitions_and_roots()
+def _unreached(defs: dict[str, tuple[str, ast.AST]], roots: set[str]) -> set[str]:
     reached: set[str] = set()
     seen = set(roots)
     frontier = seen
@@ -143,10 +142,10 @@ def unreached_definitions() -> set[str]:
 
 
 def test_every_package_definition_is_reached_or_allowlisted():
-    defs, _ = _definitions_and_roots()
+    defs, roots = _definitions_and_roots()
     stale = sorted(set(SURFACE_ALLOWLIST) - set(defs))
     assert not stale, f"SURFACE_ALLOWLIST names definitions that no longer exist: {stale}"
-    unreached = sorted(unreached_definitions() - set(SURFACE_ALLOWLIST))
+    unreached = sorted(_unreached(defs, roots) - set(SURFACE_ALLOWLIST))
     assert not unreached, (
         "top-level package definitions that no package module, tool, perfbench "
         f"file, bench.py or __spark_entry__.py reaches: {unreached} — delete them "
